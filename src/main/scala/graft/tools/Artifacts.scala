@@ -75,15 +75,18 @@ import org.apache.spark.sql.functions._
   * manifest — a lost update), and a recycled slot (vacuumed away
   * under a small retention window) is detected by the post-claim
   * max-version re-check (the ABA guard in [[commitAt]]). [[commit]]
-  * turns a lost race into [[CommitConflictException]]; append-shaped
-  * commands (the ingest paths) REBASE and retry via
-  * [[commitAppendsWithRetry]] — their new segments are valid against
-  * any base, so the retry re-reads the winner's manifest, re-appends,
-  * re-derives state-dependent artifacts (stats), and CAS-publishes
-  * again; STRUCTURAL commands (compact, delete, graph) RE-DERIVE
-  * from the merged state and retry bounded times via
-  * [[commitStructuralWithRetry]], so a compact under live ingest
-  * lands instead of stranding at a conflict. Segment NUMBERS are
+  * turns a lost race into [[CommitConflictException]]; mutating
+  * commands retry through ONE loop ([[commitWithRetry]]) under a
+  * per-command rebase policy. Append-shaped commands (the ingest
+  * paths) use [[commitAppendsWithRetry]] — their new segments are
+  * valid against any base, so the retry re-reads the winner's
+  * manifest, re-appends, re-derives state-dependent artifacts
+  * (stats), and CAS-publishes again; STRUCTURAL commands (compact,
+  * delete, graph) rebase onto the merged state and retry bounded
+  * times ([[commitStructuralWithRetry]],
+  * [[commitRewriteWithDeltaRetry]], [[commitReplaceWithRetry]]), so a
+  * compact under live ingest lands instead of stranding at a
+  * conflict. Segment NUMBERS are
   * claimed the same way (`.segclaim-<n>` exclusive-create in
   * [[writeSegment]]) so two writers never stage into the same
   * directory, and [[vacuum]] protects a concurrent writer's
@@ -1271,9 +1274,9 @@ object Artifacts {
     * read + a state re-derive + one conditional PUT per loser per
     * attempt — on real object stores that is request cost and
     * rate-limit budget — and keep the losers in lockstep so the same
-    * writer can starve to [[CommitConflictException]]. Each retry
-    * loop now sleeps a DETERMINISTIC jitter derived from (the loop's
-    * writer seed, the attempt number): uniform in
+    * writer can starve to [[CommitConflictException]]. The retry
+    * loop ([[commitWithRetry]]) sleeps a DETERMINISTIC jitter derived
+    * from (the loop's writer seed, the attempt number): uniform in
     * [1, base * 2^min(attempt-1, 6)] ms, capped at 2000, with base
     * `spark.graft.retryBackoffMs` (default 25; 0 disables — the
     * closed-form-test setting q313 uses). Seeded per writer so
@@ -1306,285 +1309,186 @@ object Artifacts {
   private def newWriterSeed(): Long =
     java.util.UUID.randomUUID().getLeastSignificantBits
 
-  /** Optimistic-concurrency commit for APPEND-shaped commands (the
-    * ingest paths). `deltas` are the command's already-written new
-    * segments per artifact — base-independent, so a lost CAS race is
-    * recoverable: re-read the winner's manifest, append the deltas to
-    * whatever it now holds, let `finish` re-derive state-dependent
-    * replace-style artifacts (the lexical stats frame) from that
-    * rebased working map, and CAS again. `validateRebase` runs once
-    * per observed competing commit — the command's chance to verify
-    * the winner didn't semantically conflict (overlapping doc ids
-    * ingested by both writers) before its work is merged; it throws
-    * to abort. Returns the committed version.
+  /** THE commit-retry loop: the one owner of the attempt budget, the
+    * seeded backoff, the CAS publish, the contention record, the
+    * strand's [[CommitConflictException]] and the lost-attempt
+    * reclaim. The four public `commit*WithRetry` forms are REBASE
+    * POLICIES over it: each attempt resolves the newest manifest
+    * (version, map) and `rebase` returns the FULL map to publish at
+    * version + 1 — derived from (or merged onto) that base. A lost CAS
+    * race reclaims the attempt's fresh segments ([[reclaimLost]];
+    * `reused` names the segments the policy carries into every
+    * attempt, which must survive) and retries after a jittered
+    * backoff, up to `attempts` times; a policy that throws aborts the
+    * command. Returns the committed version.
+    */
+  private def commitWithRetry(spark: SparkSession, idx: String,
+      kind: String, attempts: Int,
+      reused: Map[String, Seq[String]] = Map.empty)(
+      rebase: (Long, Map[String, Seq[String]]) => Map[String, Seq[String]])
+      : Long = {
+    val seed = newWriterSeed()
+    var slept = 0L
+    var attempt = 0
+    while (attempt < attempts) {
+      attempt += 1
+      if (attempt > 1) slept += backoff(spark, seed, attempt - 1)
+      val (ver, cur) = currentManifest(spark, idx)
+        .getOrElse((-1L, Map.empty[String, Seq[String]]))
+      val proposed = rebase(ver, cur)
+      if (commitAt(spark, idx, ver, proposed)) {
+        if (attempt > 1)
+          recordContention(spark, idx, kind, attempt - 1L, ver + 1, slept)
+        return ver + 1
+      }
+      reclaimLost(spark, idx, proposed, cur, reused)
+    }
+    recordContention(spark, idx, kind, attempts.toLong, -1L, slept)
+    throw CommitConflictException(idx, currentVersion(spark, idx) + 1,
+      s"$kind commit lost $attempts consecutive attempts (sustained " +
+        "concurrent writes?) — re-run when the write load drains")
+  }
+
+  /** Reclaim a lost attempt's FRESH segments — listed by `proposed` but
+    * referenced by neither the attempt's base map, `reused`, nor any
+    * retained manifest: this writer claimed them exclusively and they
+    * never reached a manifest, so deleting them now (instead of
+    * leaking one orphan per lost attempt to the grace-age vacuum) is
+    * safe. FAIL CLOSED on a manifest read error (a concurrent vacuum's
+    * list/open race): a proposal can list already-committed segments,
+    * so reclaiming against an INCOMPLETE reference set could delete
+    * live data — the orphans are left to the vacuum instead.
+    */
+  private def reclaimLost(spark: SparkSession, idx: String,
+      proposed: Map[String, Seq[String]], cur: Map[String, Seq[String]],
+      reused: Map[String, Seq[String]]): Unit = {
+    def listed(m: Map[String, Seq[String]], n: String, s: String) =
+      m.get(n).exists(_.contains(s))
+    val fresh = proposed.toSeq.flatMap { case (n, ss) => ss.map((n, _)) }
+      .filterNot { case (n, s) => listed(cur, n, s) || listed(reused, n, s) }
+    if (fresh.nonEmpty) scala.util.Try {
+      manifestVersions(spark, idx).flatMap(v => manifestAt(spark, idx, v)
+        .toSeq.flatMap { case (n, ss) => ss.map((n, _)) }).toSet
+    }.foreach(refs => dropSegments(spark, idx, fresh.filterNot(refs)))
+  }
+
+  /** Delete segment directories `(artifact, seg)` of `idx` and drop
+    * every [[readSegs]] memo entry that lists one of them — the memo
+    * must not outlive the directory, because a later writer can
+    * re-claim the freed segment number and the memo would then serve
+    * the dead frame.
+    */
+  private def dropSegments(spark: SparkSession, idx: String,
+      segs: Seq[(String, String)]): Unit = {
+    val f = fs(spark, idx)
+    segs.foreach { case (n, s) => f.delete(new Path(s"$idx/$n/$s"), true) }
+    val dead = segs.map { case (n, s) => (s"$idx/$n", s) }.toSet
+    if (dead.nonEmpty) dfCache.synchronized {
+      dfCache.values.forEach { m =>
+        m.synchronized {
+          m.filterInPlace { case ((root, ss), _) =>
+            !ss.exists(s => dead((root, s)))
+          }
+        }
+      }
+    }
+  }
+
+  private def structuralRetries(spark: SparkSession): Int =
+    spark.conf.get("spark.graft.structuralRetries", "5").toInt
+
+  /** Rebase policy for APPEND-shaped commands (the ingest paths).
+    * `deltas` are the command's already-written new segments per
+    * artifact — base-independent, so every attempt appends them to
+    * whatever the newest manifest holds, and `finish` re-derives
+    * state-dependent replace-style artifacts (the lexical stats frame)
+    * from that rebased working map. `validateRebase` runs once per
+    * observed competing commit (before each retry) — the command's
+    * chance to verify the winner didn't semantically conflict
+    * (overlapping doc ids ingested by both writers) before its work
+    * is merged; it throws to abort. Up to 50 attempts. Returns the
+    * committed version.
     */
   def commitAppendsWithRetry(spark: SparkSession, idx: String,
       deltas: Map[String, Seq[String]],
       finish: Map[String, Seq[String]] => Map[String, Seq[String]] = identity,
-      validateRebase: () => Unit = () => (),
-      maxAttempts: Int = 50): Long = {
-    var base = currentVersion(spark, idx)
-    var attempt = 0
-    val seed = newWriterSeed()
-    var slept = 0L
-    while (true) {
-      attempt += 1
-      if (attempt > maxAttempts) {
-        recordContention(spark, idx, "append", attempt - 1L, -1L, slept)
-        throw CommitConflictException(idx, base + 1,
-          s"gave up after $maxAttempts rebase attempts")
-      }
-      if (attempt > 1) slept += backoff(spark, seed, attempt - 1)
-      val cur = currentManifest(spark, idx).map(_._2).getOrElse(Map.empty)
-      val withDeltas = deltas.foldLeft(cur) { case (m, (n, ss)) =>
+      validateRebase: () => Unit = () => ()): Long = {
+    var retry = false
+    commitWithRetry(spark, idx, "append", 50, deltas) { (_, cur) =>
+      if (retry) validateRebase()
+      retry = true
+      finish(deltas.foldLeft(cur) { case (m, (n, ss)) =>
         m + (n -> (m.getOrElse(n, Seq.empty) ++ ss))
-      }
-      val finished = finish(withDeltas)
-      if (commitAt(spark, idx, base, finished)) {
-        if (attempt > 1)
-          recordContention(spark, idx, "append", attempt - 1L, base + 1,
-            slept)
-        return base + 1
-      }
-      // lost the race: someone committed base+1 (or later) meanwhile.
-      // The attempt's finish-created segments (the re-derived stats
-      // frame) are garbage NOW — the retry re-derives fresh ones — so
-      // reclaim them here instead of leaking one orphan per lost
-      // attempt to the grace-age vacuum. Safe: this writer claimed
-      // those segment numbers exclusively, no competitor references
-      // them, and they never reached a manifest.
-      val f0 = fs(spark, idx)
-      finished.foreach { case (n, ss) =>
-        ss.diff(withDeltas.getOrElse(n, Seq.empty)).foreach { s =>
-          f0.delete(new Path(s"$idx/$n/$s"), true)
-        }
-      }
-      val now = currentVersion(spark, idx)
-      require(now > base, s"CAS failed but version did not advance on $idx")
-      base = now
-      validateRebase()
+      })
     }
-    -1L // unreachable
   }
 
-  /** Bounded rebase-retry for STRUCTURAL commands (compact, delete,
-    * graph build — whole-state rewrites whose output depends on the
-    * base snapshot). A lost CAS race no longer strands the command at
-    * a [[CommitConflictException]] requiring a manual rerun (the
-    * round-14 surface): the command RE-DERIVES its rewrite from the
-    * new newest state via `derive` and publishes again, up to
-    * `maxAttempts` times (`spark.graft.structuralRetries`, default 5 —
-    * bounded so a structural command under SUSTAINED faster ingest
-    * eventually surfaces the starvation instead of spinning forever).
-    *
-    * `derive(base)` must return the FULL artifact map to publish,
-    * derived entirely from the state at manifest `base` (re-reading
-    * every input — the previous attempt's reads are stale). Fresh
-    * segments a lost attempt wrote are reclaimed before the retry
-    * (they were claimed exclusively and never reached a manifest).
-    * Returns the committed version.
+  /** Rebase policy for STRUCTURAL commands (delete, graph append —
+    * whole-state rewrites whose output depends on the base snapshot):
+    * every attempt RE-DERIVES via `derive(base)`, which must return
+    * the FULL artifact map to publish, derived entirely from the state
+    * at manifest `base` (re-reading every input — a lost attempt's
+    * reads are stale). Bounded by `spark.graft.structuralRetries`
+    * (default 5) so a structural command under SUSTAINED faster ingest
+    * surfaces the starvation instead of spinning forever.
     */
-  def commitStructuralWithRetry(spark: SparkSession, idx: String,
-      maxAttempts: Int = 0)(derive: Long => Map[String, Seq[String]]): Long = {
-    val attempts =
-      if (maxAttempts > 0) maxAttempts
-      else spark.conf.get("spark.graft.structuralRetries", "5").toInt
-    var attempt = 0
-    var lastMap = Map.empty[String, Seq[String]]
-    // reclaim a PREVIOUS lost attempt's fresh segments: anything it
-    // wrote that neither the retained manifests nor `keep` reference.
-    // FAIL CLOSED on any manifest read error (a concurrent vacuum's
-    // list/open race): derive's map can include already-committed
-    // segments (callers pass [[merged]] output), so reclaiming
-    // against an INCOMPLETE reference set could delete live data —
-    // skip the eager reclaim and leave the orphans to the grace-age
-    // vacuum instead.
-    def reclaimLost(prev: Map[String, Seq[String]],
-        keep: Map[String, Seq[String]]): Unit =
-      if (prev.nonEmpty) {
-        val f0 = fs(spark, idx)
-        val retained = scala.util.Try {
-          manifestVersions(spark, idx)
-            .flatMap(v => manifestAt(spark, idx, v).toSeq
-              .flatMap { case (n, ss) => ss.map((n, _)) })
-            .toSet
-        }.toOption
-        retained.foreach { refs =>
-          prev.foreach { case (n, ss) =>
-            ss.filterNot(s => refs((n, s)) ||
-              keep.getOrElse(n, Seq.empty).contains(s)).foreach { s =>
-              f0.delete(new Path(s"$idx/$n/$s"), true)
-            }
-          }
-        }
-      }
-    val seed = newWriterSeed()
-    var slept = 0L
-    while (attempt < attempts) {
-      attempt += 1
-      if (attempt > 1) slept += backoff(spark, seed, attempt - 1)
-      val base = currentVersion(spark, idx)
-      val prev = lastMap
-      val next =
-        try derive(base)
-        catch {
-          case e: Throwable =>
-            // a derive that ABORTS a retry (the graph append's
-            // empty-wave sentinel, or any failure) must not leak the
-            // previous lost attempt's segments to the grace-age
-            // vacuum — they were exclusively claimed by this command
-            // and never reached a manifest
-            reclaimLost(prev, Map.empty)
-            throw e
-        }
-      lastMap = next
-      reclaimLost(prev, next)
-      if (commitAt(spark, idx, base, next)) {
-        if (attempt > 1)
-          recordContention(spark, idx, "structural", attempt - 1L,
-            base + 1, slept)
-        return base + 1
-      }
+  def commitStructuralWithRetry(spark: SparkSession, idx: String)(
+      derive: Long => Map[String, Seq[String]]): Long =
+    commitWithRetry(spark, idx, "structural", structuralRetries(spark)) {
+      (ver, _) => derive(ver)
     }
-    recordContention(spark, idx, "structural", attempts.toLong, -1L, slept)
-    throw CommitConflictException(idx, currentVersion(spark, idx) + 1,
-      s"structural command lost $attempts consecutive rebase attempts " +
-        "(sustained concurrent ingest?) — re-run when the write load drains")
-  }
 
-  /** Commit a COMPACT-shaped rewrite with DELTA-REBASE retries — the
-    * scale-correct retry for the one structural command whose
-    * re-derivation is corpus-sized. The command derives `pend` (its
-    * consolidated/folded segment lists) ONCE, reading exactly
-    * `baseMap`'s segments; on a lost CAS race the retry does NOT
-    * re-derive: for each rewritten artifact it keeps the consolidated
-    * segments and APPENDS whatever segments competitors added since
-    * the base (`cur diff base` — ingest waves, delete tombstones,
-    * radii appends are all append-shaped, so they remain valid
-    * unconsolidated next to the fold; the serve paths already handle
-    * mixed consolidated + appended segments, and the next compact
-    * folds them). Replace-style state (the lexical stats frame)
-    * re-derives per attempt via `finish` — metadata-sized. A
-    * competitor that REMOVED one of the base segments is another
-    * structural rewrite racing us — that cannot be delta-merged
-    * (both rewrites consolidate overlapping rows), so it surfaces as
-    * [[CommitConflictException]] and a re-run starts from the
-    * settled state. Net: ONE corpus-sized rewrite regardless of how
-    * many append races are lost; retries cost only the stats
-    * re-derive and a manifest flip.
+  /** Rebase policy for a COMPACT-shaped rewrite — the one structural
+    * command whose re-derivation is corpus-sized. The command derives
+    * `pend` (its consolidated/folded segment lists) ONCE, reading
+    * exactly `baseMap`'s segments; every attempt keeps the
+    * consolidated segments and APPENDS whatever segments competitors
+    * added since the base (`cur diff base` — ingest waves, delete
+    * tombstones and radii appends stay valid unconsolidated next to
+    * the fold, and the next compact folds them). Replace-style state
+    * (the lexical stats frame) re-derives per attempt via `finish` —
+    * metadata-sized. A competitor that REMOVED one of the base
+    * segments is another structural rewrite racing us — that cannot
+    * be delta-merged, so it surfaces as [[CommitConflictException]]
+    * and a re-run starts from the settled state. Net: ONE
+    * corpus-sized rewrite regardless of how many append races are
+    * lost. Bounded like [[commitStructuralWithRetry]].
     */
   def commitRewriteWithDeltaRetry(spark: SparkSession, idx: String,
       baseMap: Map[String, Seq[String]], pend: Map[String, Seq[String]],
-      finish: Map[String, Seq[String]] => Map[String, Seq[String]] = identity,
-      maxAttempts: Int = 0): Long = {
-    val attempts =
-      if (maxAttempts > 0) maxAttempts
-      else spark.conf.get("spark.graft.structuralRetries", "5").toInt
-    val f0 = fs(spark, idx)
-    var attempt = 0
-    val seed = newWriterSeed()
-    var slept = 0L
-    while (true) {
-      attempt += 1
-      if (attempt > attempts) {
-        recordContention(spark, idx, "rewrite", attempts.toLong, -1L, slept)
-        throw CommitConflictException(idx, currentVersion(spark, idx) + 1,
-          s"compact lost $attempts consecutive delta-rebase attempts " +
-            "(sustained concurrent writes?) — re-run when the load drains")
-      }
-      if (attempt > 1) slept += backoff(spark, seed, attempt - 1)
-      val (ver, cur) = currentManifest(spark, idx)
-        .getOrElse((-1L, Map.empty[String, Seq[String]]))
-      val merged = cur ++ pend.map { case (n, ss) =>
-        val baseSegs = baseMap.getOrElse(n, Seq.empty)
-        val curSegs = cur.getOrElse(n, Seq.empty)
-        if (!baseSegs.forall(curSegs.contains))
-          throw CommitConflictException(idx, ver + 1,
-            s"a competing structural rewrite of '$n' landed during this " +
-              "compact (base segments vanished) — re-run on the settled state")
-        n -> (ss ++ curSegs.diff(baseSegs))
-      }
-      val finished = finish(merged)
-      if (commitAt(spark, idx, ver, finished)) {
-        if (attempt > 1)
-          recordContention(spark, idx, "rewrite", attempt - 1L, ver + 1,
-            slept)
-        return ver + 1
-      }
-      // lost: reclaim this attempt's finish-created segments (the
-      // consolidated `pend` segments are NOT touched — they are the
-      // next attempt's whole point)
-      finished.foreach { case (n, ss) =>
-        ss.diff(merged.getOrElse(n, Seq.empty)).foreach { s =>
-          f0.delete(new Path(s"$idx/$n/$s"), true)
-        }
-      }
+      finish: Map[String, Seq[String]] => Map[String, Seq[String]] = identity)
+      : Long =
+    commitWithRetry(spark, idx, "rewrite", structuralRetries(spark), pend) {
+      (ver, cur) =>
+        finish(cur ++ pend.map { case (n, ss) =>
+          val baseSegs = baseMap.getOrElse(n, Seq.empty)
+          val curSegs = cur.getOrElse(n, Seq.empty)
+          if (!baseSegs.forall(curSegs.contains))
+            throw CommitConflictException(idx, ver + 1,
+              s"a competing structural rewrite of '$n' landed during this " +
+                "compact (base segments vanished) — re-run on the settled state")
+          n -> (ss ++ curSegs.diff(baseSegs))
+        })
     }
-    -1L // unreachable
-  }
 
-  /** Commit a REPLACE-shaped rewrite with metadata-only retries — the
-    * scale-correct retry for structural commands whose pending map is
-    * BASE-INDEPENDENT (derived from external inputs + flags only, not
-    * from index state): the full `graph` build's kNN edges, a model
-    * retrain's codebooks. The caller derives `pend` ONCE; each
-    * attempt re-reads the newest manifest and publishes
-    * `current ++ pend` — competitors' commits to OTHER artifacts
-    * (ingest waves' membership appends) carry over untouched, while
-    * the pend artifacts replace wholesale (exactly what a re-derive
-    * from the same inputs would publish, minus re-running the
-    * derivation). A lost CAS race therefore costs one manifest read +
-    * one flip — never the corpus-sized computation (the round-15
-    * verdict's scale-killer: `Similarity.knnGraph` re-ran inside the
-    * structural retry loop on every lost race despite ignoring its
-    * base entirely).
-    *
-    * `finish` re-derives per-attempt replace-style METADATA from the
-    * merged map when a command has any (identity otherwise); its
-    * fresh segments are reclaimed on a lost attempt. Returns the
-    * committed version; surfaces [[CommitConflictException]] after
-    * bounded attempts like the other structural loops.
+  /** Rebase policy for a REPLACE-shaped rewrite whose pending map is
+    * BASE-INDEPENDENT (derived from external inputs + flags only: the
+    * full `graph` build's kNN edges, a model retrain's codebooks). The
+    * caller derives `pend` ONCE; every attempt publishes
+    * `current ++ pend` — competitors' commits to OTHER artifacts carry
+    * over untouched while the pend artifacts replace wholesale, so a
+    * lost race costs one manifest read + one flip, never the
+    * corpus-sized derivation. `finish` re-derives per-attempt
+    * replace-style METADATA from the merged map when a command has
+    * any. Bounded like [[commitStructuralWithRetry]].
     */
   def commitReplaceWithRetry(spark: SparkSession, idx: String,
       pend: Map[String, Seq[String]],
-      finish: Map[String, Seq[String]] => Map[String, Seq[String]] = identity,
-      maxAttempts: Int = 0): Long = {
-    val attempts =
-      if (maxAttempts > 0) maxAttempts
-      else spark.conf.get("spark.graft.structuralRetries", "5").toInt
-    val f0 = fs(spark, idx)
-    var attempt = 0
-    val seed = newWriterSeed()
-    var slept = 0L
-    while (true) {
-      attempt += 1
-      if (attempt > attempts) {
-        recordContention(spark, idx, "replace", attempts.toLong, -1L, slept)
-        throw CommitConflictException(idx, currentVersion(spark, idx) + 1,
-          s"replace-style command lost $attempts consecutive metadata " +
-            "rebase attempts (sustained concurrent writes?) — re-run " +
-            "when the load drains")
-      }
-      if (attempt > 1) slept += backoff(spark, seed, attempt - 1)
-      val (ver, cur) = currentManifest(spark, idx)
-        .getOrElse((-1L, Map.empty[String, Seq[String]]))
-      val merged = cur ++ pend
-      val finished = finish(merged)
-      if (commitAt(spark, idx, ver, finished)) {
-        if (attempt > 1)
-          recordContention(spark, idx, "replace", attempt - 1L, ver + 1,
-            slept)
-        return ver + 1
-      }
-      // lost: reclaim only finish-created segments; `pend` is reused
-      finished.foreach { case (n, ss) =>
-        ss.diff(merged.getOrElse(n, Seq.empty)).foreach { s =>
-          f0.delete(new Path(s"$idx/$n/$s"), true)
-        }
-      }
+      finish: Map[String, Seq[String]] => Map[String, Seq[String]] = identity)
+      : Long =
+    commitWithRetry(spark, idx, "replace", structuralRetries(spark), pend) {
+      (_, cur) => finish(cur ++ pend)
     }
-    -1L // unreachable
-  }
 
   /** CONTENTION TELEMETRY (round 16; round 17 adds the wasted-work
     * column): every commit-retry loop that loses at least one CAS
@@ -1854,6 +1758,7 @@ object Artifacts {
     val artifactDirs = f.listStatus(new Path(idx))
       .filter(s => s.isDirectory && s.getPath.getName != "_manifest")
       .map(_.getPath)
+    val doomed = Seq.newBuilder[(String, String)]
     artifactDirs.foreach { ad =>
       val entries = f.listStatus(ad).map(_.getPath)
       // writer-declared creation stamps (round 17): `.segclaim-<n>`
@@ -1901,11 +1806,12 @@ object Artifacts {
             // past the grace age (could be a live writer's pending
             // work), aged by the writer stamp when one exists
             if (graveyard(key) || agedByWriter(seg, segNoOf(nm)))
-              f.delete(seg, true)
+              doomed += key
           }
         }
       }
     }
+    dropSegments(spark, idx, doomed.result())
   }
 
   /** One row per RETAINED manifest version (ascending): the version

@@ -464,13 +464,16 @@ class ArtifactsSpec extends AnyFunSuite {
 
     // sustained contention: every attempt loses -> bounded conflict
     var n2 = 0
-    intercept[Artifacts.CommitConflictException] {
-      Artifacts.commitStructuralWithRetry(spark, idx, maxAttempts = 3) { _ =>
-        n2 += 1
-        Artifacts.commit(spark, idx, Artifacts.merged(spark, idx, Map.empty))
-        Map("rows" -> Seq(kept))
+    try {
+      spark.conf.set("spark.graft.structuralRetries", "3")
+      intercept[Artifacts.CommitConflictException] {
+        Artifacts.commitStructuralWithRetry(spark, idx) { _ =>
+          n2 += 1
+          Artifacts.commit(spark, idx, Artifacts.merged(spark, idx, Map.empty))
+          Map("rows" -> Seq(kept))
+        }
       }
-    }
+    } finally spark.conf.unset("spark.graft.structuralRetries")
     assert(n2 == 3, s"retry was not bounded: $n2 attempts")
   }
 
@@ -1190,26 +1193,87 @@ class ArtifactsSpec extends AnyFunSuite {
     "records (command, lost_attempts, landed_version); a clean index " +
     "reports no events") {
     import spark.implicits._
-    val idx = freshIdx()
-    val seg0 = Artifacts.writeSegment(spark, idx, "rows",
-      Seq((1L, "base")).toDF("id", "v"))
-    Artifacts.commit(spark, idx, Map("rows" -> Seq(seg0)))          // v0
-    assert(Artifacts.contentionReport(spark, idx).count() == 0L)
-    var attempts = 0
-    Artifacts.commitStructuralWithRetry(spark, idx) { _ =>
-      attempts += 1
-      if (attempts == 1) // failpoint: a competitor commits v1
-        Artifacts.commit(spark, idx, Artifacts.merged(spark, idx, Map.empty))
-      Map("rows" -> Seq(seg0))
+    def events(idx: String): Set[(String, Long, Long)] =
+      Artifacts.contentionReport(spark, idx).collect()
+        .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
+    // every rebase policy keeps its own contention kind: (a) a commit
+    // that lands after one lost race, (b) a strand once the budget
+    // (50 for appends, structuralRetries for the rest) runs out
+    try {
+      spark.conf.set("spark.graft.retryBackoffMs", "0")
+      spark.conf.set("spark.graft.structuralRetries", "3")
+      for ((kind, budget) <- Seq("append" -> 50L, "structural" -> 3L,
+        "rewrite" -> 3L, "replace" -> 3L)) {
+        val idx = freshIdx()
+        val seg0 = Artifacts.writeSegment(spark, idx, "rows",
+          Seq((1L, "base")).toDF("id", "v"))
+        Artifacts.commit(spark, idx, Map("rows" -> Seq(seg0)))      // v0
+        assert(Artifacts.contentionReport(spark, idx).count() == 0L)
+        // the policy callback doubles as the failpoint: while races
+        // remain, a competitor commits inside the attempt and its CAS
+        // loses
+        var races = 0L
+        def raced(m: Map[String, Seq[String]]) = {
+          if (races > 0) {
+            races -= 1
+            Artifacts.commit(spark, idx, Artifacts.merged(spark, idx, Map.empty))
+          }
+          m
+        }
+        def run(): Long = kind match {
+          case "append" =>
+            Artifacts.commitAppendsWithRetry(spark, idx, Map.empty, raced)
+          case "structural" =>
+            Artifacts.commitStructuralWithRetry(spark, idx)(_ =>
+              raced(Map("rows" -> Seq(seg0))))
+          case "rewrite" =>
+            Artifacts.commitRewriteWithDeltaRetry(spark, idx, Map.empty,
+              Map.empty, raced)
+          case "replace" =>
+            Artifacts.commitReplaceWithRetry(spark, idx, Map.empty, raced)
+        }
+        races = 1 // loses v1 to the competitor, lands v2
+        assert(run() == 2L, kind)
+        assert(events(idx) == Set((kind, 1L, 2L)), s"$kind: ${events(idx)}")
+        races = Long.MaxValue // every attempt loses
+        intercept[Artifacts.CommitConflictException](run())
+        assert(events(idx) == Set((kind, 1L, 2L), (kind, budget, -1L)),
+          s"$kind: ${events(idx)}")
+        // telemetry survives a vacuum (bounded, not purged)
+        Artifacts.vacuum(spark, idx)
+        assert(Artifacts.contentionReport(spark, idx).count() == 2L)
+      }
+    } finally {
+      spark.conf.unset("spark.graft.retryBackoffMs")
+      spark.conf.unset("spark.graft.structuralRetries")
     }
-    val ev = Artifacts.contentionReport(spark, idx).collect()
-    assert(ev.length == 1)
-    assert(ev(0).getString(0) == "structural" &&
-      ev(0).getLong(1) == 1L && ev(0).getLong(2) == 2L,
-      s"unexpected event: ${ev(0)}")
-    // telemetry survives a vacuum (bounded, not purged)
-    Artifacts.vacuum(spark, idx)
-    assert(Artifacts.contentionReport(spark, idx).count() == 1L)
+  }
+
+  test("readSegs memo never outlives a deleted segment: a vacuumed " +
+    "segment number re-claimed by a later write reads the NEW rows") {
+    import spark.implicits._
+    val idx = freshIdx()
+    try {
+      spark.conf.set("spark.graft.keepManifests", "1")
+      val seg = Artifacts.writeSegment(spark, idx, "rows",
+        Seq((1L, "old")).toDF("id", "v"))
+      Artifacts.commit(spark, idx, Map("rows" -> Seq(seg)))         // v0
+      Artifacts.vacuum(spark, idx) // committed: the claim sidecar retires
+      assert(Artifacts.read(spark, idx, "rows").count() == 1L)      // memoized
+      val segX = Artifacts.writeSegment(spark, idx, "other",
+        Seq((0L, "x")).toDF("id", "v"))
+      Artifacts.commit(spark, idx, Map("other" -> Seq(segX)))       // v1
+      Artifacts.vacuum(spark, idx) // seg leaves retention: dir deleted
+      assert(!new java.io.File(s"$idx/rows/$seg").exists())
+      val again = Artifacts.writeSegment(spark, idx, "rows",
+        Seq((2L, "new"), (3L, "new")).toDF("id", "v"))
+      assert(again == seg, s"segment number not re-claimed: $again vs $seg")
+      Artifacts.commit(spark, idx,
+        Map("other" -> Seq(segX), "rows" -> Seq(again)))            // v2
+      assert(Artifacts.read(spark, idx, "rows").select(col("id"))
+        .collect().map(_.getLong(0)).toSet == Set(2L, 3L),
+        "the memo served the vacuumed segment's dead frame")
+    } finally spark.conf.unset("spark.graft.keepManifests")
   }
 
   test("retry backoff (round 17): the jitter schedule is deterministic " +
@@ -1245,10 +1309,12 @@ class ArtifactsSpec extends AnyFunSuite {
       val segs = (0 until 12).map(i =>
         Artifacts.writeSegment(spark, idx, "rows",
           Seq((100L + i, s"s$i")).toDF("id", "v")))
-      var sleeps = 0L
+      // bumped from four pool threads: a plain captured var loses
+      // increments under contention
+      val sleeps = new java.util.concurrent.atomic.AtomicLong()
       val prevSleeper = Artifacts.backoffSleeper
       Artifacts.backoffSleeper = ms => {
-        sleeps += 1; Thread.sleep(ms)
+        sleeps.incrementAndGet(); Thread.sleep(ms)
       }
       import java.util.concurrent.{CountDownLatch, Executors}
       val pool = Executors.newFixedThreadPool(4)
@@ -1276,7 +1342,7 @@ class ArtifactsSpec extends AnyFunSuite {
         "not all 12 storm commits landed")
       val lost = Artifacts.contentionReport(spark, idx)
         .agg(sum(col("lost_attempts"))).head().getLong(0)
-      (lost, sleeps)
+      (lost, sleeps.get)
     }
     // real races: compare best-of-2 per arm so one unlucky scheduling
     // window cannot flip the differential
