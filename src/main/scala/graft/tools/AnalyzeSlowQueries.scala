@@ -2,7 +2,8 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 
 import graft.GraftSession
 import graft.analyze.{Analyzer, SlowQueryPipeline}
@@ -70,18 +71,41 @@ object AnalyzeSlowQueries {
       patterns = patterns,
       tags = tags)
 
-    val events = flags.get("processed") match {
-      case Some(dir) => Reporter.readMaterialized(spark, dir).cache()
+    val (events, eventCount) = flags.get("processed") match {
+      case Some(dir) =>
+        // filled by one serial job: an Observation on a cache the five
+        // concurrent report sinks fill could read before every task
+        // that computed a shared block had reported its count
+        val ev = Reporter.readMaterialized(spark, dir).cache()
+        (ev, ev.count())
       case None =>
-        val parsed = SlowQueryPipeline
-          .parseEvents(KibanaReader.hits(spark, files), config).cache()
-        Reporter.materialize(parsed, s"$outDir/processed")
-        parsed
+        val (parsed, skips) = SlowQueryPipeline
+          .parseEventsObserved(KibanaReader.hits(spark, files), config)
+        val rows = new Observation("graft_events")
+        val ev = parsed.observe(rows, count(lit(1)).as("events")).cache()
+        Reporter.materialize(ev, s"$outDir/processed")
+        val n = rows.get("events").asInstanceOf[Long]
+        println(skipSummary(skips.get.map { case (k, v) => k -> v.asInstanceOf[Long] }, n))
+        (ev, n)
     }
     val reports = Analyzer.analyze(events, config)
     Reporter.report(reports, outDir)
-    println(s"[graft] wrote reports to $outDir (events=${events.count()})")
+    println(s"[graft] wrote reports to $outDir (events=$eventCount)")
     events.unpersist()
+  }
+
+  /** The reference's skip classes (analyze_slow_queries.py:225-261) as
+    * one line: every hit is one skip class or one event, so
+    * `no_processor` is what the observed classes and the events leave.
+    */
+  private def skipSummary(observed: Map[String, Long], events: Long): String = {
+    val classes = Seq("not_slow_query", "bad_timestamp", "bad_duration")
+    val hits = observed("hits")
+    val noProcessor = hits - classes.map(observed).sum - events
+    (Seq("hits" -> hits) ++ classes.map(c => c -> observed(c)) ++
+      Seq("no_processor" -> noProcessor, "events" -> events))
+      .map { case (k, v) => s"$k=$v" }
+      .mkString("[graft] parsed ", " ", "")
   }
 
   private def parseArgs(args: List[String]): (Map[String, String], Seq[String]) = {

@@ -1,13 +1,18 @@
 package graft.report
 
 import java.nio.file.{Files, Path}
+import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.{lit, raise_error}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftSession
 import graft.analyze.{Analyzer, SlowQueryPipeline}
+import graft.analyze.Analyzer.Reports
 import graft.catalog.CqlCatalog
 import graft.ingest.KibanaReader
 import graft.model.AnalysisConfig
@@ -75,5 +80,53 @@ class ReporterSpec extends AnyFunSuite {
         |2026-08-12 15:46,1,300,300,"",BEGIN BATCH APPLY
         |2026-08-12 15:46,1,40,40,u2,SELECT * FROM ks1.users WHERE user_id=?;
         |""".stripMargin)
+  }
+
+  /** Two events of one minute, every report non-empty at minCount 1. */
+  private def smallReports(): Reports = {
+    val page = Files.createTempFile("kibana", ".json")
+    Files.writeString(page,
+      """{"responses":[{"hits":{"total":2,"hits":[
+        |{"_source":{"@timestamp":"2026-08-12T15:45:01.000000Z","message":"W Query too slow, took 100 ms: [1 bound values] SELECT * FROM ks1.users WHERE user_id=?; [user_id:'u1']"}},
+        |{"_source":{"@timestamp":"2026-08-12T15:45:02.000000Z","message":"W Query too slow, took 300 ms: [1 bound values] SELECT * FROM ks1.users WHERE user_id=?; [user_id:'u2']"}}
+        |]}}]}""".stripMargin.replace("\n", ""))
+    val config = AnalysisConfig(minCount = 1)
+    Analyzer.analyze(SlowQueryPipeline.parseEvents(
+      KibanaReader.hits(spark, Seq(page.toString)), config), config)
+  }
+
+  test("a failing sink surfaces its cause after every other sink has finished") {
+    val good = smallReports()
+    val reports = good.copy(volume = good.volume.withColumn("avg_duration",
+      raise_error(lit("sink-boom")).cast("long")))
+    val out = Files.createTempDirectory("reports")
+    val err = intercept[Exception](Reporter.report(reports, out.toString))
+    assert(err.getMessage.contains("sink-boom"), err.getMessage)
+    for (name <- Seq("slow_queries", "slow_primary_keys", "primary_keys", "volume_top_n"))
+      assert(Files.exists(out.resolve(name).resolve("_SUCCESS")), name)
+    ListenerBusDrain(spark.sparkContext)
+    assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+  }
+
+  test("sink jobs keep the caller's job group") {
+    val reports = smallReports()
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(Option(e.properties)
+          .map(_.getProperty("spark.jobGroup.id")).orNull))
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup("reporter-spec", "report sinks", interruptOnCancel = false)
+    try Reporter.report(reports, Files.createTempDirectory("reports").toString)
+    finally {
+      sc.clearJobGroup()
+      ListenerBusDrain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(groups.size >= 5, groups)
+    assert(groups.asScala.forall(_ == "reporter-spec"), groups)
   }
 }

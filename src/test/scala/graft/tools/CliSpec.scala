@@ -1,10 +1,15 @@
 package graft.tools
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftSession
+import graft.analyze.SlowQueryPipeline
+import graft.catalog.CqlCatalog
+import graft.ingest.KibanaReader
+import graft.model.{AnalysisConfig, QueryPattern}
+import graft.report.Reporter
 
 /** End-to-end CLI chain (arg parsing -> config files -> parse ->
   * five reports) on fixtures — the one reference workflow round-1
@@ -31,9 +36,8 @@ class CliSpec extends AnyFunSuite {
       new String(Files.readAllBytes(f.toPath), "UTF-8").linesIterator)
   }
 
-  test("fixture pages through the full CLI chain produce the five reports") {
-    val fx = Files.createTempDirectory("graft-cli")
-    val out = fx.resolve("out")
+  /** The fixture page and its --schema/--queries/--tags files. */
+  private def fixture(fx: Path): (String, String, String, String) = {
     val page = write(fx, "page1.json",
       """{"responses":[{"hits":{"total":3,"hits":[
         | {"_source":{"@timestamp":"2026-08-12T15:45:01.123456Z",
@@ -63,6 +67,13 @@ class CliSpec extends AnyFunSuite {
     val queries = write(fx, "queries.json",
       """[{"start":"SELECT name FROM users","parameters":["user_id"]}]""")
     val tags = write(fx, "tags.json", """{"appA":"ks3"}""")
+    (page, schema, queries, tags)
+  }
+
+  test("fixture pages through the full CLI chain produce the five reports") {
+    val fx = Files.createTempDirectory("graft-cli")
+    val out = fx.resolve("out")
+    val (page, schema, queries, tags) = fixture(fx)
 
     AnalyzeSlowQueries.run(Array(out.toString, page,
       "--schema", schema, "--queries", queries, "--tags", tags,
@@ -103,5 +114,52 @@ class CliSpec extends AnyFunSuite {
       "Count,Duration,Avg. Duration,Query",
       "2,3000,1500,SELECT * FROM ks1.users WHERE user_id=?;",
       "1,1000,1000,SELECT name FROM users WHERE user_id = ? LIMIT 5;"))
+  }
+
+  test("the printed skip summary equals dataQuality and the materialized events") {
+    val fx = Files.createTempDirectory("graft-cli")
+    val out = fx.resolve("out")
+    val (page, schema, queries, tags) = fixture(fx)
+    val slow = "WARN Query too slow, took %s ms: %s"
+    val users = "[1 bound values] SELECT * FROM ks1.users WHERE user_id=?; [user_id:'u1']"
+    val skips = write(fx, "skips.json",
+      Seq(
+        "2026-08-12T15:47:01.000000Z" -> "WARN Query too slow, and it took a while",
+        "2026-08-12 15:47:02.000000Z" -> slow.format("700", users),
+        "2026-08-12T15:47:03.000000Z" -> slow.format("n/a", users),
+        "2026-08-12T15:47:04.000000Z" -> slow.format("800", "TRUNCATE ks1.users;"),
+        "2026-08-12T15:47:05.000000Z" -> slow.format("900", users))
+        .map { case (ts, msg) => s"""{"_source":{"@timestamp":"$ts","message":"$msg"}}""" }
+        .mkString("""{"responses":[{"hits":{"total":5,"hits":[""", ",", "]}}]}"))
+
+    val printed = new java.io.ByteArrayOutputStream()
+    Console.withOut(printed) {
+      AnalyzeSlowQueries.run(Array(out.toString, page, skips,
+        "--schema", schema, "--queries", queries, "--tags", tags), spark)
+    }
+    val line = printed.toString("UTF-8").linesIterator
+      .find(_.startsWith("[graft] parsed ")).getOrElse(fail(printed.toString("UTF-8")))
+    val summary = line.stripPrefix("[graft] parsed ").split(" ").map { kv =>
+      val Array(k, v) = kv.split("=")
+      k -> v.toLong
+    }.toMap
+
+    val config = AnalysisConfig(
+      schema = CqlCatalog.parse(Files.readString(Paths.get(schema))),
+      patterns = Seq(QueryPattern("SELECT name FROM users", Seq("user_id"))),
+      tags = Map("appA" -> "ks3"))
+    val quality = SlowQueryPipeline.dataQuality(KibanaReader.hits(spark, Seq(page, skips)), config)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    val events = Reporter.readMaterialized(spark, out.resolve("processed").toString).count()
+    assert(events == 4)
+    assert(summary == Map(
+      "hits" -> quality.values.sum,
+      "not_slow_query" -> quality.getOrElse("not_slow_query", 0L),
+      "bad_timestamp" -> quality.getOrElse("bad_timestamp", 0L),
+      "bad_duration" -> quality.getOrElse("bad_duration", 0L),
+      "no_processor" -> quality.getOrElse("no_processor", 0L),
+      "events" -> events))
+    assert(Seq("not_slow_query", "bad_timestamp", "bad_duration", "no_processor")
+      .forall(quality.get(_).contains(1L)), quality)
   }
 }
