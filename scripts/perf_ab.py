@@ -3,13 +3,13 @@
 
 Usage:
     python3 scripts/perf_ab.py --workload analyze_raw [--parent HEAD]
-        [--pairs 10] [--seeds 1,2,...] [--seconds 8]
+        [--pairs 10] [--seeds 1,2,...] [--seconds 8] [--traced-seed N]
 
-The parent is checked out into a throwaway `git worktree` under a temp
-directory (removed on exit), so each side builds its own classes from
-its own sources: a copied `target/` would carry the other checkout's
-incremental-compile state, and a rebuild in one checkout would then
-delete the other's classes.
+The parent's committed files are exported with `git archive` into a
+throwaway directory under a temp directory (removed on exit), so each
+side builds its own classes from its own sources: a copied `target/`
+would carry the other checkout's incremental-compile state, and a
+rebuild in one checkout would then delete the other's classes.
 
 Each pair runs `perfbench/run.py --trace 0` once in the parent and once
 in the working tree on the same seed, alternating which side goes first
@@ -21,6 +21,14 @@ change's median stays within the metric's bound, and whether a gain
 claim holds: at least nine tenths of the pairs won and the medians
 apart by more than the distance between the parent's quartiles. The
 last line is the same as JSON, with every run's metrics.
+
+With `--traced-seed N`, after the pairs each side runs once more with
+`--trace 1` on seed N, and the script prints every per-layer metric of
+the two traced runs side by side. A `count`-unit metric (jobs, tasks,
+commits, live files) whose values differ is flagged: counts do not drift
+with host load, so a difference there is a change in what the program
+does, not noise. A table of the median jobs per `serve.*` span follows
+(one span is one single search or batch call).
 """
 
 import argparse
@@ -45,10 +53,11 @@ def git(*args):
                           stdout=subprocess.PIPE, stderr=subprocess.PIPE).stdout.decode().strip()
 
 
-def bench(checkout, workload, seed, seconds):
-    """One untraced run; returns its result line as a dict, or None."""
+def bench(checkout, workload, seed, seconds, trace=0):
+    """One run; returns its result line as a dict, or None. A traced
+    run's dict also carries the spans of its detail line."""
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
     proc = subprocess.run(cmd, cwd=checkout, stdout=subprocess.PIPE, stderr=subprocess.PIPE)
     lines = [l for l in proc.stdout.decode("utf-8", "replace").splitlines() if l.strip()]
     try:
@@ -57,6 +66,11 @@ def bench(checkout, workload, seed, seconds):
         sys.stderr.write(proc.stderr.decode("utf-8", "replace")[-4000:])
         return None
     result["exit"] = proc.returncode
+    if trace and len(lines) >= 2:
+        try:
+            result["spans"] = json.loads(lines[-2]).get("spans", [])
+        except ValueError:
+            pass
     return result
 
 
@@ -86,6 +100,48 @@ def summarize(metric, pairs):
             "within_bound": within, "gain": gain}
 
 
+def traced_rows(parent, change):
+    """Per-layer metrics of two traced runs, in the parent's order."""
+    pm, cm = parent["metrics"], change["metrics"]
+    rows = []
+    for name in list(pm) + [n for n in cm if n not in pm]:
+        p, c = pm.get(name, {}), cm.get(name, {})
+        unit = p.get("unit") or c.get("unit")
+        pv, cv = p.get("value"), c.get("value")
+        rows.append({"metric": name, "unit": unit, "parent": pv, "change": cv,
+                     "count_differs": unit == "count" and pv != cv})
+    return rows
+
+
+def jobs_per_span(result):
+    """Span name (up to its first `/`) -> jobs of each such span."""
+    out = {}
+    for sp in result.get("spans", []):
+        out.setdefault(sp["name"].split("/")[0], []).append(sp.get("counts", {}).get("jobs", 0))
+    return out
+
+
+def print_traced(seed, parent, change):
+    print("traced seed %d: checks passed: parent %s, change %s" % (
+        seed, parent["correct"], change["correct"]))
+    rows = traced_rows(parent, change)
+    print("%-36s %-6s %14s %14s" % ("per-layer metric", "unit", "parent", "change"))
+    fmt = lambda v: "-" if v is None else "%.6g" % v
+    for r in rows:
+        print("%-36s %-6s %14s %14s%s" % (r["metric"], r["unit"], fmt(r["parent"]),
+                                          fmt(r["change"]),
+                                          "  COUNT DIFFERS" if r["count_differs"] else ""))
+    print("count metrics that differ: %d" % sum(r["count_differs"] for r in rows))
+    pj, cj = jobs_per_span(parent), jobs_per_span(change)
+    names = sorted(n for n in set(pj) | set(cj) if n.startswith("serve."))
+    if names:
+        print("%-36s %14s %14s" % ("jobs per serve span (median)", "parent", "change"))
+        med = lambda v: "-" if not v else "%g" % statistics.median(v)
+        for n in names:
+            print("%-36s %14s %14s" % (n, med(pj.get(n)), med(cj.get(n))))
+    return rows
+
+
 def main(argv=None):
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--workload", required=True)
@@ -93,6 +149,8 @@ def main(argv=None):
     ap.add_argument("--pairs", type=int, default=10)
     ap.add_argument("--seeds", help="comma-separated seeds, one per pair (default 1..pairs)")
     ap.add_argument("--seconds", type=float, default=8)
+    ap.add_argument("--traced-seed", type=int,
+                    help="after the pairs, one --trace 1 run per side on this seed")
     args = ap.parse_args(argv)
     seeds = ([int(s) for s in args.seeds.split(",")] if args.seeds
              else list(range(1, args.pairs + 1)))
@@ -102,12 +160,19 @@ def main(argv=None):
         e2e = json.load(f)["end_to_end"]
 
     commit = git("rev-parse", "--verify", args.parent + "^{commit}")
-    # a terminated run still removes its worktree (the finally below)
+    # a terminated run still removes its parent copy (the finally below)
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     tmp = tempfile.mkdtemp(prefix="perf_ab-")
     parent_dir = os.path.join(tmp, "parent")
+    traced = None
     try:
-        git("worktree", "add", "--detach", parent_dir, commit)
+        os.makedirs(parent_dir)
+        archive = subprocess.Popen(["git", "-C", ROOT, "archive", commit],
+                                   stdout=subprocess.PIPE)
+        subprocess.run(["tar", "-x", "-C", parent_dir], stdin=archive.stdout, check=True)
+        archive.stdout.close()
+        if archive.wait() != 0:
+            raise SystemExit("perf_ab: git archive %s failed" % commit)
         sides = {"parent": parent_dir, "change": ROOT}
         pairs, dropped = [], []
         for i, seed in enumerate(seeds[:args.pairs]):
@@ -122,11 +187,14 @@ def main(argv=None):
                 log("pair %d dropped: a run printed no result line" % i)
             else:
                 pairs.append(pair)
+        if args.traced_seed is not None:
+            traced = {"seed": args.traced_seed}
+            for side in ("parent", "change"):
+                log("traced seed %d: %s" % (args.traced_seed, side))
+                traced[side] = bench(sides[side], args.workload, args.traced_seed,
+                                     args.seconds, trace=1)
     finally:
-        subprocess.run(["git", "-C", ROOT, "worktree", "remove", "--force", parent_dir],
-                       stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL)
         shutil.rmtree(tmp, ignore_errors=True)
-        subprocess.run(["git", "-C", ROOT, "worktree", "prune"])
     if not pairs:
         raise SystemExit("perf_ab: no pair finished")
 
@@ -151,9 +219,15 @@ def main(argv=None):
     print("failed operations: parent %s, change %s; runs with a failed check: "
           "parent %d, change %d" % (failed["parent"], failed["change"],
                                     incorrect["parent"], incorrect["change"]))
+    if traced is not None:
+        if traced["parent"] is None or traced["change"] is None:
+            print("traced seed %d: a run printed no result line" % traced["seed"])
+        else:
+            traced["rows"] = print_traced(traced["seed"], traced["parent"], traced["change"])
     print(json.dumps({"workload": args.workload, "parent": commit, "metrics": rows,
                       "failed": failed, "incorrect_runs": incorrect,
-                      "pairs": pairs, "dropped": dropped}, sort_keys=True))
+                      "pairs": pairs, "dropped": dropped, "traced": traced},
+                     sort_keys=True))
     return 0
 
 

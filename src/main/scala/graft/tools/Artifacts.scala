@@ -451,34 +451,64 @@ object Artifacts {
     // scheduling its own footer/schema-inference job); the memo makes
     // every repeat resolution free. This caches an UNEXECUTED plan,
     // never data or results — every query still computes from parquet.
-    val m = dfCache.synchronized {
-      var mm = dfCache.get(spark)
-      if (mm == null) {
-        mm = scala.collection.mutable.Map.empty
-        dfCache.put(spark, mm)
+    frameMemo.getOrElseUpdate(spark, root, segs, Nil)(
+      (normalize(spark.read.option("basePath", root)
+        .parquet(segs.map(s => s"$root/$s"): _*)), true))
+  }
+
+  /** A per-session memo keyed by (artifact root, sorted segment list,
+    * `extra` — the selected columns of a row memo), valid because a
+    * committed segment directory is never rewritten. Weak session keys
+    * so a stopped session never pins its entries; each session's map
+    * is bounded at 1024 entries (cleared when full — keys are tiny).
+    * [[dropSegments]] drops every entry listing a deleted segment.
+    */
+  private final class SegMemo[V] {
+    private type Key = (String, Seq[String], Seq[String])
+    private val bySession = new java.util.WeakHashMap[SparkSession,
+      scala.collection.mutable.Map[Key, V]]()
+
+    /** The memoized value, or `make`'s value — kept when its flag is set. */
+    def getOrElseUpdate(spark: SparkSession, root: String,
+        segs: Seq[String], extra: Seq[String])(make: => (V, Boolean)): V = {
+      val m = bySession.synchronized {
+        var mm = bySession.get(spark)
+        if (mm == null) {
+          mm = scala.collection.mutable.Map.empty
+          bySession.put(spark, mm)
+        }
+        mm
       }
-      mm
+      val key = (root, segs.sorted, extra)
+      m.synchronized {
+        m.getOrElse(key, {
+          val (v, keep) = make
+          if (keep) {
+            if (m.size >= 1024) m.clear()
+            m += key -> v
+          }
+          v
+        })
+      }
     }
-    val key = (root, segs.sorted)
-    m.synchronized {
-      m.get(key) match {
-        case Some(df) => df
-        case None =>
-          val df = normalize(spark.read.option("basePath", root)
-            .parquet(segs.map(s => s"$root/$s"): _*))
-          if (m.size >= 1024) m.clear() // bound the memo; keys are tiny
-          m += key -> df
-          df
+
+    /** Drop every entry that lists one of the `(root, seg)` pairs. */
+    def drop(dead: Set[(String, String)]): Unit = bySession.synchronized {
+      bySession.values.forEach { m =>
+        m.synchronized {
+          m.filterInPlace { case ((root, ss, _), _) =>
+            !ss.exists(s => dead((root, s)))
+          }
+        }
       }
     }
   }
 
-  /** [[readSegs]] memo: session -> (artifact root, sorted segs) ->
-    * constructed frame. Weak session keys so a stopped session never
-    * pins its frames.
-    */
-  private val dfCache = new java.util.WeakHashMap[SparkSession,
-    scala.collection.mutable.Map[(String, Seq[String]), DataFrame]]()
+  /** [[readSegs]] memo: constructed (unexecuted) frames. */
+  private val frameMemo = new SegMemo[DataFrame]
+
+  /** [[smallRows]] memo: collected catalog rows per selected columns. */
+  private val rowMemo = new SegMemo[Seq[IndexedSeq[Any]]]
 
   /** Driver-side collect of a CATALOG-SIZED artifact (stats, summary,
     * graph_meta, centroids, codebooks, sq8 ranges, radii — frames
@@ -496,23 +526,47 @@ object Artifacts {
     * dir fallback. `cols` selects fields by name; values come back as
     * Long (INT64/INT32), String (BINARY/UTF8) or Double, null for an
     * absent field.
+    *
+    * MEMOIZED per session like [[readSegs]]' frames, keyed by (artifact
+    * root, sorted segment list, `cols`): a committed segment dir is
+    * never rewritten and [[dropSegments]] drops the entries of a
+    * deleted one, so the rows of a key never change. A search that
+    * consults centroids, summary, codebooks and ranges pays one
+    * footer open plus a recursive part-file listing per artifact only
+    * the first time; later resolutions read the manifest and nothing
+    * else. `--at` pinning needs nothing extra: the pinned manifest's
+    * segment list is the key. Never memoized: legacy flat dirs (no
+    * manifest, so no immutable segment list) and a listed segment with
+    * no part file (a committed segment always holds one, so it was
+    * deleted under us). Rows are immutable; the public forms below
+    * copy them out.
     */
   private def smallRows(spark: SparkSession, idx: String, name: String,
-      segsOpt: Option[Seq[String]], cols: Seq[String]): Seq[Array[Any]] = {
-    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
-    val f = fs(spark, idx)
+      segsOpt: Option[Seq[String]], cols: Seq[String]): Seq[IndexedSeq[Any]] = {
     val root = s"$idx/$name"
-    val dirs: Seq[Path] = segsOpt
-      .orElse(currentManifest(spark, idx).map(_._2.getOrElse(name,
+    segsOpt.orElse(currentManifest(spark, idx).map(_._2.getOrElse(name,
         sys.error(s"artifact $name not in manifest of $idx")))) match {
       case Some(segs) =>
         require(segs.nonEmpty, s"artifact $name has no segments in $idx")
-        segs.map(s => new Path(s"$root/$s"))
-      case None => Seq(new Path(root)) // legacy flat index
+        rowMemo.getOrElseUpdate(spark, root, segs, cols) {
+          val f = fs(spark, idx)
+          val parts = segs.map(s => listPartFiles(f, new Path(s"$root/$s")))
+          (readRows(spark, name, parts.flatten, cols), parts.forall(_.nonEmpty))
+        }
+      case None => // legacy flat index
+        readRows(spark, name, listPartFiles(fs(spark, idx), new Path(root)), cols)
     }
+  }
+
+  /** The named columns of every row of the parquet `files`, read with
+    * parquet-mr on the driver — see [[smallRows]].
+    */
+  private def readRows(spark: SparkSession, name: String, files: Seq[Path],
+      cols: Seq[String]): Seq[IndexedSeq[Any]] = {
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
     val conf = spark.sparkContext.hadoopConfiguration
-    val out = Seq.newBuilder[Array[Any]]
-    dirs.flatMap(d => listPartFiles(f, d)).foreach { p =>
+    val out = Vector.newBuilder[IndexedSeq[Any]]
+    files.foreach { p =>
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
       try {
@@ -542,7 +596,7 @@ object Artifacts {
                 case other  => sys.error(
                   s"collectSmall($name): unsupported parquet type $other")
               }
-            }.toArray
+            }.toVector
             i += 1
           }
           pages = reader.readNextRowGroup()
@@ -553,7 +607,8 @@ object Artifacts {
   }
 
   /** Driver-side key -> value map of a (key STRING, value LONG)
-    * catalog artifact (stats, summary, graph_meta) — see [[smallRows]].
+    * catalog artifact (stats, summary, graph_meta) — see [[smallRows]]
+    * for the per-session memo behind it.
     */
   def collectKV(spark: SparkSession, idx: String, name: String)
       : Map[String, Long] =
@@ -562,20 +617,22 @@ object Artifacts {
     }.toMap
 
   /** Driver-side collect of the named ALL-LONG columns of a
-    * catalog-sized artifact — see [[smallRows]].
+    * catalog-sized artifact — see [[smallRows]]. Every call returns
+    * fresh arrays, so a caller's writes never reach the memo.
     */
   def collectLongs(spark: SparkSession, idx: String, name: String,
       cols: Seq[String]): Seq[Array[Long]] =
-    smallRows(spark, idx, name, None, cols)
-      .map(_.map(_.asInstanceOf[java.lang.Long].longValue()))
+    longs(smallRows(spark, idx, name, None, cols))
 
   /** [[collectLongs]] over an explicit segment list (the pending-
     * segment form mutating commands use mid-derivation).
     */
   def collectLongsSegs(spark: SparkSession, idx: String, name: String,
       segs: Seq[String], cols: Seq[String]): Seq[Array[Long]] =
-    smallRows(spark, idx, name, Some(segs), cols)
-      .map(_.map(_.asInstanceOf[java.lang.Long].longValue()))
+    longs(smallRows(spark, idx, name, Some(segs), cols))
+
+  private def longs(rows: Seq[IndexedSeq[Any]]): Seq[Array[Long]] =
+    rows.map(_.map(_.asInstanceOf[java.lang.Long].longValue()).toArray)
 
   /** Driver-side EXACT row count of an artifact from its parquet
     * FOOTERS alone (round 18, VERDICT item 3): every parquet file
@@ -1373,25 +1430,17 @@ object Artifacts {
   }
 
   /** Delete segment directories `(artifact, seg)` of `idx` and drop
-    * every [[readSegs]] memo entry that lists one of them — the memo
-    * must not outlive the directory, because a later writer can
-    * re-claim the freed segment number and the memo would then serve
-    * the dead frame.
+    * every [[readSegs]] and [[smallRows]] memo entry that lists one of
+    * them — neither memo may outlive the directory, because a later
+    * writer can re-claim the freed segment number and the memo would
+    * then serve the dead frame or rows.
     */
   private def dropSegments(spark: SparkSession, idx: String,
       segs: Seq[(String, String)]): Unit = {
     val f = fs(spark, idx)
     segs.foreach { case (n, s) => f.delete(new Path(s"$idx/$n/$s"), true) }
     val dead = segs.map { case (n, s) => (s"$idx/$n", s) }.toSet
-    if (dead.nonEmpty) dfCache.synchronized {
-      dfCache.values.forEach { m =>
-        m.synchronized {
-          m.filterInPlace { case ((root, ss), _) =>
-            !ss.exists(s => dead((root, s)))
-          }
-        }
-      }
-    }
+    if (dead.nonEmpty) Seq(frameMemo, rowMemo).foreach(_.drop(dead))
   }
 
   private def structuralRetries(spark: SparkSession): Int =
@@ -1897,10 +1946,6 @@ object Artifacts {
   def requireManifest(spark: SparkSession, idx: String): Unit =
     require(hasManifest(spark, idx),
       s"$idx has no artifact manifest (legacy flat index — rebuild to mutate)")
-
-  /** Is this a manifest-layout index (vs a legacy flat one)? */
-  def manifested(spark: SparkSession, idx: String): Boolean =
-    hasManifest(spark, idx)
 
   /** Append-style write inside a command: write `df` as a new segment
     * of `name` and return the pending map with it appended to the

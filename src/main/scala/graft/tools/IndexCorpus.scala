@@ -174,23 +174,12 @@ object IndexCorpus extends IndexLifecycle {
     else Artifacts.collectKV(spark, idx, "graph_meta")
       .getOrElse("gbuckets", graphBuckets)
 
-  /** Summary lookup BY NAME (key filter + named value column — the
-    * round-12 advisory was a positional `getLong(1)` silently bound
-    * to JSON schema inference order). New-layout indexes persist the
-    * summary as a (key, value) parquet artifact; legacy flat indexes
-    * keep their JSON readable.
+  /** Summary lookup BY NAME from the (key, value) `summary` catalog
+    * artifact (driver-side, memoized — see [[Artifacts.collectKV]]).
     */
   private def summaryVal(spark: SparkSession, idx: String,
       key: String): Option[Long] =
-    if (Artifacts.manifested(spark, idx))
-      // driver-side catalog read (round 17) — the summary is a
-      // handful of key/value rows; resolving it as a Spark job paid
-      // scheduling + planning on every command that consulted a knob
-      Artifacts.collectKV(spark, idx, "summary").get(key)
-    else spark.read.json(s"$idx/summary")
-      .filter(col("key") === key)
-      .select(col("value").cast("long").as("value"))
-      .collect().headOption.map(_.getAs[Long]("value"))
+    Artifacts.collectKV(spark, idx, "summary").get(key)
 
   private def summaryFlag(spark: SparkSession, idx: String,
       key: String): Boolean = summaryVal(spark, idx, key).contains(1L)
@@ -1007,9 +996,17 @@ object IndexCorpus extends IndexLifecycle {
     val dims = cents.head._2.length
     val cbN = cellBucketsOf(spark, idx)
 
-    val pv = spark.read.parquet(in)
+    // ONE source frame and ONE probe row per search: every tier below
+    // reuses `src` (a second spark.read.parquet would schedule its own
+    // schema-inference job) and this row, which carries both the
+    // micros form the integer tiers route and score with (`pv`) and
+    // the float vector the cosine tails score with (`pf`)
+    val src = spark.read.parquet(in)
+    val probeRow = src
       .filter(col(idCol).cast("long") === probeId && size(col(vecCol)) === dims)
-      .select(SemDedup.microsVec(col(vecCol))).head().getSeq[Long](0).toArray
+      .select(SemDedup.microsVec(col(vecCol)), col(vecCol)).head()
+    val pv = probeRow.getSeq[Long](0).toArray
+    val pf = probeRow.getSeq[Float](1)
     def l2(a: Array[Long], off: Int, c: Array[Long]): Long = {
       var d = 0L; var i = 0
       while (i < c.length) { val x = a(off + i) - c(i); d += x * x; i += 1 }
@@ -1057,7 +1054,7 @@ object IndexCorpus extends IndexLifecycle {
             m0.join(Artifacts.read(spark, idx, "tombstones")
               .select(col("id")), Seq("id"), "left_anti")
           else m0
-        spark.read.parquet(in).filter(size(col(vecCol)) === dims)
+        src.filter(size(col(vecCol)) === dims)
           .select(col(idCol).cast("long").as("id"),
             SemDedup.microsVec(col(vecCol)).as("mv"))
           .join(m.select(col("id")), Seq("id"), "left_semi")
@@ -1109,10 +1106,6 @@ object IndexCorpus extends IndexLifecycle {
       // the bucket count the graph was WRITTEN with governs the
       // partition math — never the current compile-time constant
       val gB = graphBucketsOf(spark, idx)
-      val pf = spark.read.parquet(in)
-        .filter(col(idCol).cast("long") === probeId &&
-          size(col(vecCol)) === dims)
-        .select(col(vecCol)).head().getSeq[Float](0)
       val tombOpt =
         if (Artifacts.exists(spark, idx, "tombstones"))
           Some(Artifacts.read(spark, idx, "tombstones").select(col("id")))
@@ -1175,7 +1168,7 @@ object IndexCorpus extends IndexLifecycle {
           // (knnGraph indexes the raw table); they are unscorable
           // against the probe and drop here — same as the oracle's
           // len = dims restriction
-          spark.read.parquet(in).filter(size(col(vecCol)) === dims)
+          src.filter(size(col(vecCol)) === dims)
             .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
             .join(cand, Seq("id"), "left_semi")
             .select(col("id"),
@@ -1228,7 +1221,7 @@ object IndexCorpus extends IndexLifecycle {
           // source ONCE; output shape matches the pq-tier rerank
           val shortlist = visited.toSeq.sortBy(sortKey).take(n)
             .toDF("id", "adc")
-          spark.read.parquet(in)
+          src
             .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
             .join(broadcast(shortlist), Seq("id"))
             .select(col("id"), col("adc"),
@@ -1318,11 +1311,7 @@ object IndexCorpus extends IndexLifecycle {
         // ADC-best, rejoin ONLY those ids to the float source, exact
         // cosine re-rank to k
         val shortlist = adcRanked.orderBy(col("adc"), col("id")).limit(n)
-        val pf = spark.read.parquet(in)
-          .filter(col(idCol).cast("long") === probeId &&
-            size(col(vecCol)) === dims)
-          .select(col(vecCol)).head().getSeq[Float](0)
-        spark.read.parquet(in)
+        src
           .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
           .join(broadcast(shortlist), Seq("id"))
           .select(col("id"), col("adc"),

@@ -2,8 +2,9 @@ package graft.tools
 
 import scala.collection.mutable
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 import graft.GraftSession
 
@@ -25,8 +26,70 @@ import graft.GraftSession
   *   shape); repeat a name to see warm-vs-cold.
   */
 object JobProfile {
-  private final case class JobRec(id: Int, site: String, ms: Long,
+  private[tools] final case class JobRec(id: Int, site: String, ms: Long,
     execId: String)
+
+  /** Is `j` a thread-pool job — a broadcast, subquery or adaptive
+    * stage job its SQL execution spawned off the caller's thread? It
+    * is when it carries an execution id and its call site differs from
+    * that execution's own call site (`execSites`, the action that
+    * started it, e.g. `collect at Foo.scala:12`). A pool job's site is
+    * wherever the pool thread started (`CompletableFuture`,
+    * `ThreadPoolExecutor`, `FutureTask` — it varies by Spark version),
+    * so no site pattern can recognize it. The execution's FIRST job is
+    * no owner either: a broadcast job is submitted before the action's
+    * own job, and under adaptive execution every job of an execution
+    * starts on the pool.
+    */
+  private[tools] def isPoolJob(j: JobRec, execSites: Map[String, String]): Boolean =
+    j.execId.nonEmpty && execSites.get(j.execId).exists(_ != j.site)
+
+  /** The jobs with every pool job charged to its execution's call site
+    * (marked `[pool]`); other jobs unchanged.
+    */
+  private[tools] def attributed(jobs: Seq[JobRec],
+      execSites: Map[String, String]): Seq[JobRec] =
+    jobs.map(j =>
+      if (isPoolJob(j, execSites)) j.copy(site = execSites(j.execId) + " [pool]")
+      else j)
+
+  /** Records every finished job's duration, call site and SQL
+    * execution id, and every SQL execution's call site.
+    */
+  private[tools] final class Recorder extends SparkListener {
+    private val starts = mutable.Map.empty[Int, (Long, String, String)]
+    private val jobs = mutable.ArrayBuffer.empty[JobRec]
+    private val execSites = mutable.Map.empty[String, String]
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      // the action's call site arrives as the job's result-stage name
+      // (callSite.short), e.g. "count at IndexCorpus.scala:413"
+      val site = e.stageInfos.lastOption.map(_.name)
+        .orElse(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("callSite.short"))))
+        .getOrElse("?")
+      val execId = Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+        .getOrElse("")
+      starts(e.jobId) = (e.time, site, execId)
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      starts.remove(e.jobId).foreach { case (t0, site, execId) =>
+        jobs += JobRec(e.jobId, site, e.time - t0, execId)
+      }
+    }
+    // the execution's description is its call site unless the caller
+    // set a job description
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case x: SparkListenerSQLExecutionStart =>
+        synchronized { execSites(x.executionId.toString) = x.description }
+      case _ =>
+    }
+
+    def clear(): Unit = synchronized { jobs.clear() }
+    def snapshot(): (Vector[JobRec], Map[String, String]) =
+      synchronized { (jobs.toVector, execSites.toMap) }
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -40,34 +103,8 @@ object JobProfile {
     spark.sparkContext.setLogLevel("WARN")
     GraftSession.tune(spark)
 
-    val starts = mutable.Map.empty[Int, (Long, String, String)]
-    val jobs = mutable.ArrayBuffer.empty[JobRec]
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        starts.synchronized {
-          // the action's call site arrives as the job's result-stage
-          // name (callSite.short), e.g. "count at IndexCorpus.scala:413"
-          val site = e.stageInfos.lastOption.map(_.name)
-            .orElse(Option(e.properties)
-              .flatMap(p => Option(p.getProperty("callSite.short"))))
-            .getOrElse("?")
-          // the SQL execution id groups an action's root job with the
-          // broadcast/subquery child jobs its execution spawned on the
-          // SQL thread pool — those children report a useless
-          // CompletableFuture call site, so the rollup re-attributes
-          // them to the first same-execution job with a real site
-          val execId = Option(e.properties)
-            .flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
-            .getOrElse("")
-          starts(e.jobId) = (e.time, site, execId)
-        }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        starts.synchronized {
-          starts.remove(e.jobId).foreach { case (t0, site, execId) =>
-            jobs += JobRec(e.jobId, site, e.time - t0, execId)
-          }
-        }
-    })
+    val rec = new Recorder
+    spark.sparkContext.addSparkListener(rec)
 
     // same warm-up as Bench: JVM/codegen/FS init must not be charged
     // to the first profiled query
@@ -82,7 +119,7 @@ object JobProfile {
     names.foreach { name =>
       val fn = graft.SparkEntry.queries.getOrElse(name,
         sys.error(s"unknown query $name"))
-      starts.synchronized { jobs.clear() }
+      rec.clear()
       val t0 = System.nanoTime()
       fn(spark, sfDir).queryExecution.toRdd.foreach(_ => ())
       val wallMs = (System.nanoTime() - t0) / 1e6
@@ -92,7 +129,7 @@ object JobProfile {
       // ADVICE fix — a missed tail job under-counted job time and
       // inflated the reported driver gap)
       Thread.sleep(300)
-      val snap = starts.synchronized { jobs.toVector }
+      val (snap, execSites) = rec.snapshot()
       val jobMs = snap.map(_.ms).sum
       println(f"%n==== $name: wall ${wallMs / 1000}%.3f s, " +
         f"${snap.size} jobs, job-time ${jobMs / 1000.0}%.3f s, " +
@@ -108,18 +145,8 @@ object JobProfile {
         .foreach { case (s, n, ms) =>
           println(f"  $ms%6d ms  $n%3d jobs  $s")
         }
-      // attribute thread-pool (broadcast/subquery) jobs to the owning
-      // action: same spark.sql.execution.id, first real call site wins
-      val isPool = (s: String) => s.contains("CompletableFuture")
-      val owner = snap.filter(j => j.execId.nonEmpty && !isPool(j.site))
-        .sortBy(_.id)
-        .groupBy(_.execId).map { case (eid, js) => eid -> js.head.site }
-      println("-- rollup with broadcast jobs re-attributed by execution --")
-      snap.map { j =>
-          if (isPool(j.site) && owner.contains(j.execId))
-            j.copy(site = owner(j.execId) + " [bcast]")
-          else j
-        }
+      println("-- rollup with pool jobs charged to their execution --")
+      attributed(snap, execSites)
         .groupBy(_.site).toSeq
         .map { case (s, js) => (s, js.size, js.map(_.ms).sum) }
         .sortBy(-_._3)

@@ -1276,6 +1276,106 @@ class ArtifactsSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.keepManifests")
   }
 
+  test("catalog-row memo never outlives a deleted segment: a vacuumed " +
+    "segment number re-claimed by a later write collects the NEW rows") {
+    import spark.implicits._
+    val idx = freshIdx()
+    try {
+      spark.conf.set("spark.graft.keepManifests", "1")
+      val seg = Artifacts.writeSegment(spark, idx, "kv",
+        Seq(("a", 1L)).toDF("key", "value"))
+      Artifacts.commit(spark, idx, Map("kv" -> Seq(seg)))           // v0
+      Artifacts.vacuum(spark, idx) // committed: the claim sidecar retires
+      assert(Artifacts.collectKV(spark, idx, "kv") == Map("a" -> 1L)) // memoized
+      val segX = Artifacts.writeSegment(spark, idx, "other",
+        Seq((0L, "x")).toDF("id", "v"))
+      Artifacts.commit(spark, idx, Map("other" -> Seq(segX)))       // v1
+      Artifacts.vacuum(spark, idx) // seg leaves retention: dir deleted
+      assert(!new java.io.File(s"$idx/kv/$seg").exists())
+      val again = Artifacts.writeSegment(spark, idx, "kv",
+        Seq(("b", 2L), ("c", 3L)).toDF("key", "value"))
+      assert(again == seg, s"segment number not re-claimed: $again vs $seg")
+      Artifacts.commit(spark, idx,
+        Map("other" -> Seq(segX), "kv" -> Seq(again)))              // v2
+      assert(Artifacts.collectKV(spark, idx, "kv") ==
+        Map("b" -> 2L, "c" -> 3L),
+        "the memo served the vacuumed segment's dead rows")
+    } finally spark.conf.unset("spark.graft.keepManifests")
+  }
+
+  test("catalog-row memo never outlives a deleted segment: a pending " +
+    "segment a lost attempt reclaims, re-claimed later, collects the " +
+    "NEW rows through collectLongsSegs") {
+    import spark.implicits._
+    val idx = freshIdx()
+    val cols = Seq("i", "x")
+    val seg0 = Artifacts.writeSegment(spark, idx, "rows",
+      Seq((1L, "base")).toDF("id", "v"))
+    Artifacts.commit(spark, idx, Map("rows" -> Seq(seg0)))          // v0
+    val delta = Artifacts.writeSegment(spark, idx, "rows",
+      Seq((2L, "mine")).toDF("id", "v"))
+    var calls = 0
+    var pending = ""
+    Artifacts.commitAppendsWithRetry(spark, idx, Map("rows" -> Seq(delta)),
+      finish = m => {
+        calls += 1
+        if (calls > 1) m
+        else {
+          // failpoint: a competitor commits v1, so this attempt loses
+          Artifacts.commit(spark, idx, Artifacts.merged(spark, idx,
+            Map("rows" -> (Artifacts.segmentsOf(spark, idx, "rows") :+
+              Artifacts.writeSegment(spark, idx, "rows",
+                Seq((3L, "W")).toDF("id", "v"))))))
+          pending = Artifacts.writeSegment(spark, idx, "meta",
+            Seq((1L, 10L)).toDF("i", "x"))
+          assert(Artifacts.collectLongsSegs(spark, idx, "meta",
+            Seq(pending), cols).map(_.toSeq) == Seq(Seq(1L, 10L))) // memoized
+          m + ("meta" -> Seq(pending))
+        }
+      })
+    assert(calls == 2, s"$calls attempts: the first attempt did not lose")
+    assert(!new java.io.File(s"$idx/meta/$pending").exists(),
+      "the lost attempt's pending segment was not reclaimed")
+    try {
+      spark.conf.set("spark.graft.vacuumGraceMs", "0")
+      Artifacts.vacuum(spark, idx) // the orphaned claim retires
+    } finally spark.conf.unset("spark.graft.vacuumGraceMs")
+    val again = Artifacts.writeSegment(spark, idx, "meta",
+      Seq((2L, 20L), (3L, 30L)).toDF("i", "x"))
+    assert(again == pending, s"segment number not re-claimed: $again vs $pending")
+    assert(Artifacts.collectLongsSegs(spark, idx, "meta", Seq(again), cols)
+      .map(_.toSeq).toSet == Set(Seq(2L, 20L), Seq(3L, 30L)),
+      "the memo served the reclaimed pending segment's dead rows")
+  }
+
+  test("catalog-row memo: a hit reads no part file, callers cannot " +
+    "change what it returns, and legacy flat dirs are never memoized") {
+    import spark.implicits._
+    val idx = freshIdx()
+    val seg = Artifacts.writeSegment(spark, idx, "cat",
+      Seq((0L, 5L), (1L, 7L)).toDF("i", "c"))
+    Artifacts.commit(spark, idx, Map("cat" -> Seq(seg)))
+    val first = Artifacts.collectLongs(spark, idx, "cat", Seq("i", "c"))
+    first.foreach(a => a(1) = -1L) // a caller scribbling on its copy
+    // the part files go away behind the layer's back: only a memo hit
+    // can still answer, and it answers the committed rows
+    val segDir = new java.io.File(s"$idx/cat/$seg")
+    segDir.listFiles().filter(_.getName.startsWith("part-")).foreach(_.delete())
+    assert(Artifacts.collectLongs(spark, idx, "cat", Seq("i", "c"))
+      .map(_.toSeq).toSet == Set(Seq(0L, 5L), Seq(1L, 7L)))
+    // another column selection is another key: read afresh (no rows)
+    assert(Artifacts.collectLongs(spark, idx, "cat", Seq("c")).isEmpty)
+
+    // legacy flat layout (no manifest): every collect reads the files
+    val flat = freshIdx()
+    Seq(("k", 1L)).toDF("key", "value").write.parquet(s"$flat/summary")
+    assert(Artifacts.collectKV(spark, flat, "summary") == Map("k" -> 1L))
+    Seq(("k", 2L)).toDF("key", "value").write.mode("overwrite")
+      .parquet(s"$flat/summary")
+    assert(Artifacts.collectKV(spark, flat, "summary") == Map("k" -> 2L),
+      "a legacy flat dir was memoized")
+  }
+
   test("retry backoff (round 17): the jitter schedule is deterministic " +
     "given the seed, bounded by the exponential cap, and disabled at " +
     "base 0; a 4-writer commit storm with backoff engages the sleeper " +

@@ -727,6 +727,44 @@ class IndexCorpusSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.graft.keepManifests", "1")
   }
 
+  test("a single search reads its source once: one schema-inference " +
+    "job and one probe-row fetch, in the pq rerank and graph tiers") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val tmp = Files.createTempDirectory("graft_index_once").toString
+    val idx = s"$tmp/idx"
+    IndexCorpus.build(spark, Array(emb, idx, "--ivf-k", "4"))
+    IndexCorpus.graph(spark, Array(idx, emb, "--deg", "3",
+      "--planes", "12", "--bands", "2"))
+    // the name of every job one search and the collect of its answer
+    // schedule: a job's name is its call site, e.g. "head at X.scala:9"
+    def jobNames(flags: String*): Seq[String] = {
+      val sc = spark.sparkContext
+      org.apache.spark.ListenerBusDrain(sc)
+      val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+      val l = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          e.stageInfos.lastOption.foreach(st => names.add(st.name))
+      }
+      sc.addSparkListener(l)
+      try {
+        IndexCorpus.search(spark, (Seq(idx, emb, "7") ++ flags).toArray)
+          .collect()
+        org.apache.spark.ListenerBusDrain(sc)
+      } finally sc.removeSparkListener(l)
+      names.asScala.toSeq
+    }
+    def jobsOf(names: Seq[String], op: String): Int =
+      names.count(_.startsWith(s"$op at IndexCorpus.scala"))
+    val pq = jobNames("--k", "5", "--nprobe", "2", "--rerank", "50")
+    assert(jobsOf(pq, "parquet") == 1 && jobsOf(pq, "head") == 1,
+      s"pq --rerank search jobs: $pq")
+    val graph = jobNames("--k", "5", "--nprobe", "1", "--tier", "graph",
+      "--beam", "6", "--hops", "2", "--rerank", "50")
+    assert(jobsOf(graph, "parquet") == 1 && jobsOf(graph, "head") == 1,
+      s"graph --rerank search jobs: $graph")
+  }
+
   test("graph tier: beam traversal re-derivable from the persisted " +
     "graph + float source; honors retraction; deterministic") {
     import org.apache.spark.sql.functions._
