@@ -1,5 +1,6 @@
 #!/usr/bin/env python3
-"""Count non-blank, non-comment lines of the engine's main Scala code.
+"""Count non-blank, non-comment lines of the engine's main Scala code,
+or the environment variables it reads.
 
 A line counts when it holds at least one character of code outside
 `//` line comments and `/* ... */` blocks (Scala block comments nest;
@@ -9,12 +10,21 @@ string and character literals are code, not comments.
 Usage:
     python3 scripts/loc.py [ROOT]        # per-file counts, then the total
     python3 scripts/loc.py --total [ROOT]
+    python3 scripts/loc.py --knobs [ROOT]
+
+`--knobs` prints each distinct environment-variable name that
+`ROOT/src/main/**/*.scala` and `ROOT/build.sbt` read through
+`sys.env.get("NAME")`, `sys.env.getOrElse("NAME", ...)` or
+`sys.env.contains("NAME")`, sorted, then their count.
 
 ROOT defaults to the repository root (the directory above this script);
 files are `ROOT/src/main/**/*.scala`.
 """
 import os
+import re
 import sys
+
+ENV_READ = re.compile(r'sys\.env\.(?:get|getOrElse|contains)\(\s*"([^"]+)"')
 
 
 def code_lines(text):
@@ -103,11 +113,28 @@ def scala_files(root):
                 yield os.path.join(d, name)
 
 
+def knobs(root):
+    """Distinct environment-variable names read by main code and the build."""
+    paths = list(scala_files(root)) + [os.path.join(root, "build.sbt")]
+    names = set()
+    for path in paths:
+        if os.path.exists(path):
+            with open(path, encoding="utf-8") as f:
+                names.update(ENV_READ.findall(f.read()))
+    return sorted(names)
+
+
 def main(argv):
     total_only = "--total" in argv
-    args = [a for a in argv if a != "--total"]
+    args = [a for a in argv if a not in ("--total", "--knobs")]
     root = args[0] if args else os.path.dirname(
         os.path.dirname(os.path.abspath(__file__)))
+    if "--knobs" in argv:
+        names = knobs(root)
+        for name in names:
+            print(name)
+        print(f"{len(names):7d}  knobs")
+        return
     counts = []
     for path in sorted(scala_files(root)):
         with open(path, encoding="utf-8") as f:

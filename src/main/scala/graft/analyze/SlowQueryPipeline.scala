@@ -58,11 +58,7 @@ object SlowQueryPipeline {
     */
   def dataQuality(raw: DataFrame, config: AnalysisConfig): DataFrame = {
     val catalog = catalogOf(config)
-    raw
-      .select(
-        LogColumns.lex(col("message")).as("lex"),
-        LogColumns.kibanaTimestamp(col("timestamp_str")).as("timestamp"),
-        col("tags"))
+    lexed(raw)
       .select(
         when(col("lex").isNull, "not_slow_query")
           .when(col("timestamp").isNull, "bad_timestamp")
@@ -85,11 +81,7 @@ object SlowQueryPipeline {
   def parseEventsObserved(raw: DataFrame, config: AnalysisConfig)
       : (DataFrame, org.apache.spark.sql.Observation) = {
     val obs = new org.apache.spark.sql.Observation("graft_pipeline")
-    val lexed = raw.select(
-      LogColumns.lex(col("message")).as("lex"),
-      LogColumns.kibanaTimestamp(col("timestamp_str")).as("timestamp"),
-      col("tags"))
-    val observed = lexed.observe(obs,
+    val observed = lexed(raw).observe(obs,
       count(lit(1)).as("hits"),
       count(when(col("lex").isNull, 1)).as("not_slow_query"),
       count(when(col("lex").isNotNull && col("timestamp").isNull, 1))
@@ -104,14 +96,18 @@ object SlowQueryPipeline {
     * primary_key, keyspace, column_family, tags).
     */
   def parseEvents(raw: DataFrame, config: AnalysisConfig): DataFrame =
-    finishParse(
-      raw.select(
-        LogColumns.lex(col("message")).as("lex"),
-        LogColumns.kibanaTimestamp(col("timestamp_str")).as("timestamp"),
-        col("tags")),
-      catalogOf(config))
+    finishParse(lexed(raw), catalogOf(config))
 
-  /** Post-lex stages shared with [[parseEventsObserved]]. */
+  /** The lex projection every parse entry point starts from: raw hit
+    * rows (timestamp_str, message, tags) -> (lex, timestamp, tags).
+    */
+  private def lexed(raw: DataFrame): DataFrame =
+    raw.select(
+      LogColumns.lex(col("message")).as("lex"),
+      LogColumns.kibanaTimestamp(col("timestamp_str")).as("timestamp"),
+      col("tags"))
+
+  /** Post-lex stages shared by [[parseEvents]] and [[parseEventsObserved]]. */
   private def finishParse(lexed: DataFrame, catalog: SlowQueryCatalog): DataFrame = {
     lexed
       // get_log raise / strptime raise / int() raise

@@ -404,8 +404,9 @@ object Dedup {
     * min-of-k rarest-feature trick). Shingles, not tokens: the shingle
     * space is ~vocab^n, so per-shingle document frequency is low and no
     * single key can capture a corpus fraction — measured on the test
-    * corpus (SkewProbe) the max block is 0.6-1.2% of docs and SHRINKS
-    * with scale, vs 1.9-2.8% for the natural (lang, first-token) key
+    * corpus (SCALING.md "Retired probes", block-key skew) the max block
+    * is 0.6-1.2% of docs and SHRINKS with scale, vs 1.9-2.8% for the
+    * natural (lang, first-token) key
     * and 77-81% (!) for single-token min-hashes, which degenerate when
     * one frequent token draws a globally-minimal hash value. Two docs
     * are candidates when their k-min sets intersect; each candidate
@@ -747,7 +748,8 @@ object Dedup {
     // orders of magnitude smaller than the corpus that produced it —
     // that per-round planning latency dominates the actual work
     // (measured: 2.2 s/round with AQE vs 0.5-0.9 s/round without, same
-    // plan shapes, CcProbe). The loop's joins are uniform id-keyed hash
+    // plan shapes; SCALING.md "Retired probes", connected components).
+    // The loop's joins are uniform id-keyed hash
     // joins with stable per-round statistics, exactly the case static
     // planning handles; near-dup-graph skew shows up as big components
     // (handled by pointer doubling), not as hot shuffle keys.

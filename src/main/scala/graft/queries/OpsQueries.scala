@@ -914,9 +914,10 @@ object OpsQueries {
     // IVF on this corpus is data-limited (the embeddings are
     // near-uniform, so true neighbors scatter across cells and
     // E[recall] ~ nprobe/k — measured 3-10/10 even at nprobe=10/16;
-    // RecallProbe). q58 therefore runs the EXACT IVF variant —
-    // spherical triangle-inequality pruning guarantees the true top-k
-    // by construction — semi-joins it against the brute-force top-10,
+    // RECALL.md "Raw probe output"). q58 therefore runs the EXACT IVF
+    // variant — spherical triangle-inequality pruning guarantees the
+    // true top-k by construction — semi-joins it against the
+    // brute-force top-10,
     // and emits recall_at_10. The oracle re-derives the true top-10 in
     // SQL and asserts recall 10/10: a wrong pruning bound drops rows
     // AND diverges the recall column. The plain-IVF floor and the

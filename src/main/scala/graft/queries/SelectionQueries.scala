@@ -1441,8 +1441,8 @@ object SelectionQueries {
 
     // IVF cell-balance audit: occupancy of every routing cell vs the
     // uniform expectation — a skewed cell is a hot serving partition
-    // (one probe pays the whole corpus) and the number RecallProbe
-    // watches when comparing seedings. Same fixed-point Lloyd
+    // (one probe pays the whole corpus) and the cell balance RECALL.md
+    // records when comparing seedings. Same fixed-point Lloyd
     // contract (and oracle chain) as q210; the audit is one
     // assignment pass + a 4-row aggregate.
     "q224_ivf_cell_balance" -> Q(

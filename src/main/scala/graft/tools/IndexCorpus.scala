@@ -687,7 +687,7 @@ object IndexCorpus extends IndexLifecycle {
     // broadcastWave contract); larger waves keep the shuffle-join +
     // skew-grid path. The default is 64k, set by MEASUREMENT, not by
     // broadcast-size budget: the broadcast shape also forfeits the
-    // hot-bucket grid split, and GraphAppendProbe measured the
+    // hot-bucket grid split, and the append-stage probe measured the
     // crossover — at a 32k wave the broadcast shape wins (12.1 vs
     // 15.1 s pair generation at x512), at a 128k wave the skewed
     // fan-out single-threads scan tasks and loses 3.4x (117.2 vs
@@ -839,9 +839,9 @@ object IndexCorpus extends IndexLifecycle {
     // whose block-storage pin was itself a scale hazard: evictable
     // under memory pressure and avoidable, since regenerating the
     // pairs is a ~35 s map-side pass while pinning them squeezed the
-    // whole executor — GraphAppendProbe round 17): it depends only on
-    // the input wave, the LSH tables, and the new-id set, so a lost
-    // race against an INGEST (which never touches graph_ids) reuses
+    // whole executor — SCALING.md round 17 graph append): it depends
+    // only on the input wave, the LSH tables, and the new-id set, so a
+    // lost race against an INGEST (which never touches graph_ids) reuses
     // it and pays only the small merge window; the cache invalidates
     // exactly when the new-id set or the persisted build parameters
     // changed (a competing append or rebuild). nNewOut carries the

@@ -290,7 +290,7 @@ object ScaleProbe {
       // chain composes three .rdd conversions, and each re-analyzes
       // its whole lineage — over the k-branch full-schema union that
       // driver-side analysis tax is 4-8x the actual decode work with
-      // run-to-run swings (measured in graft.tools.GifProbe; the
+      // run-to-run swings (SCALING.md round-10 media probes, trap 1; the
       // same k-way-union lesson as the embedding loop's crossJoin
       // replication note). Same ids, same clips, same decode volume.
       val clipIds = spark.range(n * k).select(col("id").as("doc_id"))

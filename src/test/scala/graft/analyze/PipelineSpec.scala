@@ -78,6 +78,41 @@ class PipelineSpec extends AnyFunSuite {
     assert(m("bad_duration") == 0L)
   }
 
+  test("observed and plain parse agree, and the observation matches dataQuality") {
+    val config = AnalysisConfig(minCount = 1, schema = CqlCatalog.parse(cql))
+    val slow = "W Query too slow, took %s ms: %s"
+    val users = "[1 bound values] SELECT * FROM ks1.users WHERE user_id=?; [user_id:'u1']"
+    val f = Files.createTempFile("kibana-skips", ".json")
+    Files.writeString(f, Seq(
+        "2026-08-12T15:47:00.000000Z" -> slow.format("600", users),
+        "2026-08-12T15:47:00.500000Z" ->
+          slow.format("650", "INSERT INTO ks1.users (user_id) VALUES (1)"),
+        "2026-08-12T15:47:01.000000Z" -> "W Query too slow, and it took a while",
+        "2026-08-12 15:47:02.000000Z" -> slow.format("700", users),
+        "2026-08-12T15:47:03.000000Z" -> slow.format("n/a", users),
+        "2026-08-12T15:47:04.000000Z" -> slow.format("800", "TRUNCATE ks1.users;"))
+      .map { case (ts, msg) => s"""{"_source":{"@timestamp":"$ts","message":"$msg"}}""" }
+      .mkString("""{"responses":[{"hits":{"total":6,"hits":[""", ",", "]}}]}"))
+    def raw = KibanaReader.hits(spark, Seq(f.toString))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+
+    val (observed, obs) = SlowQueryPipeline.parseEventsObserved(raw, config)
+    val observedRows = rows(observed)
+    assert(observedRows == rows(SlowQueryPipeline.parseEvents(raw, config)))
+
+    val quality = SlowQueryPipeline.dataQuality(raw, config)
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(Seq("not_slow_query", "bad_timestamp", "bad_duration", "no_processor")
+      .forall(quality.get(_).contains(1L)), quality)
+    val m = obs.get
+    assert(m("hits") == quality.values.sum)
+    Seq("not_slow_query", "bad_timestamp", "bad_duration").foreach { k =>
+      assert(m(k) == quality(k), k)
+    }
+    assert(observedRows.length.toLong == quality("parsed"))
+    assert(observedRows.length == 2) // the SELECT and the INSERT
+  }
+
   test("driver entry smoke: flagship returns rows") {
     val df = SparkEntry.entry(spark)
     assert(df.count() > 0)

@@ -269,9 +269,9 @@ class OpsSpec extends AnyFunSuite {
     assert(pairs.contains((0L, 1L))) // identical docs
     assert(pairs.contains((0L, 3L))) // planted near-dup
     // skew bound on the real corpus: no block key may hold more than
-    // 2% of docs (SkewProbe measured 0.6-1.2%, shrinking with scale;
-    // the old (lang, first-token) key measured 1.9-2.8%, and
-    // single-token min-hashes 77-81%)
+    // 2% of docs (measured 0.6-1.2%, shrinking with scale; the old
+    // (lang, first-token) key measured 1.9-2.8%, and single-token
+    // min-hashes 77-81% — SCALING.md "Retired probes", block-key skew)
     val corpus = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val n = corpus.count()
     val maxBlock = corpus.select(explode(
@@ -629,8 +629,9 @@ class OpsSpec extends AnyFunSuite {
     exactRecalls.foreach(r => assert(r == 10, s"exact IVF lost rows: $exactRecalls"))
     // plain probe-limited IVF on this NEAR-UNIFORM corpus is
     // data-limited: E[recall] ~ nprobe/k = 2.5/10 per cell coverage;
-    // measured 3-8 (RecallProbe). The floor guards against regression
-    // to broken-assignment territory, not against the data's geometry.
+    // measured 3-8 (RECALL.md "Raw probe output"). The floor guards
+    // against regression to broken-assignment territory, not against
+    // the data's geometry.
     plainRecalls.foreach(r => assert(r >= 2, s"plain IVF recall collapsed: $plainRecalls"))
     // a full-table cache left behind would substitute
     // InMemoryTableScan into later suites' plan-shape assertions
