@@ -1,6 +1,6 @@
 #!/usr/bin/env python3
 """Count non-blank, non-comment lines of the engine's main Scala code,
-or the environment variables it reads.
+or the environment variables it reads, or list its uncalled `def`s.
 
 A line counts when it holds at least one character of code outside
 `//` line comments and `/* ... */` blocks (Scala block comments nest;
@@ -11,11 +11,18 @@ Usage:
     python3 scripts/loc.py [ROOT]        # per-file counts, then the total
     python3 scripts/loc.py --total [ROOT]
     python3 scripts/loc.py --knobs [ROOT]
+    python3 scripts/loc.py --orphans [ROOT]
 
 `--knobs` prints each distinct environment-variable name that
 `ROOT/src/main/**/*.scala` and `ROOT/build.sbt` read through
 `sys.env.get("NAME")`, `sys.env.getOrElse("NAME", ...)` or
 `sys.env.contains("NAME")`, sorted, then their count.
+
+`--orphans` prints each `def` name declared in `ROOT/src/main` whose
+name occurs nowhere else in the code (comments excluded) of
+`ROOT/src/main` or `ROOT/perfbench/src` — its callers, if any, are
+only in tests — sorted, then their count. It is a report, not a gate:
+Spark `override`s and reflection-reached members are false positives.
 
 ROOT defaults to the repository root (the directory above this script);
 files are `ROOT/src/main/**/*.scala`.
@@ -25,12 +32,18 @@ import re
 import sys
 
 ENV_READ = re.compile(r'sys\.env\.(?:get|getOrElse|contains)\(\s*"([^"]+)"')
+DEF_NAME = re.compile(r'\bdef\s+([A-Za-z_][A-Za-z0-9_]*)')
+IDENT = re.compile(r'[A-Za-z_][A-Za-z0-9_]*')
 
 
 def code_lines(text):
     """Number of lines that carry code outside comments."""
-    lines = set()
-    line = 0
+    return sum(1 for ln in code_only(text).split("\n") if ln.strip())
+
+
+def code_only(text):
+    """`text` with every comment character blanked (newlines kept)."""
+    out = list(text)
     depth = 0          # block-comment nesting depth
     in_line_comment = False
     quote = None       # None, '"', '"""' or "'"
@@ -38,26 +51,25 @@ def code_lines(text):
     while i < n:
         c = text[i]
         if c == "\n":
-            line += 1
             in_line_comment = False
             i += 1
             continue
-        if in_line_comment:
-            i += 1
-            continue
-        if depth:
-            if text.startswith("/*", i):
+        if in_line_comment or depth:
+            out[i] = " "
+            if in_line_comment:
+                i += 1
+            elif text.startswith("/*", i):
                 depth += 1
+                out[i + 1] = " "
                 i += 2
             elif text.startswith("*/", i):
                 depth -= 1
+                out[i + 1] = " "
                 i += 2
             else:
                 i += 1
             continue
         if quote:
-            if not c.isspace():
-                lines.add(line)
             if quote == '"""':
                 if text.startswith('"""', i):
                     # a run of quotes closes on its last three
@@ -76,14 +88,14 @@ def code_lines(text):
             continue
         if text.startswith("//", i):
             in_line_comment = True
+            out[i] = out[i + 1] = " "
             i += 2
             continue
         if text.startswith("/*", i):
             depth = 1
+            out[i] = out[i + 1] = " "
             i += 2
             continue
-        if not c.isspace():
-            lines.add(line)
         if text.startswith('"""', i):
             quote = '"""'
             i += 3
@@ -95,7 +107,7 @@ def code_lines(text):
             i += 1
         else:
             i += 1
-    return len(lines)
+    return "".join(out)
 
 
 def _is_char_literal(text, i):
@@ -105,12 +117,29 @@ def _is_char_literal(text, i):
     return i + 2 < len(text) and text[i + 2] == "'"
 
 
-def scala_files(root):
-    base = os.path.join(root, "src", "main")
+def scala_files(root, sub=("src", "main")):
+    base = os.path.join(root, *sub)
     for d, _, names in os.walk(base):
         for name in names:
             if name.endswith(".scala"):
                 yield os.path.join(d, name)
+
+
+def orphans(root):
+    """`def` names of main code that no main or perfbench code names again."""
+    texts = [code_only(open(p, encoding="utf-8").read())
+             for p in scala_files(root, ("src", "main"))]
+    declared = {}
+    for t in texts:
+        for name in DEF_NAME.findall(t):
+            declared[name] = declared.get(name, 0) + 1
+    uses = {}
+    for t in texts + [code_only(open(p, encoding="utf-8").read())
+                      for p in scala_files(root, ("perfbench", "src"))]:
+        for name in IDENT.findall(t):
+            if name in declared:
+                uses[name] = uses.get(name, 0) + 1
+    return sorted(n for n, k in declared.items() if uses.get(n, 0) <= k)
 
 
 def knobs(root):
@@ -126,7 +155,7 @@ def knobs(root):
 
 def main(argv):
     total_only = "--total" in argv
-    args = [a for a in argv if a not in ("--total", "--knobs")]
+    args = [a for a in argv if a not in ("--total", "--knobs", "--orphans")]
     root = args[0] if args else os.path.dirname(
         os.path.dirname(os.path.abspath(__file__)))
     if "--knobs" in argv:
@@ -134,6 +163,12 @@ def main(argv):
         for name in names:
             print(name)
         print(f"{len(names):7d}  knobs")
+        return
+    if "--orphans" in argv:
+        names = orphans(root)
+        for name in names:
+            print(name)
+        print(f"{len(names):7d}  orphans")
         return
     counts = []
     for path in sorted(scala_files(root)):

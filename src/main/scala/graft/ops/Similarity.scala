@@ -298,36 +298,12 @@ object Similarity {
     * (cluster -> centroid array) collected to the driver: centroids
     * are dimension-count-sized, never data-sized.
     *
-    * Seeding (`init`):
-    *  - `"lowest-id"` (default): the k lowest-id vectors — the
-    *    oracle-pinned deterministic mode (q38/q58 hash against it).
-    *  - `"kmpp"`: sampled k-means++ seeding over a bounded
-    *    deterministic hash-sample. One distributed pass picks the
-    *    max(k*32, 2048) sample vectors with the smallest xxhash64(id)
-    *    (a uniform pseudo-random slice, reproducible across
-    *    partitionings); D^2 sampling (probability proportional to
-    *    squared chord distance to the nearest seed, fixed-seed PRNG)
-    *    then runs driver-side on that sample — k*|sample| cosine
-    *    evaluations, microseconds next to one Lloyd pass. D^2 keeps
-    *    seeds out of already-covered clusters without the
-    *    outlier-chasing of pure farthest-first, the k-means++
-    *    O(log k)-approximation argument.
-    *  - `"kpar"`: k-means‖ (Bahmani et al., VLDB 2012) — the
-    *    scale-correct distributed seeding. Every point in the FULL
-    *    corpus participates (no driver-capped sample): each of the
-    *    few oversampling rounds draws ~2k candidates
-    *    D²-proportionally via hash-thresholding (accept iff
-    *    u(id, round) < ℓ·d²/φ — one fused max_centroid_cos scan for
-    *    φ, one for the draw), then one assignment pass weights the
-    *    O(k·rounds) candidates by the corpus mass they attract, and
-    *    weighted k-means++ reduces them to k on the driver. Only
-    *    candidate vectors (k-sized, not corpus-sized) ever reach the
-    *    driver, so seed quality no longer depends on what a bounded
-    *    sample happened to contain.
+    * Seeding: the k lowest-id vectors — the oracle-pinned
+    * deterministic mode (q38/q58 hash against it).
     */
   def ivfCentroids(embeddings: DataFrame, idCol: String, vecCol: String,
-      k: Int, iters: Int = 2, sampleMod: Int = 1,
-      init: String = "lowest-id"): Array[(Int, Array[Double])] = {
+      k: Int, iters: Int = 2, sampleMod: Int = 1)
+      : Array[(Int, Array[Double])] = {
     val dims = embeddings.select(size(col(vecCol))).head().getInt(0)
     // Lloyd refinement needs representative centroids, not the full
     // corpus: with sampleMod > 1 each iteration scans a deterministic
@@ -337,14 +313,11 @@ object Similarity {
     val refineCorpus =
       if (sampleMod <= 1) embeddings
       else embeddings.filter(pmod(xxhash64(col(idCol)), lit(sampleMod)) === 0)
-    var centroids: Array[(Int, Array[Double])] =
-      if (init == "kmpp") kmppSeeds(embeddings, idCol, vecCol, k)
-      else if (init == "kpar") kparSeeds(embeddings, idCol, vecCol, k)
-      else embeddings
-        .orderBy(col(idCol)).limit(k)
-        .select(col(vecCol)).collect()
-        .zipWithIndex
-        .map { case (r, i) => i -> r.getSeq[Float](0).toArray.map(_.toDouble) }
+    var centroids: Array[(Int, Array[Double])] = embeddings
+      .orderBy(col(idCol)).limit(k)
+      .select(col(vecCol)).collect()
+      .zipWithIndex
+      .map { case (r, i) => i -> r.getSeq[Float](0).toArray.map(_.toDouble) }
     (0 until iters).foreach { _ =>
       val assigned = assignClusters(refineCorpus, vecCol, centroids)
       val sums = assigned
@@ -365,175 +338,6 @@ object Similarity {
       }
     }
     centroids
-  }
-
-  /** Deterministic farthest-first (sampled k-means++-style) seeds:
-    * see [[ivfCentroids]]. The TopK-by-hash sample is one
-    * TakeOrderedAndProject over the corpus; everything after is
-    * driver-side on <= max(k*32, 2048) vectors.
-    */
-  private def kmppSeeds(embeddings: DataFrame, idCol: String,
-      vecCol: String, k: Int): Array[(Int, Array[Double])] = {
-    val cap = math.max(k * 32, 2048)
-    val sample: Array[Array[Double]] = embeddings
-      .select(col(vecCol), xxhash64(col(idCol)).as("_h"))
-      .orderBy(col("_h"), col(vecCol).cast("string"))
-      .limit(cap)
-      .select(col(vecCol)).collect()
-      .map(_.getSeq[Float](0).toArray.map(_.toDouble))
-    if (sample.isEmpty) return Array.empty
-    // k-means++ D^2 sampling over the sample, with the randomness
-    // made deterministic (fixed-seed PRNG over the hash-ordered
-    // sample): each next seed is drawn with probability proportional
-    // to squared chord distance 2*(1 - cos) to its nearest seed.
-    // Proper D^2 sampling beats pure farthest-first (maximin) on
-    // noisy corpora, where maximin provably walks the outliers.
-    val rnd = new scala.util.Random(42)
-    val seeds = scala.collection.mutable.ArrayBuffer(sample.head)
-    val minCos = sample.map(v => cosScalar(v, seeds.head))
-    while (seeds.size < math.min(k, sample.length)) {
-      var total = 0.0
-      var i = 0
-      while (i < sample.length) { total += 2.0 * (1.0 - minCos(i)); i += 1 }
-      var pick = 0
-      if (total > 0) {
-        val target = rnd.nextDouble() * total
-        var acc = 0.0
-        i = 0
-        var found = -1
-        while (i < sample.length && found < 0) {
-          acc += 2.0 * (1.0 - minCos(i))
-          if (acc >= target) found = i
-          i += 1
-        }
-        pick = if (found >= 0) found else sample.length - 1
-      } else pick = seeds.size % sample.length // degenerate: all identical
-      val nw = sample(pick)
-      seeds += nw
-      i = 0
-      while (i < sample.length) {
-        val c = cosScalar(sample(i), nw)
-        if (c > minCos(i)) minCos(i) = c
-        i += 1
-      }
-    }
-    seeds.toArray.zipWithIndex.map { case (v, i) => i -> v }
-  }
-
-  /** k-means‖ distributed seeding: see [[ivfCentroids]] (`init =
-    * "kpar"`). 2·rounds fused corpus scans + one weighting pass; the
-    * driver only ever holds the O(k·rounds) candidate set. Fully
-    * deterministic — the per-round acceptance coin is
-    * `pmod(xxhash64(id, round), 2^40) / 2^40`, reproducible across
-    * partitionings, and the final reduction is fixed-seed weighted
-    * k-means++.
-    */
-  private def kparSeeds(embeddings: DataFrame, idCol: String,
-      vecCol: String, k: Int, rounds: Int = 3): Array[(Int, Array[Double])] = {
-    val ell = 2 * k // oversampling factor per round (l = O(k))
-    val first = embeddings
-      .select(col(vecCol), xxhash64(col(idCol)).as("_h"))
-      .orderBy(col("_h"), col(vecCol).cast("string"))
-      .limit(1).select(col(vecCol)).collect()
-    if (first.isEmpty) return Array.empty
-    val cand = scala.collection.mutable.ArrayBuffer(
-      first.head.getSeq[Float](0).toArray.map(_.toDouble))
-    var r = 1
-    var saturated = false
-    while (r <= rounds && !saturated) {
-      val cb = cand.toArray
-      // d² = squared chord distance to the nearest candidate;
-      // greatest(..., 0) guards the cos > 1 float-noise edge
-      val d2 = greatest(lit(2.0) * (lit(1.0) -
-        graft.ops.VectorExpressions.maxCentroidCos(col(vecCol), cb)),
-        lit(0.0))
-      val phi = embeddings.select(sum(d2).as("_phi")).head().getDouble(0)
-      if (phi <= 0.0) saturated = true // every point sits ON a candidate
-      else {
-        val u = pmod(xxhash64(col(idCol), lit(r)), lit(1L << 40))
-          .cast("double") / lit((1L << 40).toDouble)
-        val drawn = embeddings
-          .select(col(idCol), col(vecCol), d2.as("_d2"))
-          .filter(u * lit(phi) < lit(ell.toDouble) * col("_d2"))
-          // expected ≤ ℓ accepts; the hash-ordered cap is a pure
-          // safety bound against adversarial distance mass
-          .orderBy(xxhash64(col(idCol)), col(vecCol).cast("string"))
-          .limit(math.max(4 * ell, 64))
-          .select(col(vecCol)).collect()
-        cand ++= drawn.map(_.getSeq[Float](0).toArray.map(_.toDouble))
-        r += 1
-      }
-    }
-    // weight each candidate by the corpus mass it attracts (one
-    // fused assignment pass; candidate-count rows come back)
-    val cb = cand.toArray
-    val weights = embeddings
-      .select(graft.ops.VectorExpressions.nearestCentroidCos(
-        col(vecCol), cb, cb.indices.toArray).as("_c"))
-      .groupBy(col("_c")).agg(count(lit(1)).as("_n")).collect()
-      .map(row => row.getInt(0) -> row.getLong(1)).toMap
-    weightedKmpp(cb, cb.indices.map(i =>
-      weights.getOrElse(i, 0L).toDouble).toArray, k)
-  }
-
-  /** Weighted k-means++ over a candidate set (driver-side, candidates
-    * only): first seed = heaviest candidate, then D²·weight
-    * proportional draws with a fixed-seed PRNG.
-    */
-  private[ops] def weightedKmpp(cand: Array[Array[Double]], w: Array[Double],
-      k: Int): Array[(Int, Array[Double])] = {
-    if (cand.isEmpty) return Array.empty
-    var firstIdx = 0
-    var i = 0
-    while (i < cand.length) { if (w(i) > w(firstIdx)) firstIdx = i; i += 1 }
-    val rnd = new scala.util.Random(42)
-    val seeds = scala.collection.mutable.ArrayBuffer(cand(firstIdx))
-    val picked = new Array[Boolean](cand.length)
-    picked(firstIdx) = true
-    val minCos = cand.map(v => cosScalar(v, seeds.head))
-    while (seeds.size < math.min(k, cand.length)) {
-      var total = 0.0
-      i = 0
-      while (i < cand.length) {
-        total += w(i) * 2.0 * (1.0 - minCos(i)); i += 1
-      }
-      var pick = 0
-      if (total > 0) {
-        val target = rnd.nextDouble() * total
-        var acc = 0.0
-        var found = -1
-        i = 0
-        while (i < cand.length && found < 0) {
-          val inc = w(i) * 2.0 * (1.0 - minCos(i))
-          acc += inc
-          // inc > 0 guard: a zero-weight candidate (already a seed,
-          // or weight 0) is a zero-probability outcome and must not
-          // be selected on the target=0 boundary
-          if (inc > 0 && acc >= target) found = i
-          i += 1
-        }
-        pick = if (found >= 0) found
-          else { val u = picked.indexWhere(p => !p)
-                 if (u >= 0) u else cand.length - 1 }
-      } else {
-        // degenerate (no spread left, e.g. all remaining weights 0):
-        // take the first UNPICKED candidate so distinct candidates
-        // never collapse into duplicate seed centroids. One always
-        // exists: picks-so-far = seeds.size < cand.length.
-        pick = picked.indexWhere(p => !p)
-        if (pick < 0) pick = seeds.size % cand.length
-      }
-      picked(pick) = true
-      val nw = cand(pick)
-      seeds += nw
-      i = 0
-      while (i < cand.length) {
-        val c = cosScalar(cand(i), nw)
-        if (c > minCos(i)) minCos(i) = c
-        i += 1
-      }
-    }
-    seeds.toArray.zipWithIndex.map { case (v, j) => j -> v }
   }
 
   /** Assign each vector to its nearest centroid (max cosine; ties to

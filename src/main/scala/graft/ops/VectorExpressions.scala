@@ -165,35 +165,6 @@ object VectorKernels {
     bestId
   }
 
-  /** Best cosine similarity between `v` and ANY codebook row — the
-    * value companion to [[nearestCentroidCos]] (which returns the
-    * argmax id). One fused pass over the codebook; feeds the D²
-    * weights of k-means‖ seeding (`d² = 2·(1 - best_cos)`), where
-    * the per-round seed set rides as a reference object and only a
-    * double leaves the kernel.
-    */
-  def maxCentroidCos(v: ArrayData, cv: Int,
-      cents: Array[Array[Double]]): Double = {
-    var best = Double.NegativeInfinity
-    var j = 0
-    while (j < cents.length) {
-      val w = cents(j)
-      val n = math.min(v.numElements(), w.length)
-      var d = 0.0; var na = 0.0; var nb = 0.0
-      var i = 0
-      while (i < n) {
-        val x = get(v, i, cv)
-        val y = w(i)
-        d += x * y; na += x * x; nb += y * y
-        i += 1
-      }
-      val c = d / (math.sqrt(na) * math.sqrt(nb))
-      if (java.lang.Double.compare(c, best) > 0) best = c
-      j += 1
-    }
-    best
-  }
-
   /** The `n` nearest codebook rows to `v` by integer squared L2,
     * as an array of centroid indices ordered exactly like
     * `row_number() OVER (ORDER BY d, j)` ranks 1..n (ties to the
@@ -565,29 +536,6 @@ case class NearestCentroidCosExpr(child: Expression,
   override def prettyName: String = "nearest_centroid_cos"
 }
 
-/** max_centroid_cos(vec): double — best cosine to any codebook row,
-  * see [[VectorKernels.maxCentroidCos]]. The codebook rides as a
-  * reference object (seed-set-sized, never shuffled).
-  */
-case class MaxCentroidCosExpr(child: Expression,
-    cents: Array[Array[Double]]) extends UnaryExpression {
-  require(cents.nonEmpty, "max_centroid_cos needs a non-empty codebook")
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def nullSafeEval(input: Any): Any =
-    VectorKernels.maxCentroidCos(input.asInstanceOf[ArrayData],
-      VectorKernels.elemCode(child.dataType), cents)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val cv = VectorKernels.elemCode(child.dataType)
-    val cRef = ctx.addReferenceObj("maxCosCentroids", cents, "double[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.ops.VectorKernels.maxCentroidCos($c, $cv, $cRef);")
-  }
-  override protected def withNewChildInternal(c: Expression): MaxCentroidCosExpr =
-    copy(child = c)
-  override def prettyName: String = "max_centroid_cos"
-}
-
 /** micros_vec(vec): array<long> — fused fixed-point view, see
   * [[VectorKernels.microsVec]].
   */
@@ -726,7 +674,4 @@ object VectorExpressions {
       ids: Array[Int]): Column =
     ColumnBridge.column(NearestCentroidCosExpr(
       ColumnBridge.expression(vec), cents, ids))
-  def maxCentroidCos(vec: Column, cents: Array[Array[Double]]): Column =
-    ColumnBridge.column(MaxCentroidCosExpr(
-      ColumnBridge.expression(vec), cents))
 }

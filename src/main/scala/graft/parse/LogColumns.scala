@@ -4,7 +4,6 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.UserDefinedFunction
 
-import graft.catalog.CqlCatalog
 import graft.model.QueryPattern
 
 /** Column-expression library replicating the reference's hand-rolled
@@ -15,20 +14,11 @@ import graft.model.QueryPattern
   *
   * All positions are 1-based (Spark `locate`); the reference's 0-based
   * pointer arithmetic (analyze_slow_queries.py:939-983) is translated
-  * index-by-index in [[lex]].
+  * index-by-index in [[lex]]. Classification, table extraction,
+  * keyspace and primary key resolve in the fused [[EnrichSlowQuery]]
+  * node through [[SlowQueryCatalog]]'s kernels.
   */
 object LogColumns {
-
-  /** F1 — substring strictly between the first `before` and the next
-    * `after`; null if either is missing (analyze_slow_queries.py:295-316).
-    */
-  def strSlice(c: Column, before: String, after: String): Column = {
-    val p1 = locate(before, c)
-    val from = p1 + lit(before.length)
-    val rest = substring_pos(c, from)
-    val e1 = locate(after, rest)
-    when(p1 > 0 && e1 > 0, rest.substr(lit(1), e1 - 1))
-  }
 
   /** substring(str, pos) to end-of-string with a Column position. */
   private def substring_pos(c: Column, pos: Column): Column =
@@ -75,100 +65,6 @@ object LogColumns {
     */
   def boundValuesMap(bv: Column): Column =
     when(bv.isNotNull, map_from_entries(boundValueEntries(bv)))
-
-  /** C1 — ordered first-match processor dispatch
-    * (analyze_slow_queries.py:892-898 with handles() at
-    * :620,585,712,787,822). Case pairs exactly as the reference: only
-    * all-upper or all-lower prefixes match.
-    */
-  def classify(q: Column): Column =
-    when(q.startsWith("SELECT") || q.startsWith("select"), "SELECT")
-      .when(q.startsWith("BEGIN BATCH") || q.startsWith("begin batch"), "BATCH")
-      .when(q.startsWith("INSERT") || q.startsWith("insert"), "INSERT")
-      .when(q.startsWith("DELETE") || q.startsWith("delete"), "DELETE")
-      .when(q.startsWith("UPDATE") || q.startsWith("update"), "UPDATE")
-      .otherwise(lit(null).cast("string"))
-
-  /** F4 — SELECT table segment with the reference's four probes
-    * (analyze_slow_queries.py:674-694).
-    */
-  def selectTable(q: Column): Column =
-    coalesce(
-      strSlice(q, " FROM ", " "),
-      strSlice(q, " from ", " "),
-      strSlice(q, " FROM ", ";"),
-      strSlice(q, " from ", ";"))
-
-  /** F5 — INSERT table segment (analyze_slow_queries.py:754-769). */
-  def insertTable(q: Column): Column =
-    coalesce(
-      strSlice(q, "INSERT INTO ", " "),
-      strSlice(q, "insert into ", " "))
-
-  /** F6 + J1 — resolve (keyspace, column_family) from a table segment
-    * (analyze_slow_queries.py:506-567).
-    *
-    * Returns struct(keyspace, column_family, invalid): `invalid` is
-    * true when the segment has >1 dot — the reference's 2-ary tuple
-    * unpack raises there and the whole row is skipped
-    * (analyze_slow_queries.py:521 via :1299).
-    *
-    * Keyspace guess order, exactly as the reference:
-    *  1. if config.tags nonempty AND cf unknown-or-ambiguous in the
-    *     CF index: first log tag present in config.tags -> its keyspace
-    *  2. else CF index value (which may be the "unknown" sentinel)
-    *  3. else null
-    */
-  def keyspaceCf(
-      table: Column,
-      tags: Column,
-      cfKs: Map[String, String],
-      tagKs: Map[String, String]): Column = {
-    val parts = split(table, "\\.")
-    val dotted = instr(table, ".") > 0
-    val invalid = dotted && size(parts) =!= 2
-    val ksDot = lower(parts.getItem(0))
-    val cfDot = lower(parts.getItem(1))
-    val cfPlain = lower(table)
-
-    val cfKsLit =
-      if (cfKs.isEmpty) map().cast("map<string,string>") else typedLit(cfKs)
-    val tagKsLit =
-      if (tagKs.isEmpty) map().cast("map<string,string>") else typedLit(tagKs)
-    val idxVal = try_element_at(cfKsLit, cfPlain)
-    val tagHit = try_element_at(filter(coalesce(tags, array().cast("array<string>")),
-      t => try_element_at(tagKsLit, t).isNotNull), lit(1))
-    val guessed =
-      if (tagKs.isEmpty) idxVal
-      else when((idxVal.isNull || idxVal === CqlCatalog.UnknownKeyspace) && tagHit.isNotNull,
-          try_element_at(tagKsLit, tagHit))
-        .otherwise(idxVal)
-
-    struct(
-      when(dotted, ksDot).otherwise(guessed).as("keyspace"),
-      when(dotted, cfDot).otherwise(cfPlain).as("column_family"),
-      invalid.as("invalid"))
-  }
-
-  /** F7 + J2 — primary-key value concatenation
-    * (analyze_slow_queries.py:478-504): look each partition-key column
-    * up in the bound values, SKIP missing components, join with '-'.
-    * No schema entry for (ks, cf) -> null (distinct from "" = schema
-    * present but nothing matched).
-    */
-  def primaryKey(
-      bvMap: Column,
-      ks: Column,
-      cf: Column,
-      pkIndex: Map[String, Seq[String]]): Column = {
-    if (pkIndex.isEmpty) return lit(null).cast("string")
-    val pkLit = typedLit(pkIndex)
-    val pkCols = try_element_at(pkLit, concat(ks, lit(CqlCatalog.KeySep), cf))
-    val values = filter(
-      transform(pkCols, f => try_element_at(bvMap, f)),
-      v => v.isNotNull)
-    when(pkCols.isNotNull, array_join(values, "-"))
-  }
 
   /** F8 — pattern normalization for queries without bound markers
     * (analyze_slow_queries.py:842-889). Genuinely imperative — the

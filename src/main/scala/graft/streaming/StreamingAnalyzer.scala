@@ -1,8 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured-Streaming upgrades of the batch reports (SURVEY.md
   * §2.10): the reference is batch-only, but its per-minute volume
@@ -141,53 +140,6 @@ object StreamingAnalyzer {
       .withWatermark(watermarkCol, delay)
       .dropDuplicatesWithinWatermark(keyCols.head, keyCols.tail: _*)
 
-  /** Input/output rows for the streaming near-dup suppressor. */
-  case class SigDoc(docId: Long, band: Long, sig0: Long, sig1: Long, tsMillis: Long)
-  case class NearDupVerdict(docId: Long, dup: Boolean, dupOf: Long)
-
-  /** Streaming near-dup suppression, LSH-style: docs are keyed by a
-    * SimHash band value; within a bucket, a doc whose 120-bit
-    * signature is within `maxDist` of an ALREADY-ADMITTED doc is
-    * marked dup (with the admitted doc's id), otherwise admitted and
-    * added to the bucket state. Single-band recall is p_band per pair
-    * (the q56 pigeonhole math); chain L band-keyed passes for the
-    * OR-construction, exactly as in the batch operators.
-    *
-    * State is bounded two ways: per-bucket admitted list capped at
-    * `maxPerBucket` (oldest evicted first — a streaming index, not an
-    * archive), and processing within a micro-batch is ordered by
-    * (tsMillis, docId) so results don't depend on partition arrival
-    * order.
-    */
-  def nearDupSuppressStream(docs: Dataset[SigDoc], maxDist: Int,
-      maxPerBucket: Int = 64)(
-      implicit enc: org.apache.spark.sql.Encoder[NearDupVerdict]): Dataset[NearDupVerdict] = {
-    import docs.sparkSession.implicits._
-    docs
-      .groupByKey(_.band)
-      .flatMapGroupsWithState[List[(Long, Long, Long)], NearDupVerdict](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        case (_, it, state: GroupState[List[(Long, Long, Long)]]) =>
-          var admitted = state.getOption.getOrElse(Nil)
-          val out = scala.collection.mutable.ArrayBuffer.empty[NearDupVerdict]
-          it.toSeq.sortBy(d => (d.tsMillis, d.docId)).foreach { d =>
-            val hit = admitted.find { case (_, s0, s1) =>
-              java.lang.Long.bitCount(s0 ^ d.sig0) +
-                java.lang.Long.bitCount(s1 ^ d.sig1) <= maxDist
-            }
-            hit match {
-              case Some((id, _, _)) =>
-                out += NearDupVerdict(d.docId, dup = true, dupOf = id)
-              case None =>
-                out += NearDupVerdict(d.docId, dup = false, dupOf = d.docId)
-                admitted = ((d.docId, d.sig0, d.sig1) :: admitted).take(maxPerBucket)
-            }
-          }
-          state.update(admitted)
-          out.iterator
-      }
-  }
-
   /** Streaming n-gram decontamination: incoming docs are checked
     * against a STATIC test-set gram table via a stream-static
     * left-semi join (the static side broadcasts; no stream-side state
@@ -203,42 +155,4 @@ object StreamingAnalyzer {
       explode(graft.ops.TextOps.ngramsDistinct(col(textCol), n)).as("gram"))
       .join(testGrams, Seq("gram"), "left_semi")
       .groupBy(col(idCol)).agg(count(lit(1)).as("n_hits"))
-
-  /** Event for the stateful session op. */
-  case class SessionEvent(userId: Long, tsMillis: Long, duration: Long)
-  case class SessionUpdate(userId: Long, sessionStart: Long, events: Long, totalDuration: Long)
-
-  /** Custom per-key state: gap-based session aggregation via
-    * flatMapGroupsWithState. Emits one update per session TOUCHED in
-    * the batch — every session closed by a gap inside the batch gets
-    * its final aggregate, and the still-open session gets its current
-    * state (a mapGroups variant that returns only the last state
-    * would silently drop sessions opened and closed within one
-    * micro-batch).
-    */
-  def sessionize(events: Dataset[SessionEvent], gapMillis: Long)(
-      implicit enc1: org.apache.spark.sql.Encoder[SessionUpdate]): Dataset[SessionUpdate] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.userId)
-      .flatMapGroupsWithState[(Long, Long, Long, Long), SessionUpdate](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        case (userId, it, state: GroupState[(Long, Long, Long, Long)]) =>
-          val sorted = it.toSeq.sortBy(_.tsMillis)
-          var (start, last, n, total) =
-            state.getOption.getOrElse((Long.MaxValue, 0L, 0L, 0L))
-          val out = scala.collection.mutable.ArrayBuffer.empty[SessionUpdate]
-          sorted.foreach { e =>
-            if (n > 0 && e.tsMillis - last > gapMillis) {
-              out += SessionUpdate(userId, start, n, total) // session closed
-              n = 0; total = 0
-            }
-            if (n == 0) start = e.tsMillis
-            last = e.tsMillis; n += 1; total += e.duration
-          }
-          state.update((start, last, n, total))
-          if (n > 0) out += SessionUpdate(userId, start, n, total) // open session
-          out.iterator
-      }
-  }
 }

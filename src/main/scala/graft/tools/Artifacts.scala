@@ -56,10 +56,9 @@ import org.apache.spark.sql.functions._
   *     concurrently-served index needs; size N to cover the longest
   *     reader, as any snapshot-versioned table format does.
   *
-  * Legacy (round-12 and earlier) indexes — flat `idx/name` dirs, no
-  * manifest — stay READABLE ([[read]] falls back to the flat path) so
-  * persisted artifacts from previous builds keep serving; mutation of
-  * a legacy index is refused rather than half-migrated.
+  * Every read resolves its segments from a manifest: a directory
+  * without one is not an index, and reads of it raise "has no
+  * artifact manifest".
   *
   * MULTI-WRITER contract (round 14, hardened round 15): commits are
   * OPTIMISTIC-CONCURRENCY safe ON STORES WITH AN ATOMIC
@@ -407,30 +406,28 @@ object Artifacts {
   def segmentsOf(spark: SparkSession, idx: String, name: String): Seq[String] =
     currentManifest(spark, idx).flatMap(_._2.get(name)).getOrElse(Seq.empty)
 
-  /** Does the artifact exist (manifest entry, or legacy flat dir)? */
+  /** Does the current manifest list segments for the artifact? */
   def exists(spark: SparkSession, idx: String, name: String): Boolean =
-    currentManifest(spark, idx) match {
-      case Some((_, m)) => m.get(name).exists(_.nonEmpty)
-      case None         => fs(spark, idx).exists(new Path(s"$idx/$name"))
-    }
+    currentManifest(spark, idx).exists(_._2.get(name).exists(_.nonEmpty))
 
-  private def hasManifest(spark: SparkSession, idx: String): Boolean =
-    currentManifest(spark, idx).isDefined
+  /** Segment dirs of `name` per the current (or pinned) manifest; raises
+    * naming the cause when the index has no manifest or the manifest
+    * does not list the artifact.
+    */
+  private def manifestSegs(spark: SparkSession, idx: String,
+      name: String): Seq[String] = {
+    val (_, m) = currentManifest(spark, idx).getOrElse(
+      sys.error(s"$idx has no artifact manifest"))
+    m.getOrElse(name, sys.error(s"artifact $name not in manifest of $idx"))
+  }
 
   /** Read an artifact: the union of its manifest segments (explicit
     * paths + basePath, so `seg` and any bucket key surface as
     * partition columns — `seg` is dropped, bucket keys normalized to
-    * long). Falls back to the flat legacy dir when the index has no
-    * manifest. Zero-segment artifacts raise — callers gate on
-    * [[exists]].
+    * long). Zero-segment artifacts raise — callers gate on [[exists]].
     */
   def read(spark: SparkSession, idx: String, name: String): DataFrame =
-    currentManifest(spark, idx) match {
-      case None => normalize(spark.read.parquet(s"$idx/$name"))
-      case Some((_, m)) =>
-        readSegs(spark, idx, name, m.getOrElse(name,
-          sys.error(s"artifact $name not in manifest of $idx")))
-    }
+    readSegs(spark, idx, name, manifestSegs(spark, idx, name))
 
   /** Read an explicit segment list of an artifact (the working-state
     * form mutating commands use for segments they wrote but have not
@@ -522,10 +519,9 @@ object Artifacts {
     * other way for metadata-class state — a bounded catalog file is
     * exactly what a driver SHOULD read itself, the way snapshot table
     * formats read their commit metadata. Resolution is identical to
-    * [[read]]: current manifest honoring [[withPinned]], legacy flat
-    * dir fallback. `cols` selects fields by name; values come back as
-    * Long (INT64/INT32), String (BINARY/UTF8) or Double, null for an
-    * absent field.
+    * [[read]]: current manifest honoring [[withPinned]]. `cols`
+    * selects fields by name; values come back as Long (INT64/INT32),
+    * String (BINARY/UTF8) or Double, null for an absent field.
     *
     * MEMOIZED per session like [[readSegs]]' frames, keyed by (artifact
     * root, sorted segment list, `cols`): a committed segment dir is
@@ -535,26 +531,20 @@ object Artifacts {
     * footer open plus a recursive part-file listing per artifact only
     * the first time; later resolutions read the manifest and nothing
     * else. `--at` pinning needs nothing extra: the pinned manifest's
-    * segment list is the key. Never memoized: legacy flat dirs (no
-    * manifest, so no immutable segment list) and a listed segment with
-    * no part file (a committed segment always holds one, so it was
+    * segment list is the key. Never memoized: a listed segment with no
+    * part file (a committed segment always holds one, so it was
     * deleted under us). Rows are immutable; the public forms below
     * copy them out.
     */
   private def smallRows(spark: SparkSession, idx: String, name: String,
       segsOpt: Option[Seq[String]], cols: Seq[String]): Seq[IndexedSeq[Any]] = {
     val root = s"$idx/$name"
-    segsOpt.orElse(currentManifest(spark, idx).map(_._2.getOrElse(name,
-        sys.error(s"artifact $name not in manifest of $idx")))) match {
-      case Some(segs) =>
-        require(segs.nonEmpty, s"artifact $name has no segments in $idx")
-        rowMemo.getOrElseUpdate(spark, root, segs, cols) {
-          val f = fs(spark, idx)
-          val parts = segs.map(s => listPartFiles(f, new Path(s"$root/$s")))
-          (readRows(spark, name, parts.flatten, cols), parts.forall(_.nonEmpty))
-        }
-      case None => // legacy flat index
-        readRows(spark, name, listPartFiles(fs(spark, idx), new Path(root)), cols)
+    val segs = segsOpt.getOrElse(manifestSegs(spark, idx, name))
+    require(segs.nonEmpty, s"artifact $name has no segments in $idx")
+    rowMemo.getOrElseUpdate(spark, root, segs, cols) {
+      val f = fs(spark, idx)
+      val parts = segs.map(s => listPartFiles(f, new Path(s"$root/$s")))
+      (readRows(spark, name, parts.flatten, cols), parts.forall(_.nonEmpty))
     }
   }
 
@@ -645,20 +635,13 @@ object Artifacts {
     * rewrite) purely to report sizes — at 100 TB a second full pass
     * over the corpus per compact. Exactness is parquet's contract
     * (the footer count is what a scan would return); segment
-    * resolution is identical to [[read]] (current/pinned manifest,
-    * legacy flat fallback).
+    * resolution is identical to [[read]] (current/pinned manifest).
     */
   def countRows(spark: SparkSession, idx: String, name: String): Long = {
     val f = fs(spark, idx)
-    val root = s"$idx/$name"
-    val dirs: Seq[Path] = currentManifest(spark, idx) match {
-      case Some((_, m)) => m.getOrElse(name,
-          sys.error(s"artifact $name not in manifest of $idx"))
-        .map(s => new Path(s"$root/$s"))
-      case None => Seq(new Path(root))
-    }
     val conf = spark.sparkContext.hadoopConfiguration
-    dirs.flatMap(d => listPartFiles(f, d)).map { p =>
+    manifestSegs(spark, idx, name).flatMap(s =>
+        listPartFiles(f, new Path(s"$idx/$name/$s"))).map { p =>
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
       try reader.getRecordCount
@@ -1940,12 +1923,10 @@ object Artifacts {
     (listed, missing)
   }
 
-  /** Guard for mutating commands: a manifest must exist (new-layout
-    * index). Legacy flat indexes are read-only under this layer.
-    */
+  /** Guard for mutating commands: a manifest must exist. */
   def requireManifest(spark: SparkSession, idx: String): Unit =
-    require(hasManifest(spark, idx),
-      s"$idx has no artifact manifest (legacy flat index — rebuild to mutate)")
+    require(currentManifest(spark, idx).isDefined,
+      s"$idx has no artifact manifest (build the index before mutating it)")
 
   /** Append-style write inside a command: write `df` as a new segment
     * of `name` and return the pending map with it appended to the

@@ -137,21 +137,14 @@ object IndexCorpus extends IndexLifecycle {
 
   /** Restrict a cell-keyed frame to the probed cells: the bucket
     * column prunes directories (PartitionFilters), the cell column
-    * prunes row groups within them. Legacy frames lacking either
-    * column just skip that level.
+    * prunes row groups within them.
     */
   private def restrictCells(df: DataFrame, cells: Seq[Long],
-      buckets: Long): DataFrame = {
-    val withCb =
-      if (df.schema.fieldNames.contains("cb"))
-        df.filter(col("cb").isin(cells
-          .map(c => Long.box(((c % buckets) + buckets) % buckets))
-          .distinct: _*))
-      else df
-    if (withCb.schema.fieldNames.contains("cell"))
-      withCb.filter(col("cell").isin(cells.map(Long.box): _*))
-    else withCb
-  }
+      buckets: Long): DataFrame =
+    df.filter(col("cb").isin(cells
+        .map(c => Long.box(((c % buckets) + buckets) % buckets))
+        .distinct: _*))
+      .filter(col("cell").isin(cells.map(Long.box): _*))
 
   private def cellBucketsOf(spark: SparkSession, idx: String): Long =
     summaryVal(spark, idx, "cbuckets").getOrElse(cellBuckets)
@@ -1251,8 +1244,7 @@ object IndexCorpus extends IndexLifecycle {
     // restriction is a literal partition predicate — whole cell
     // directories prune before any file opens (the round-13 upgrade
     // of round 12's row-group pruning). The id-level semi join below
-    // still applies the stratum filter and the tombstone retraction;
-    // legacy cell-less artifacts just skip the scan-level restriction.
+    // still applies the stratum filter and the tombstone retraction.
     def cellRestrict(df: DataFrame): DataFrame =
       restrictCells(df, probedCells, cbN).drop("cell", "cb")
     val books = codebookArrays(spark, idx).zipWithIndex.flatMap {
@@ -1695,21 +1687,18 @@ object IndexCorpus extends IndexLifecycle {
       .join(routed, Seq("cell"))
       .filter(col("id") =!= col("pid"))
       .select(col("pid"), col("id"))
-    // Per-hop single-execution loop (round 18, VERDICT item 1). The
-    // previous shape ran `newScores.isEmpty` as its own action and
-    // ALSO materialized the (lazy) checkpoint of the union in the
-    // next hop — the whole expand+score plan executed roughly TWICE
-    // per hop. Now each hop materializes the checkpointed union once
-    // (count() over the lazily-checkpointed frame computes the plan,
-    // pins the blocks, and returns the row total in one job); the
-    // frontier is dead exactly when the union added no rows, since
-    // `fresh` anti-joins the visited set — same rows, half the
-    // executions, one job per hop.
+    // Per-hop single-execution loop: each hop checkpoints and counts
+    // only the newly scored pairs — one job, since count() over the
+    // lazily-checkpointed frame computes the plan and pins the blocks.
+    // The frontier is dead when none were scored (`fresh` anti-joins
+    // the visited set); otherwise they union onto the already-
+    // checkpointed visited frames, so no hop re-materializes the rows
+    // earlier hops pinned.
     var visited = graft.Scratch.localCheckpoint(
       scoreIds(seedCand)
         .withColumn("rn", row_number().over(wBeam))
         .filter(col("rn") <= beam).drop("rn"))
-    var visCount = visited.count()
+    visited.count() // materializes the seed beam once
     val graphDf = Artifacts.read(spark, idx, "knn_graph")
     var hop = 0
     var frontierLive = true
@@ -1725,13 +1714,10 @@ object IndexCorpus extends IndexLifecycle {
         .filter(col("id") =!= col("pid"))
         .join(visited.select(col("pid"), col("id")),
           Seq("pid", "id"), "left_anti")
-      val next = graft.Scratch.localCheckpoint(
-        visited.unionByName(scoreIds(fresh)))
-      val nextCount = next.count()
-      if (nextCount == visCount) frontierLive = false
+      val scored = graft.Scratch.localCheckpoint(scoreIds(fresh))
+      if (scored.count() == 0) frontierLive = false
       else {
-        visited = next
-        visCount = nextCount
+        visited = visited.unionByName(scored)
         hop += 1
       }
     }

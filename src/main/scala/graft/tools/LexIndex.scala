@@ -249,7 +249,7 @@ object LexIndex extends IndexLifecycle {
 
     val stats0 = Artifacts.collectKV(spark, idx, "stats")
     val gram = stats0("gram").toInt
-    val buckets = stats0.getOrElse("buckets", 16L)
+    val buckets = stats0("buckets")
     // localCheckpoint cuts lineage back to the artifacts this command
     // supersedes (same discipline as IndexCorpus.update). Dedup
     // against the docids MANIFEST, not doclens: a zero-token document
@@ -385,8 +385,7 @@ object LexIndex extends IndexLifecycle {
     */
   protected def compactPlan(spark: SparkSession, idx: String,
       thresholdPm: Option[Long]): Seq[(String, Boolean, Option[Artifacts.Bucket])] = {
-    val buckets = Artifacts.collectKV(spark, idx, "stats")
-      .getOrElse("buckets", 16L)
+    val buckets = Artifacts.collectKV(spark, idx, "stats")("buckets")
     Seq(("postings", true, Some(termBucket(buckets))), ("doclens", true, None)) ++
       (if (thresholdPm.isEmpty) Seq(("docids", false, None)) else Nil)
   }
@@ -423,7 +422,7 @@ object LexIndex extends IndexLifecycle {
     val toktot = agg.getLong(1)
     Seq(("n", n), ("toktot", toktot),
       ("avgdl", if (n > 0) toktot / n else 0L), ("gram", stats0("gram")),
-      ("buckets", stats0.getOrElse("buckets", 16L)))
+      ("buckets", stats0("buckets")))
       .toDF("key", "value").coalesce(1)
   }
 
@@ -464,7 +463,7 @@ object LexIndex extends IndexLifecycle {
     val n = stats("n")
     val avgdl = stats("avgdl")
     val gram = stats("gram").toInt
-    val buckets = stats.getOrElse("buckets", 16L)
+    val buckets = stats("buckets")
     // tokenize the query string ON THE DRIVER with the same kernel
     // the index used (round 17: the previous shape ran a one-row
     // Spark job per search just to split a query string — pure
@@ -478,11 +477,8 @@ object LexIndex extends IndexLifecycle {
       // a query shorter than the gram has no terms, hence no candidates
       return spark.range(0).select(col("id"), col("id").as("score"))
     val tbs = terms.map(t => Long.box(termBucketOf(t, buckets))).distinct
-    val postingsAll = Artifacts.read(spark, idx, "postings")
-    val qPost0 = (
-      if (postingsAll.schema.fieldNames.contains("tb"))
-        postingsAll.filter(col("tb").isin(tbs: _*))
-      else postingsAll)
+    val qPost0 = Artifacts.read(spark, idx, "postings")
+      .filter(col("tb").isin(tbs: _*))
       .filter(col("t").isin(terms: _*))
     val qPost = graft.Scratch.cache(
       if (Artifacts.exists(spark, idx, "tombstones"))
@@ -503,15 +499,9 @@ object LexIndex extends IndexLifecycle {
     // never the whole index. The expression sees the posting columns
     // (id, t, tf, dl).
     val cand = filterSql.fold(qPost: DataFrame)(f => qPost.filter(expr(f)))
-    // current indexes carry dl inside the posting rows — the score
-    // derives from the searched lists alone; a legacy (pre-dl) index
-    // pays the doclens join it was built with
-    val scored =
-      if (postingsAll.schema.fieldNames.contains("dl"))
-        cand.join(dfq, Seq("t"))
-      else cand.join(dfq, Seq("t"))
-        .join(Artifacts.read(spark, idx, "doclens"), Seq("id"))
-    scored
+    // the posting rows carry dl — the score derives from the searched
+    // lists alone
+    cand.join(dfq, Seq("t"))
       .withColumn("term", expr(
         s"idf * 22000 * tf * $avgdl DIV " +
           s"(10*tf*$avgdl + 3*$avgdl + 9*dl)"))
@@ -583,7 +573,7 @@ object LexIndex extends IndexLifecycle {
     val n = stats("n")
     val avgdl = stats("avgdl")
     val gram = stats("gram").toInt
-    val buckets = stats.getOrElse("buckets", 16L)
+    val buckets = stats("buckets")
 
     val qTerms = graft.Scratch.cache(queriesOpt
       .getOrElse(spark.read.parquet(in))
@@ -603,13 +593,11 @@ object LexIndex extends IndexLifecycle {
       .limit(maxInline + 1).collect()
     val inline = termRows.length <= maxInline
     val postingsAll = Artifacts.read(spark, idx, "postings")
-    val bucketed = postingsAll.schema.fieldNames.contains("tb")
     // (query, term) pair total for the broadcast cap: exact from the
     // inline term rows; past the cap it rides the bucket-union job
     var nPairs = termRows.map(_.getLong(2)).sum
     val scanned0 =
-      if (!bucketed) postingsAll
-      else if (inline)
+      if (inline)
         postingsAll.filter(col("tb").isin(
           termRows.map(r => Long.box(r.getLong(1))).distinct.toSeq: _*))
       else {
@@ -622,10 +610,6 @@ object LexIndex extends IndexLifecycle {
         postingsAll.filter(col("tb").isin(
           r.getSeq[Long](0).map(Long.box).toSeq: _*))
       }
-    // legacy (un-bucketed) index past the inline cap: the truncated
-    // term probe cannot give the exact pair total — fall back to the
-    // explicit count rather than under-feed the broadcast cap
-    if (!inline && !bucketed) nPairs = qTerms.count()
     val scanned =
       if (inline) scanned0.filter(col("t").isin(
         termRows.map(_.getString(0)).toSeq: _*))
@@ -645,18 +629,12 @@ object LexIndex extends IndexLifecycle {
         (length(conv(expr(s"$n DIV df"), 10, 2)) - 1).cast("long"))
       .filter(col("idf") > 0)
       .select(col("t"), col("idf"))
-    // legacy (pre-dl) indexes stay servable at batch scale too: the
-    // same doclens-join fallback the single-query path keeps
-    val qPostDl0 =
-      if (postingsAll.schema.fieldNames.contains("dl")) qPost
-      else qPost.join(Artifacts.read(spark, idx, "doclens"), Seq("id"))
     // --filter: candidates only, after df — the single-query contract
-    val qPostDl = flags.get("filter")
-      .fold(qPostDl0)(f => qPostDl0.filter(expr(f)))
+    val cand = flags.get("filter").fold(qPost)(f => qPost.filter(expr(f)))
     val probeSide =
       if (nPairs <= maxBcast) broadcast(qTerms)
       else qTerms.hint("merge")
-    val scored = qPostDl.join(probeSide, Seq("t"))
+    val scored = cand.join(probeSide, Seq("t"))
       .join(broadcast(dfq), Seq("t"))
       .withColumn("term", expr(
         s"idf * 22000 * tf * $avgdl DIV " +

@@ -501,71 +501,20 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("kmpp seeding: deterministic, and spreads seeds across clusters where lowest-id cannot") {
+  test("lowest-id seeding: the k lowest-id vectors seed the cells") {
     import spark.implicits._
     // four tight direction-clusters; ids ordered so the k=4 LOWEST-ID
-    // seeds all fall in cluster 0 — the adversarial case the
-    // farthest-first init exists for
+    // seeds all fall in cluster 0
     val vecs = (0 until 40).map { i =>
       val axis = i / 10
       val v = Array.fill(4)(0.05f * ((i * 7 % 3) - 1))
       v(axis) = 1.0f
       (i.toLong, v)
     }.toDF("vec_id", "embedding")
-    def seeds() = Similarity.ivfCentroids(vecs, "vec_id", "embedding",
-      k = 4, iters = 0, init = "kmpp")
-    val a = seeds(); val b = seeds()
-    assert(a.map(_._2.toSeq).toSeq == b.map(_._2.toSeq).toSeq, "not deterministic")
-    // each kmpp seed points along a DIFFERENT axis = one per cluster
-    val axes = a.map { case (_, v) => v.indexOf(v.max) }.toSet
-    assert(axes == Set(0, 1, 2, 3), s"kmpp seeds not spread: ${axes}")
     // lowest-id seeds (iters=0) all sit in cluster 0 on this layout
     val low = Similarity.ivfCentroids(vecs, "vec_id", "embedding",
       k = 4, iters = 0)
     assert(low.map { case (_, v) => v.indexOf(v.max) }.toSet == Set(0))
-  }
-
-  test("kpar (k-means‖) seeding: deterministic, spreads seeds across " +
-    "clusters with NO driver-capped sample, and max_centroid_cos " +
-    "matches per-centroid cosine") {
-    import spark.implicits._
-    val vecs = (0 until 40).map { i =>
-      val axis = i / 10
-      val v = Array.fill(4)(0.05f * ((i * 7 % 3) - 1))
-      v(axis) = 1.0f
-      (i.toLong, v)
-    }.toDF("vec_id", "embedding")
-    def seeds() = Similarity.ivfCentroids(vecs, "vec_id", "embedding",
-      k = 4, iters = 0, init = "kpar")
-    val a = seeds(); val b = seeds()
-    assert(a.map(_._2.toSeq).toSeq == b.map(_._2.toSeq).toSeq, "not deterministic")
-    assert(a.length == 4)
-    val axes = a.map { case (_, v) => v.indexOf(v.max) }.toSet
-    assert(axes == Set(0, 1, 2, 3), s"kpar seeds not spread: ${axes}")
-    // the fused best-cosine kernel == max over per-centroid cosine_sim
-    val cb = a.map(_._2)
-    val rows = vecs.select(col("embedding"),
-      graft.ops.VectorExpressions.maxCentroidCos(col("embedding"), cb)
-        .as("fused"),
-      greatest(cb.map(c => Similarity.cosine(col("embedding"),
-        typedLit(c.toSeq))): _*).as("manual")).collect()
-    rows.foreach(r => assert(math.abs(r.getDouble(1) - r.getDouble(2)) < 1e-12))
-  }
-
-  test("weightedKmpp degenerate branch (all remaining weights 0) " +
-    "picks distinct unpicked candidates, never duplicate seeds") {
-    // firstIdx = 2 (only positive weight); every later round has
-    // total weight 0, so the degenerate branch fires each time —
-    // the old seeds.size % cand.length arithmetic re-picked index 2
-    val cand = Array(
-      Array(1.0, 0.0, 0.0),
-      Array(0.0, 1.0, 0.0),
-      Array(0.0, 0.0, 1.0))
-    val w = Array(0.0, 0.0, 5.0)
-    val seeds = Similarity.weightedKmpp(cand, w, k = 3)
-    assert(seeds.length == 3)
-    assert(seeds.map(_._2.toSeq).distinct.length == 3,
-      s"duplicate seeds: ${seeds.map(_._2.toSeq).toSeq}")
   }
 
   test("filtered IVF probe: pre-filter returns the exact filtered " +

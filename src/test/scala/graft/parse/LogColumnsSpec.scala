@@ -5,10 +5,12 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.GraftSession
+import graft.analyze.SlowQueryPipeline
 import graft.model.QueryPattern
 
-/** Golden tests for the F1/F2/F3/F8 parsers. Expected values were
-  * produced by exercising the reference parser's semantics
+/** Golden tests for the F1/F2/F3/F8 parsers and the processor
+  * dispatch. Expected values were produced by exercising the
+  * reference parser's semantics
   * (analyze_slow_queries.py:939-983,454-476,858-886) on each input,
   * pinning every quirk: trailing ';' kept in query text, the
   * "; [" vs "] [" bound-section fallback, strip-ALL-quotes values,
@@ -104,20 +106,19 @@ class LogColumnsSpec extends AnyFunSuite {
   }
 
   test("strSlice matches find/slice semantics") {
-    val df = Seq("SELECT a FROM tbl WHERE x=1;").toDF("q")
-    val got = df.select(
-      LogColumns.strSlice(col("q"), " FROM ", " ").as("a"),
-      LogColumns.strSlice(col("q"), " FROM ", ";").as("b"),
-      LogColumns.strSlice(col("q"), "ZZZ", " ").as("c")).head()
-    assert(got.getAs[String]("a") == "tbl")
-    assert(got.getAs[String]("b") == "tbl WHERE x=1")
-    assert(got.get(2) == null)
+    val q = "SELECT a FROM tbl WHERE x=1;"
+    assert(SlowQueryCatalog.strSlice(q, " FROM ", " ") == "tbl")
+    assert(SlowQueryCatalog.strSlice(q, " FROM ", ";") == "tbl WHERE x=1")
+    assert(SlowQueryCatalog.strSlice(q, "ZZZ", " ") == null)
   }
 
   test("classify: case pairs and precedence") {
+    val empty = SlowQueryCatalog(Map.empty, Map.empty, Map.empty, Nil)
     val df = Seq("SELECT 1", "select 1", "Select 1", "BEGIN BATCH x",
       "begin batch x", "INSERT INTO t", "DELETE FROM t", "UPDATE t", "TRUNCATE t")
-      .toDF("q").select(col("q"), LogColumns.classify(col("q")).as("t"))
+      .toDF("q").select(col("q"), SlowQueryPipeline.enrich(col("q"),
+        lit(null).cast("string"), lit(null).cast("array<string>"), empty)
+        .getField("type").as("t"))
     val got = df.collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(got("SELECT 1") == "SELECT")
     assert(got("select 1") == "SELECT")
@@ -131,16 +132,13 @@ class LogColumnsSpec extends AnyFunSuite {
   }
 
   test("table extraction: SELECT four probes, INSERT two probes") {
-    val df = Seq(
+    val rows = Seq(
       "SELECT * FROM ks.t WHERE x=1",
       "select * from ks2.t2 where x=1",
       "SELECT * FROM solo;",
       "INSERT INTO ks.t (a) VALUES (1)",
-      "insert into plain (a) VALUES (1)").toDF("q")
-      .select(col("q"),
-        LogColumns.selectTable(col("q")).as("st"),
-        LogColumns.insertTable(col("q")).as("it"))
-    val rows = df.collect().map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
+      "insert into plain (a) VALUES (1)").map(q =>
+      q -> (SlowQueryCatalog.selectTable(q), SlowQueryCatalog.insertTable(q))).toMap
     assert(rows("SELECT * FROM ks.t WHERE x=1")._1 == "ks.t")
     assert(rows("select * from ks2.t2 where x=1")._1 == "ks2.t2")
     assert(rows("SELECT * FROM solo;")._1 == "solo")

@@ -95,78 +95,6 @@ class StreamingAnalyzerSpec extends AnyFunSuite {
     assert(keys.toSeq == Seq("A", "B"))
   }
 
-  test("streaming near-dup suppression admits first, flags close followers") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    import StreamingAnalyzer.{NearDupVerdict, SigDoc}
-    val mem = MemoryStream[SigDoc]
-    val out = StreamingAnalyzer.nearDupSuppressStream(mem.toDS(), maxDist = 8)
-    val q = out.writeStream.outputMode(org.apache.spark.sql.streaming.OutputMode.Update)
-      .format("memory").queryName("neardup").start()
-
-    val base0 = 0x0ABCDEF012345L
-    val base1 = 0x0123456789ABCL
-    // batch 1: doc 10 admitted; doc 11 is 3 bits away in the same
-    // bucket -> dup of 10; doc 12 is far (other bucket) -> admitted
-    mem.addData(
-      SigDoc(10, band = 7, base0, base1, 1000),
-      SigDoc(11, band = 7, base0 ^ 7L, base1, 2000),
-      SigDoc(12, band = 9, ~base0 & 0xFFFFFFFFFFFFFFFL, base1, 1500))
-    q.processAllAvailable()
-    // batch 2: state persists across batches — doc 13 still dups 10;
-    // doc 14 differs in 9 bits (5 in word0, 4 in word1) -> admitted
-    mem.addData(
-      SigDoc(13, band = 7, base0 ^ (1L << 59), base1, 3000),
-      SigDoc(14, band = 7, base0 ^ 0x1FL, base1 ^ 0xFL, 4000))
-    q.processAllAvailable()
-    val verdicts = spark.table("neardup").as[NearDupVerdict].collect()
-      .map(v => v.docId -> v).toMap
-    q.stop()
-
-    assert(!verdicts(10).dup && !verdicts(12).dup)
-    assert(verdicts(11).dup && verdicts(11).dupOf == 10)
-    assert(verdicts(13).dup && verdicts(13).dupOf == 10)
-    assert(!verdicts(14).dup) // 9 bits > maxDist, admitted as new
-  }
-
-  test("sessionize maintains per-user gap sessions across batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[StreamingAnalyzer.SessionEvent]
-    val out = StreamingAnalyzer.sessionize(mem.toDS(), gapMillis = 60000)
-    val q = out.writeStream.outputMode(org.apache.spark.sql.streaming.OutputMode.Update)
-      .format("memory").queryName("sess").start()
-
-    mem.addData(
-      StreamingAnalyzer.SessionEvent(1, 1000, 10),
-      StreamingAnalyzer.SessionEvent(1, 2000, 20))
-    q.processAllAvailable()
-    // within the gap -> same session grows
-    mem.addData(StreamingAnalyzer.SessionEvent(1, 50000, 5))
-    q.processAllAvailable()
-    // beyond the gap -> new session; plus a same-batch open+close for
-    // user 2 (both sessions must be emitted from the one batch)
-    mem.addData(
-      StreamingAnalyzer.SessionEvent(1, 500000, 7),
-      StreamingAnalyzer.SessionEvent(2, 1000, 1),
-      StreamingAnalyzer.SessionEvent(2, 900000, 2))
-    q.processAllAvailable()
-    val updates = spark.table("sess").as[StreamingAnalyzer.SessionUpdate].collect()
-    q.stop()
-
-    val u1 = updates.filter(_.userId == 1)
-    assert(u1.toSeq == Seq(
-      StreamingAnalyzer.SessionUpdate(1, 1000, 2, 30), // batch 1 open
-      StreamingAnalyzer.SessionUpdate(1, 1000, 3, 35), // batch 2 open
-      StreamingAnalyzer.SessionUpdate(1, 1000, 3, 35), // batch 3 closes it
-      StreamingAnalyzer.SessionUpdate(1, 500000, 1, 7))) // batch 3 new open
-    // intra-batch closed session is NOT lost
-    val u2 = updates.filter(_.userId == 2)
-    assert(u2.toSet == Set(
-      StreamingAnalyzer.SessionUpdate(2, 1000, 1, 1),
-      StreamingAnalyzer.SessionUpdate(2, 900000, 1, 2)))
-  }
-
   test("interval join matches in-window pairs and evicts state past the watermark") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

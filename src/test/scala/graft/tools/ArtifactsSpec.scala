@@ -216,13 +216,21 @@ class ArtifactsSpec extends AnyFunSuite {
     assert(Artifacts.read(spark, idx, "rows").count() == 1L)
   }
 
-  test("legacy flat dirs stay readable; mutation is refused") {
+  test("a flat dir with no manifest is not an index: reads raise " +
+    "'has no artifact manifest', exists is false, mutation is refused") {
     import spark.implicits._
     val idx = freshIdx()
-    Seq((7L, "x")).toDF("id", "v")
-      .write.parquet(s"$idx/rows") // round-12-style flat artifact
-    assert(Artifacts.exists(spark, idx, "rows"))
-    assert(Artifacts.read(spark, idx, "rows").count() == 1L)
+    Seq((7L, "x")).toDF("id", "v").write.parquet(s"$idx/rows")
+    Seq(("k", 1L)).toDF("key", "value").write.parquet(s"$idx/summary")
+    assert(!Artifacts.exists(spark, idx, "rows"))
+    def refused(read: => Any): Unit = {
+      val e = intercept[RuntimeException](read)
+      assert(e.getMessage.contains(s"$idx has no artifact manifest"),
+        e.getMessage)
+    }
+    refused(Artifacts.read(spark, idx, "rows"))
+    refused(Artifacts.collectKV(spark, idx, "summary"))
+    refused(Artifacts.countRows(spark, idx, "rows"))
     intercept[IllegalArgumentException] {
       Artifacts.requireManifest(spark, idx)
     }
@@ -1348,8 +1356,8 @@ class ArtifactsSpec extends AnyFunSuite {
       "the memo served the reclaimed pending segment's dead rows")
   }
 
-  test("catalog-row memo: a hit reads no part file, callers cannot " +
-    "change what it returns, and legacy flat dirs are never memoized") {
+  test("catalog-row memo: a hit reads no part file, and callers cannot " +
+    "change what it returns") {
     import spark.implicits._
     val idx = freshIdx()
     val seg = Artifacts.writeSegment(spark, idx, "cat",
@@ -1365,15 +1373,6 @@ class ArtifactsSpec extends AnyFunSuite {
       .map(_.toSeq).toSet == Set(Seq(0L, 5L), Seq(1L, 7L)))
     // another column selection is another key: read afresh (no rows)
     assert(Artifacts.collectLongs(spark, idx, "cat", Seq("c")).isEmpty)
-
-    // legacy flat layout (no manifest): every collect reads the files
-    val flat = freshIdx()
-    Seq(("k", 1L)).toDF("key", "value").write.parquet(s"$flat/summary")
-    assert(Artifacts.collectKV(spark, flat, "summary") == Map("k" -> 1L))
-    Seq(("k", 2L)).toDF("key", "value").write.mode("overwrite")
-      .parquet(s"$flat/summary")
-    assert(Artifacts.collectKV(spark, flat, "summary") == Map("k" -> 2L),
-      "a legacy flat dir was memoized")
   }
 
   test("retry backoff (round 17): the jitter schedule is deterministic " +

@@ -922,35 +922,32 @@ class LexIndexSpec extends AnyFunSuite {
     } finally spark.conf.set("spark.graft.keepManifests", "1")
   }
 
-  test("legacy pre-dl postings layout: BOTH search and searchBatch " +
-    "fall back to the doclens join and score identically") {
+  test("a postings segment without dl is refused: BOTH search and " +
+    "searchBatch raise an error that names dl") {
     import spark.implicits._
     val in = corpusDir()
-    val idx = Files.createTempDirectory("lexidx_legacy").toString
+    val idx = Files.createTempDirectory("lexidx_nodl").toString
     LexIndex.build(spark, Array(in, s"$idx/lex", "--gram", "1"))
-    val single = LexIndex.search(spark,
-      Array(s"$idx/lex", "apple banana"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
-    val qs = Files.createTempDirectory("lexidx_legacy_q").toString
+    val qs = Files.createTempDirectory("lexidx_nodl_q").toString
     Seq((0L, "apple banana"), (1L, "cherry durian"))
       .toDF("query_id", "text")
       .write.mode("overwrite").parquet(s"$qs/q.parquet")
-    val batch = LexIndex.searchBatch(spark,
-      Array(s"$idx/lex", s"$qs/q.parquet", "--k", "3"))
-      .collect().map(_.toSeq).toSeq
-    // strip the denormalized dl column — the round-12 postings layout
-    val legacy = Artifacts.read(spark, s"$idx/lex", "postings").drop("dl")
+    // the same term-bucketed postings, with the denormalized dl stripped
+    val noDl = Artifacts.read(spark, s"$idx/lex", "postings")
       .select(col("t"), col("id"), col("tf"))
-    val seg = Artifacts.writeSegment(spark, s"$idx/lex", "postings", legacy)
+    val seg = Artifacts.writeSegment(spark, s"$idx/lex", "postings", noDl,
+      Some(Artifacts.Bucket("tb", pmod(hash(col("t")), lit(16L)), Seq("t"))))
     Artifacts.commit(spark, s"$idx/lex",
       Artifacts.merged(spark, s"$idx/lex", Map("postings" -> Seq(seg))))
     spark.catalog.refreshByPath(s"$idx/lex")
-    assert(LexIndex.search(spark, Array(s"$idx/lex", "apple banana"))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq == single)
-    assert(LexIndex.searchBatch(spark,
-      Array(s"$idx/lex", s"$qs/q.parquet", "--k", "3"))
-      .collect().map(_.toSeq).toSeq == batch,
-      "searchBatch cannot serve a legacy pre-dl index")
+    def namesDl(serve: => Any): Unit = {
+      val e = intercept[Exception](serve)
+      assert(e.getMessage.contains("`dl`"), e.getMessage)
+    }
+    namesDl(LexIndex.search(spark, Array(s"$idx/lex", "apple banana"))
+      .collect())
+    namesDl(LexIndex.searchBatch(spark,
+      Array(s"$idx/lex", s"$qs/q.parquet", "--k", "3")).collect())
   }
 
   test("delete then update: stats stay consistent (toktot excludes the " +
