@@ -1,6 +1,7 @@
 #!/usr/bin/env python3
 """Count non-blank, non-comment lines of the engine's main Scala code,
-or the environment variables it reads, or list its uncalled `def`s.
+or the environment variables and session conf keys it reads, or list
+its uncalled `def`s.
 
 A line counts when it holds at least one character of code outside
 `//` line comments and `/* ... */` blocks (Scala block comments nest;
@@ -16,7 +17,12 @@ Usage:
 `--knobs` prints each distinct environment-variable name that
 `ROOT/src/main/**/*.scala` and `ROOT/build.sbt` read through
 `sys.env.get("NAME")`, `sys.env.getOrElse("NAME", ...)` or
-`sys.env.contains("NAME")`, sorted, then their count.
+`sys.env.contains("NAME")`, sorted, then their count; then each
+distinct session conf key that `ROOT/src/main` names in a string
+literal starting `"spark.graft.` (comments excluded), sorted, then
+their count. A literal ending in `.` is a key prefix, completed at
+run time (`"spark.graft.x." + suffix`): the family counts once, printed
+as `spark.graft.x.*`.
 
 `--orphans` prints each `def` name declared in `ROOT/src/main` whose
 name occurs nowhere else in the code (comments excluded) of
@@ -32,6 +38,7 @@ import re
 import sys
 
 ENV_READ = re.compile(r'sys\.env\.(?:get|getOrElse|contains)\(\s*"([^"]+)"')
+CONF_KEY = re.compile(r'"(spark\.graft\.[A-Za-z0-9_.]*)')
 DEF_NAME = re.compile(r'\bdef\s+([A-Za-z_][A-Za-z0-9_]*)')
 IDENT = re.compile(r'[A-Za-z_][A-Za-z0-9_]*')
 
@@ -153,6 +160,16 @@ def knobs(root):
     return sorted(names)
 
 
+def conf_keys(root):
+    """Distinct `spark.graft.` session conf keys named by main code."""
+    names = set()
+    for path in scala_files(root):
+        with open(path, encoding="utf-8") as f:
+            for key in CONF_KEY.findall(code_only(f.read())):
+                names.add(key + "*" if key.endswith(".") else key)
+    return sorted(names)
+
+
 def main(argv):
     total_only = "--total" in argv
     args = [a for a in argv if a not in ("--total", "--knobs", "--orphans")]
@@ -162,7 +179,11 @@ def main(argv):
         names = knobs(root)
         for name in names:
             print(name)
-        print(f"{len(names):7d}  knobs")
+        print(f"{len(names):7d}  env knobs")
+        keys = conf_keys(root)
+        for key in keys:
+            print(key)
+        print(f"{len(keys):7d}  conf keys")
         return
     if "--orphans" in argv:
         names = orphans(root)

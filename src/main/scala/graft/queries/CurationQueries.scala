@@ -1102,7 +1102,7 @@ object CurationQueries {
     // subset (v0), ingest the rest (v1), retract the vec_id % 8 == 2
     // eighth (v2), retention window 4 — then `history`: one row per
     // retained manifest version with the membership that version
-    // serves (withPinned reads: assignment rows keep dead entries
+    // serves (per-version snapshot reads: assignment rows keep dead entries
     // until compact, so `vectors` is monotone while `live` drops by
     // the tombstoned eighth). The oracle re-derives all three rows in
     // closed form from the valid-dim embedding population and the

@@ -2669,8 +2669,9 @@ object SelectionQueries {
     // 3/4 subset (v0), ingest the rest (v1), retract the odd half
     // (v2), retention window 4 — then read `history`: one row per
     // RETAINED manifest version with the collection statistics that
-    // version serves (each read through Artifacts.withPinned, i.e.
-    // exactly what `search --at v` would score with). The oracle
+    // version serves (each read through that version's
+    // Artifacts.snapshot, i.e. exactly what `search --at v` would
+    // score with). The oracle
     // re-derives every version's (n, toktot, avgdl) in closed form
     // from the corpus and the command sequence — the version chain's
     // values are auditable, not just monotone counters.
@@ -2949,12 +2950,11 @@ object SelectionQueries {
         // round-17 telemetry then records backoff_ms = 0 exactly
         s.conf.set("spark.graft.retryBackoffMs", "0")
         try graft.tools.Artifacts.commitStructuralWithRetry(s, s"$tmp/lex") {
-          _ =>
+          base =>
             attempts += 1
             if (attempts == 1) // the competitor lands v1 mid-derivation
-              graft.tools.Artifacts.commit(s, s"$tmp/lex",
-                graft.tools.Artifacts.merged(s, s"$tmp/lex", Map.empty))
-            graft.tools.Artifacts.merged(s, s"$tmp/lex", Map.empty)
+              graft.tools.Artifacts.commit(s, s"$tmp/lex", base.segments)
+            base.segments
         } // loses v1, lands v2 — exactly one recorded event
         finally s.conf.unset("spark.graft.retryBackoffMs")
         graft.tools.LexIndex.contention(s, Array(s"$tmp/lex"))

@@ -56,9 +56,20 @@ import org.apache.spark.sql.functions._
   *     concurrently-served index needs; size N to cover the longest
   *     reader, as any snapshot-versioned table format does.
   *
-  * Every read resolves its segments from a manifest: a directory
-  * without one is not an index, and reads of it raise "has no
-  * artifact manifest".
+  * SNAPSHOT ISOLATION PER COMMAND: a command resolves its manifest
+  * ONCE — [[snapshot]] lists the manifest directory and opens one
+  * manifest file — into an immutable [[Snapshot]] (index, version,
+  * artifact -> segments), and every read of the command goes through
+  * that value. A commit landing mid-command is invisible to it: a
+  * search scores stats and postings of one version, never a mix.
+  * `--at V` is the same resolution at a retained version V; there is
+  * no session-scoped pin, so any number of threads on one session
+  * read different versions at once. A mutating command's working
+  * state is its base snapshot overridden by its pending segments
+  * (`snap ++ pending`), and each commit-retry attempt hands its rebase
+  * policy the attempt's base as a snapshot. A directory without a
+  * manifest is not an index: resolving it raises "has no artifact
+  * manifest".
   *
   * MULTI-WRITER contract (round 14, hardened round 15): commits are
   * OPTIMISTIC-CONCURRENCY safe ON STORES WITH AN ATOMIC
@@ -271,57 +282,106 @@ object Artifacts {
 
   private def manifestDir(idx: String) = s"$idx/_manifest"
 
-  private def pinKey(idx: String) =
-    "spark.graft.pinnedManifest." +
-      java.net.URLEncoder.encode(idx, "UTF-8")
-
-  /** TIME-TRAVEL read scope: every artifact resolution of `idx`
-    * inside `body` uses manifest `ver` instead of the newest — the
-    * snapshot-read surface over the retention window ([[vacuum]]
-    * keeps the trailing `spark.graft.keepManifests` versions, so any
-    * of them is a servable point-in-time state). Resolution happens
-    * at DataFrame CONSTRUCTION (the segment file lists are fixed
-    * then), so frames built inside the scope stay pinned after it
-    * exits. Fails fast if `ver` is not retained. Mutating commands
-    * must never run inside a pin — they would derive the next state
-    * from a stale snapshot — so they refuse ([[assertUnpinned]]).
+  /** One resolved manifest of `idx`: its `version` and the segment
+    * dirs it lists per artifact. Immutable — every read of a command
+    * goes through the one snapshot it resolved (object doc), and a
+    * frame built from it keeps serving that version after later
+    * commits (the segment file list is fixed at construction; the
+    * retention window keeps the files). `snap ++ pending` is a
+    * mutating command's working state.
     */
-  def withPinned[A](spark: SparkSession, idx: String, ver: Long)(body: => A): A = {
-    val key = pinKey(idx)
-    require(spark.conf.getOption(key).isEmpty,
-      s"manifest pin already active for $idx (no nesting)")
-    val p = new Path(manifestDir(idx), f"m-$ver%012d.tsv")
-    require(fs(spark, idx).exists(p),
-      s"manifest v$ver of $idx is not retained " +
-        s"(retained: ${manifestVersions(spark, idx).mkString(",")})")
-    spark.conf.set(key, ver.toString)
-    try body finally spark.conf.unset(key)
+  final case class Snapshot(idx: String, version: Long,
+      segments: Map[String, Seq[String]])(spark: SparkSession) {
+
+    /** Segment dirs of `name` (empty when the manifest lists none). */
+    def segs(name: String): Seq[String] = segments.getOrElse(name, Seq.empty)
+
+    /** Does the manifest list segments for the artifact? */
+    def has(name: String): Boolean = segs(name).nonEmpty
+
+    /** This snapshot with `pend`'s entries replacing its own. */
+    def ++(pend: Map[String, Seq[String]]): Snapshot =
+      Snapshot(idx, version, segments ++ pend)(spark)
+
+    /** Read an artifact: the union of its segments (explicit paths +
+      * basePath, so `seg` and any bucket key surface as partition
+      * columns — `seg` is dropped, bucket keys normalized to long).
+      * Unlisted and zero-segment artifacts raise — callers gate on
+      * [[has]].
+      */
+    def read(name: String): DataFrame = readSegs(spark, idx, name, listed(name))
+
+    /** Driver-side key -> value map of a (key STRING, value LONG)
+      * catalog artifact (stats, summary, graph_meta) — see
+      * [[smallRows]] for the per-session memo behind it.
+      */
+    def collectKV(name: String): Map[String, Long] =
+      smallRows(spark, idx, name, listed(name), Seq("key", "value")).map { a =>
+        a(0).asInstanceOf[String] -> a(1).asInstanceOf[java.lang.Long].longValue()
+      }.toMap
+
+    /** Driver-side collect of the named ALL-LONG columns of a
+      * catalog-sized artifact — see [[smallRows]]. Every call returns
+      * fresh arrays, so a caller's writes never reach the memo.
+      */
+    def collectLongs(name: String, cols: Seq[String]): Seq[Array[Long]] =
+      smallRows(spark, idx, name, listed(name), cols)
+        .map(_.map(_.asInstanceOf[java.lang.Long].longValue()).toArray)
+
+    /** Driver-side EXACT row count of an artifact from its parquet
+      * FOOTERS alone (round 18, VERDICT item 3): every parquet file
+      * records its row count in block metadata, so "how many rows
+      * does this artifact hold" is a metadata read — one footer per
+      * part file, no data pages, no Spark job. This replaces the
+      * post-commit `read(name).count()` pattern in the compact
+      * reports, which re-scanned every artifact the compact had just
+      * rewritten purely to report sizes. Exactness is parquet's
+      * contract (the footer count is what a scan would return).
+      */
+    def countRows(name: String): Long = {
+      val f = fs(spark, idx)
+      val conf = spark.sparkContext.hadoopConfiguration
+      listed(name).flatMap(s =>
+          listPartFiles(f, new Path(s"$idx/$name/$s"))).map { p =>
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+        try reader.getRecordCount
+        finally reader.close()
+      }.sum
+    }
+
+    private def listed(name: String): Seq[String] =
+      segments.getOrElse(name,
+        sys.error(s"artifact $name not in manifest of $idx"))
   }
 
-  /** Mutating commands call this before reading working state: a
-    * commit derived under a pin would silently fork history off the
-    * pinned version instead of the newest.
+  /** Resolve `idx`'s manifest ONCE: the newest, or retained version
+    * `at` (`--at V` — the time-travel read over the retention window;
+    * [[vacuum]] keeps the trailing `spark.graft.keepManifests`
+    * versions, so any of them is a servable point-in-time state).
+    * Raises "has no artifact manifest" for a directory without one,
+    * and fails fast when `at` is not retained.
     */
-  def assertUnpinned(spark: SparkSession, idx: String): Unit =
-    require(spark.conf.getOption(pinKey(idx)).isEmpty,
-      s"$idx is pinned to a historical manifest; mutating commands " +
-        "must run outside Artifacts.withPinned")
+  def snapshot(spark: SparkSession, idx: String,
+      at: Option[Long] = None): Snapshot = at match {
+    case None =>
+      currentManifest(spark, idx)
+        .getOrElse(sys.error(s"$idx has no artifact manifest"))
+    case Some(ver) =>
+      val f = fs(spark, idx)
+      val p = new Path(manifestDir(idx), f"m-$ver%012d.tsv")
+      require(f.exists(p),
+        s"manifest v$ver of $idx is not retained " +
+          s"(retained: ${manifestVersions(spark, idx).mkString(",")})")
+      Snapshot(idx, ver, parseManifest(f, p))(spark)
+  }
 
-  /** (version, name -> seg dirs) of the newest manifest — or of the
-    * [[withPinned]] version when a pin scope is active for `idx`.
-    */
-  def currentManifest(spark: SparkSession, idx: String)
-      : Option[(Long, Map[String, Seq[String]])] = {
+  /** The newest manifest, or None when the index has none. */
+  private def currentManifest(spark: SparkSession, idx: String)
+      : Option[Snapshot] = {
     val dir = new Path(manifestDir(idx))
     val f = fs(spark, idx)
     if (!f.exists(dir)) return None
-    spark.conf.getOption(pinKey(idx)).foreach { v =>
-      val ver = v.toLong
-      val p = new Path(dir, f"m-$ver%012d.tsv")
-      require(f.exists(p),
-        s"pinned manifest v$ver of $idx vanished (vacuumed mid-scope?)")
-      return Some((ver, parseManifest(f, p)))
-    }
     // list-then-open: under multi-writer operation a competitor's
     // post-commit vacuum can evict the manifest between our listing
     // and our open (a too-small retention window — the doc says size
@@ -336,7 +396,7 @@ object Artifacts {
       if (files.isEmpty) return None
       val latest = files.maxBy(n => n.stripPrefix("m-").stripSuffix(".tsv").toLong)
       val ver = latest.stripPrefix("m-").stripSuffix(".tsv").toLong
-      try return Some((ver, parseManifest(f, new Path(dir, latest))))
+      try return Some(Snapshot(idx, ver, parseManifest(f, new Path(dir, latest)))(spark))
       catch {
         case e: java.io.FileNotFoundException =>
           if (attempt >= 5) throw new java.io.FileNotFoundException(
@@ -385,49 +445,15 @@ object Artifacts {
       .sorted.toSeq
   }
 
-  /** The (artifact -> segments) map of a SPECIFIC retained manifest —
-    * the pinned-reader entry point: resolve a version once, then
-    * [[readSegs]] against its lists. With a retention window >= 2 the
-    * pinned version's files stay live through later commit + vacuum
-    * cycles (ArtifactsSpec proves byte-identical serving); with the
-    * default window 1 only the current version is resolvable.
+  /** Does the newest manifest list segments for the artifact? (false
+    * when the index has no manifest)
     */
-  def manifestAt(spark: SparkSession, idx: String, ver: Long)
-      : Map[String, Seq[String]] = {
-    val p = new Path(manifestDir(idx), f"m-$ver%012d.tsv")
-    val f0 = fs(spark, idx)
-    require(f0.exists(p), s"manifest v$ver of $idx is not retained")
-    parseManifest(f0, p)
-  }
-
-  /** Segment dirs of `name` per the current manifest (empty if the
-    * artifact has no segments or the index has no manifest).
-    */
-  def segmentsOf(spark: SparkSession, idx: String, name: String): Seq[String] =
-    currentManifest(spark, idx).flatMap(_._2.get(name)).getOrElse(Seq.empty)
-
-  /** Does the current manifest list segments for the artifact? */
   def exists(spark: SparkSession, idx: String, name: String): Boolean =
-    currentManifest(spark, idx).exists(_._2.get(name).exists(_.nonEmpty))
+    currentManifest(spark, idx).exists(_.has(name))
 
-  /** Segment dirs of `name` per the current (or pinned) manifest; raises
-    * naming the cause when the index has no manifest or the manifest
-    * does not list the artifact.
-    */
-  private def manifestSegs(spark: SparkSession, idx: String,
-      name: String): Seq[String] = {
-    val (_, m) = currentManifest(spark, idx).getOrElse(
-      sys.error(s"$idx has no artifact manifest"))
-    m.getOrElse(name, sys.error(s"artifact $name not in manifest of $idx"))
-  }
-
-  /** Read an artifact: the union of its manifest segments (explicit
-    * paths + basePath, so `seg` and any bucket key surface as
-    * partition columns — `seg` is dropped, bucket keys normalized to
-    * long). Zero-segment artifacts raise — callers gate on [[exists]].
-    */
+  /** [[Snapshot.read]] over a fresh snapshot — one-shot callers. */
   def read(spark: SparkSession, idx: String, name: String): DataFrame =
-    readSegs(spark, idx, name, manifestSegs(spark, idx, name))
+    snapshot(spark, idx).read(name)
 
   /** Read an explicit segment list of an artifact (the working-state
     * form mutating commands use for segments they wrote but have not
@@ -518,8 +544,8 @@ object Artifacts {
     * sub-kilobyte file), and the guide's driver rule (§5) cuts the
     * other way for metadata-class state — a bounded catalog file is
     * exactly what a driver SHOULD read itself, the way snapshot table
-    * formats read their commit metadata. Resolution is identical to
-    * [[read]]: current manifest honoring [[withPinned]]. `cols`
+    * formats read their commit metadata. `segs` comes from the
+    * caller's [[Snapshot]]. `cols`
     * selects fields by name; values come back as Long (INT64/INT32),
     * String (BINARY/UTF8) or Double, null for an absent field.
     *
@@ -530,16 +556,15 @@ object Artifacts {
     * consults centroids, summary, codebooks and ranges pays one
     * footer open plus a recursive part-file listing per artifact only
     * the first time; later resolutions read the manifest and nothing
-    * else. `--at` pinning needs nothing extra: the pinned manifest's
+    * else. `--at` needs nothing extra: the retained manifest's
     * segment list is the key. Never memoized: a listed segment with no
     * part file (a committed segment always holds one, so it was
-    * deleted under us). Rows are immutable; the public forms below
+    * deleted under us). Rows are immutable; the [[Snapshot]] forms
     * copy them out.
     */
   private def smallRows(spark: SparkSession, idx: String, name: String,
-      segsOpt: Option[Seq[String]], cols: Seq[String]): Seq[IndexedSeq[Any]] = {
+      segs: Seq[String], cols: Seq[String]): Seq[IndexedSeq[Any]] = {
     val root = s"$idx/$name"
-    val segs = segsOpt.getOrElse(manifestSegs(spark, idx, name))
     require(segs.nonEmpty, s"artifact $name has no segments in $idx")
     rowMemo.getOrElseUpdate(spark, root, segs, cols) {
       val f = fs(spark, idx)
@@ -594,59 +619,6 @@ object Artifacts {
       } finally reader.close()
     }
     out.result()
-  }
-
-  /** Driver-side key -> value map of a (key STRING, value LONG)
-    * catalog artifact (stats, summary, graph_meta) — see [[smallRows]]
-    * for the per-session memo behind it.
-    */
-  def collectKV(spark: SparkSession, idx: String, name: String)
-      : Map[String, Long] =
-    smallRows(spark, idx, name, None, Seq("key", "value")).map { a =>
-      a(0).asInstanceOf[String] -> a(1).asInstanceOf[java.lang.Long].longValue()
-    }.toMap
-
-  /** Driver-side collect of the named ALL-LONG columns of a
-    * catalog-sized artifact — see [[smallRows]]. Every call returns
-    * fresh arrays, so a caller's writes never reach the memo.
-    */
-  def collectLongs(spark: SparkSession, idx: String, name: String,
-      cols: Seq[String]): Seq[Array[Long]] =
-    longs(smallRows(spark, idx, name, None, cols))
-
-  /** [[collectLongs]] over an explicit segment list (the pending-
-    * segment form mutating commands use mid-derivation).
-    */
-  def collectLongsSegs(spark: SparkSession, idx: String, name: String,
-      segs: Seq[String], cols: Seq[String]): Seq[Array[Long]] =
-    longs(smallRows(spark, idx, name, Some(segs), cols))
-
-  private def longs(rows: Seq[IndexedSeq[Any]]): Seq[Array[Long]] =
-    rows.map(_.map(_.asInstanceOf[java.lang.Long].longValue()).toArray)
-
-  /** Driver-side EXACT row count of an artifact from its parquet
-    * FOOTERS alone (round 18, VERDICT item 3): every parquet file
-    * records its row count in block metadata, so "how many rows does
-    * this artifact hold" is a metadata read — one footer per part
-    * file, no data pages, no Spark job. This replaces the post-commit
-    * `Artifacts.read(name).count()` pattern in the compact reports,
-    * which re-scanned every artifact the compact had just rewritten
-    * (and, under `--threshold`, artifacts it deliberately did NOT
-    * rewrite) purely to report sizes — at 100 TB a second full pass
-    * over the corpus per compact. Exactness is parquet's contract
-    * (the footer count is what a scan would return); segment
-    * resolution is identical to [[read]] (current/pinned manifest).
-    */
-  def countRows(spark: SparkSession, idx: String, name: String): Long = {
-    val f = fs(spark, idx)
-    val conf = spark.sparkContext.hadoopConfiguration
-    manifestSegs(spark, idx, name).flatMap(s =>
-        listPartFiles(f, new Path(s"$idx/$name/$s"))).map { p =>
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
-      try reader.getRecordCount
-      finally reader.close()
-    }.sum
   }
 
   private def normalize(df: DataFrame): DataFrame = {
@@ -858,7 +830,7 @@ object Artifacts {
     * (the next commit then publishes v0).
     */
   def currentVersion(spark: SparkSession, idx: String): Long =
-    currentManifest(spark, idx).map(_._1).getOrElse(-1L)
+    currentManifest(spark, idx).map(_.version).getOrElse(-1L)
 
   /** Atomically publish a new manifest: `segs` is the FULL artifact ->
     * segments map that readers should see from now on. The version
@@ -992,7 +964,6 @@ object Artifacts {
     */
   def commitAt(spark: SparkSession, idx: String, base: Long,
       segs: Map[String, Seq[String]]): Boolean = {
-    assertUnpinned(spark, idx) // version n+1 must derive from the newest
     val f = fs(spark, idx)
     assertClaimCapable(spark, idx, f)
     val dir = new Path(manifestDir(idx))
@@ -1353,8 +1324,9 @@ object Artifacts {
     * seeded backoff, the CAS publish, the contention record, the
     * strand's [[CommitConflictException]] and the lost-attempt
     * reclaim. The four public `commit*WithRetry` forms are REBASE
-    * POLICIES over it: each attempt resolves the newest manifest
-    * (version, map) and `rebase` returns the FULL map to publish at
+    * POLICIES over it: each attempt resolves the newest manifest ONCE
+    * into a [[Snapshot]] (version -1 and no artifacts when the index
+    * has none) and `rebase` returns the FULL map to publish at
     * version + 1 — derived from (or merged onto) that base. A lost CAS
     * race reclaims the attempt's fresh segments ([[reclaimLost]];
     * `reused` names the segments the policy carries into every
@@ -1365,23 +1337,23 @@ object Artifacts {
   private def commitWithRetry(spark: SparkSession, idx: String,
       kind: String, attempts: Int,
       reused: Map[String, Seq[String]] = Map.empty)(
-      rebase: (Long, Map[String, Seq[String]]) => Map[String, Seq[String]])
-      : Long = {
+      rebase: Snapshot => Map[String, Seq[String]]): Long = {
     val seed = newWriterSeed()
     var slept = 0L
     var attempt = 0
     while (attempt < attempts) {
       attempt += 1
       if (attempt > 1) slept += backoff(spark, seed, attempt - 1)
-      val (ver, cur) = currentManifest(spark, idx)
-        .getOrElse((-1L, Map.empty[String, Seq[String]]))
-      val proposed = rebase(ver, cur)
-      if (commitAt(spark, idx, ver, proposed)) {
+      val base = currentManifest(spark, idx)
+        .getOrElse(Snapshot(idx, -1L, Map.empty)(spark))
+      val proposed = rebase(base)
+      if (commitAt(spark, idx, base.version, proposed)) {
         if (attempt > 1)
-          recordContention(spark, idx, kind, attempt - 1L, ver + 1, slept)
-        return ver + 1
+          recordContention(spark, idx, kind, attempt - 1L,
+            base.version + 1, slept)
+        return base.version + 1
       }
-      reclaimLost(spark, idx, proposed, cur, reused)
+      reclaimLost(spark, idx, proposed, base.segments, reused)
     }
     recordContention(spark, idx, kind, attempts.toLong, -1L, slept)
     throw CommitConflictException(idx, currentVersion(spark, idx) + 1,
@@ -1407,8 +1379,9 @@ object Artifacts {
     val fresh = proposed.toSeq.flatMap { case (n, ss) => ss.map((n, _)) }
       .filterNot { case (n, s) => listed(cur, n, s) || listed(reused, n, s) }
     if (fresh.nonEmpty) scala.util.Try {
-      manifestVersions(spark, idx).flatMap(v => manifestAt(spark, idx, v)
-        .toSeq.flatMap { case (n, ss) => ss.map((n, _)) }).toSet
+      manifestVersions(spark, idx).flatMap(v =>
+        snapshot(spark, idx, Some(v)).segments
+          .toSeq.flatMap { case (n, ss) => ss.map((n, _)) }).toSet
     }.foreach(refs => dropSegments(spark, idx, fresh.filterNot(refs)))
   }
 
@@ -1434,41 +1407,40 @@ object Artifacts {
     * artifact — base-independent, so every attempt appends them to
     * whatever the newest manifest holds, and `finish` re-derives
     * state-dependent replace-style artifacts (the lexical stats frame)
-    * from that rebased working map. `validateRebase` runs once per
-    * observed competing commit (before each retry) — the command's
-    * chance to verify the winner didn't semantically conflict
-    * (overlapping doc ids ingested by both writers) before its work
-    * is merged; it throws to abort. Up to 50 attempts. Returns the
-    * committed version.
+    * from that rebased working snapshot, returning the full map.
+    * `validateRebase` runs once per observed competing commit (before
+    * each retry) with the attempt's base — the command's chance to
+    * verify the winner didn't semantically conflict (overlapping doc
+    * ids ingested by both writers) before its work is merged; it
+    * throws to abort. Up to 50 attempts. Returns the committed
+    * version.
     */
   def commitAppendsWithRetry(spark: SparkSession, idx: String,
       deltas: Map[String, Seq[String]],
-      finish: Map[String, Seq[String]] => Map[String, Seq[String]] = identity,
-      validateRebase: () => Unit = () => ()): Long = {
+      finish: Snapshot => Map[String, Seq[String]] = _.segments,
+      validateRebase: Snapshot => Unit = _ => ()): Long = {
     var retry = false
-    commitWithRetry(spark, idx, "append", 50, deltas) { (_, cur) =>
-      if (retry) validateRebase()
+    commitWithRetry(spark, idx, "append", 50, deltas) { base =>
+      if (retry) validateRebase(base)
       retry = true
-      finish(deltas.foldLeft(cur) { case (m, (n, ss)) =>
-        m + (n -> (m.getOrElse(n, Seq.empty) ++ ss))
-      })
+      finish(base ++ deltas.map { case (n, ss) => n -> (base.segs(n) ++ ss) })
     }
   }
 
   /** Rebase policy for STRUCTURAL commands (delete, graph append —
     * whole-state rewrites whose output depends on the base snapshot):
     * every attempt RE-DERIVES via `derive(base)`, which must return
-    * the FULL artifact map to publish, derived entirely from the state
-    * at manifest `base` (re-reading every input — a lost attempt's
-    * reads are stale). Bounded by `spark.graft.structuralRetries`
-    * (default 5) so a structural command under SUSTAINED faster ingest
-    * surfaces the starvation instead of spinning forever.
+    * the FULL artifact map to publish, derived entirely from the
+    * attempt's base snapshot (reading every input through it — a lost
+    * attempt's reads are stale, and a derive that read newer state
+    * would lose the CAS at base + 1 anyway). Bounded by
+    * `spark.graft.structuralRetries` (default 5) so a structural
+    * command under SUSTAINED faster ingest surfaces the starvation
+    * instead of spinning forever.
     */
   def commitStructuralWithRetry(spark: SparkSession, idx: String)(
-      derive: Long => Map[String, Seq[String]]): Long =
-    commitWithRetry(spark, idx, "structural", structuralRetries(spark)) {
-      (ver, _) => derive(ver)
-    }
+      derive: Snapshot => Map[String, Seq[String]]): Long =
+    commitWithRetry(spark, idx, "structural", structuralRetries(spark))(derive)
 
   /** Rebase policy for a COMPACT-shaped rewrite — the one structural
     * command whose re-derivation is corpus-sized. The command derives
@@ -1488,15 +1460,14 @@ object Artifacts {
     */
   def commitRewriteWithDeltaRetry(spark: SparkSession, idx: String,
       baseMap: Map[String, Seq[String]], pend: Map[String, Seq[String]],
-      finish: Map[String, Seq[String]] => Map[String, Seq[String]] = identity)
-      : Long =
+      finish: Snapshot => Map[String, Seq[String]] = _.segments): Long =
     commitWithRetry(spark, idx, "rewrite", structuralRetries(spark), pend) {
-      (ver, cur) =>
+      cur =>
         finish(cur ++ pend.map { case (n, ss) =>
           val baseSegs = baseMap.getOrElse(n, Seq.empty)
-          val curSegs = cur.getOrElse(n, Seq.empty)
+          val curSegs = cur.segs(n)
           if (!baseSegs.forall(curSegs.contains))
-            throw CommitConflictException(idx, ver + 1,
+            throw CommitConflictException(idx, cur.version + 1,
               s"a competing structural rewrite of '$n' landed during this " +
                 "compact (base segments vanished) — re-run on the settled state")
           n -> (ss ++ curSegs.diff(baseSegs))
@@ -1511,15 +1482,14 @@ object Artifacts {
     * over untouched while the pend artifacts replace wholesale, so a
     * lost race costs one manifest read + one flip, never the
     * corpus-sized derivation. `finish` re-derives per-attempt
-    * replace-style METADATA from the merged map when a command has
-    * any. Bounded like [[commitStructuralWithRetry]].
+    * replace-style METADATA from the merged snapshot when a command
+    * has any. Bounded like [[commitStructuralWithRetry]].
     */
   def commitReplaceWithRetry(spark: SparkSession, idx: String,
       pend: Map[String, Seq[String]],
-      finish: Map[String, Seq[String]] => Map[String, Seq[String]] = identity)
-      : Long =
+      finish: Snapshot => Map[String, Seq[String]] = _.segments): Long =
     commitWithRetry(spark, idx, "replace", structuralRetries(spark), pend) {
-      (_, cur) => finish(cur ++ pend)
+      cur => finish(cur ++ pend)
     }
 
   /** CONTENTION TELEMETRY (round 16; round 17 adds the wasted-work
@@ -1674,7 +1644,6 @@ object Artifacts {
     * claims lose — the safe direction).
     */
   def vacuum(spark: SparkSession, idx: String): Unit = {
-    assertUnpinned(spark, idx)
     val f = fs(spark, idx)
     val mdir = new Path(manifestDir(idx))
     if (!f.exists(mdir)) return
@@ -1846,21 +1815,6 @@ object Artifacts {
     dropSegments(spark, idx, doomed.result())
   }
 
-  /** One row per RETAINED manifest version (ascending): the version
-    * chain a reader can pin or time-travel to, with the artifact and
-    * segment counts it references. Bounded by the retention window —
-    * driver-sized output by construction. The CLI `history` commands
-    * derive their version chain from this and pin each version for
-    * their index-specific per-version stats.
-    */
-  def history(spark: SparkSession, idx: String): DataFrame = {
-    import spark.implicits._
-    manifestVersions(spark, idx).map { v =>
-      val m = manifestAt(spark, idx, v)
-      (v, m.size.toLong, m.values.map(_.size).sum.toLong)
-    }.toDF("version", "artifacts", "segments")
-  }
-
   /** Materialize a (possibly historical) snapshot of `src` as a
     * brand-new standalone index at `dst`: every artifact the chosen
     * manifest references is read back and rewritten as ONE fresh
@@ -1879,9 +1833,7 @@ object Artifacts {
     */
   def exportSnapshot(spark: SparkSession, src: String, dst: String,
       ver: Option[Long]): Seq[(String, Long)] = {
-    requireManifest(spark, src)
-    val v = ver.getOrElse(currentVersion(spark, src))
-    val m = manifestAt(spark, src, v)
+    val snap = snapshot(spark, src, ver)
     require(!fs(spark, dst).exists(new Path(manifestDir(dst))),
       s"$dst already holds an index (export refuses to overwrite)")
     // fail FAST on a store the final commit would refuse — before
@@ -1893,9 +1845,9 @@ object Artifacts {
     // rewrite pass itself — the previous shape re-READ every exported
     // artifact post-commit just to report its size (a second full
     // pass over a corpus-sized export)
-    val written = m.toSeq.sortBy(_._1).collect {
+    val written = snap.segments.toSeq.sortBy(_._1).collect {
       case (name, segs) if segs.nonEmpty =>
-        val df = readSegs(spark, src, name, segs)
+        val df = snap.read(name)
         val bucket = df.columns.find(sortOf.contains).map { b =>
           Bucket(b, col(b), Seq(sortOf(b)).filter(df.columns.contains))
         }
@@ -1906,19 +1858,18 @@ object Artifacts {
     written.map { case (n, _, rows) => n -> rows }
   }
 
-  /** Physical integrity of the CURRENT manifest: (listed, missing)
+  /** Physical integrity of a manifest: (listed, missing)
     * segment-directory counts across every artifact — `missing > 0`
     * means the manifest references files the filesystem lost (a
     * mis-sized vacuum grace, an external deletion), the one failure
     * mode a serving index cannot self-heal. CLI `fsck` wrappers put
     * this first and add index-specific value checks.
     */
-  def segmentCheck(spark: SparkSession, idx: String): (Long, Long) = {
-    val f = fs(spark, idx)
-    val m = currentManifest(spark, idx).map(_._2).getOrElse(Map.empty)
-    val listed = m.values.map(_.size).sum.toLong
-    val missing = m.toSeq.flatMap { case (name, segs) =>
-      segs.filterNot(s => f.exists(new Path(s"$idx/$name/$s")))
+  def segmentCheck(spark: SparkSession, snap: Snapshot): (Long, Long) = {
+    val f = fs(spark, snap.idx)
+    val listed = snap.segments.values.map(_.size).sum.toLong
+    val missing = snap.segments.toSeq.flatMap { case (name, segs) =>
+      segs.filterNot(s => f.exists(new Path(s"${snap.idx}/$name/$s")))
     }.size.toLong
     (listed, missing)
   }
@@ -1930,16 +1881,15 @@ object Artifacts {
 
   /** Append-style write inside a command: write `df` as a new segment
     * of `name` and return the pending map with it appended to the
-    * artifact's working segment list (current manifest, unless the
-    * command already has a pending entry). Nothing is visible until
-    * the command's single [[commit]].
+    * artifact's working segment list (`base`'s, unless the command
+    * already has a pending entry). Nothing is visible until the
+    * command's single commit.
     */
-  def withAppended(spark: SparkSession, idx: String,
+  def withAppended(spark: SparkSession, base: Snapshot,
       pend: Map[String, Seq[String]], name: String, df: DataFrame,
       bucket: Option[Bucket] = None): Map[String, Seq[String]] = {
-    val seg = writeSegment(spark, idx, name, df, bucket)
-    val cur = pend.getOrElse(name, segmentsOf(spark, idx, name))
-    pend + (name -> (cur :+ seg))
+    val seg = writeSegment(spark, base.idx, name, df, bucket)
+    pend + (name -> ((base ++ pend).segs(name) :+ seg))
   }
 
   /** Replace-style write inside a command: the pending map gains
@@ -1950,14 +1900,8 @@ object Artifacts {
       bucket: Option[Bucket] = None): Map[String, Seq[String]] =
     pend + (name -> Seq(writeSegment(spark, idx, name, df, bucket)))
 
-  /** Current manifest overridden by a command's pending entries — the
-    * full map a command commits.
-    */
-  def merged(spark: SparkSession, idx: String,
-      pend: Map[String, Seq[String]]): Map[String, Seq[String]] =
-    currentManifest(spark, idx).map(_._2).getOrElse(Map.empty) ++ pend
-
-  /** Shared compaction kernel over one artifact's segments.
+  /** Shared compaction kernel over one artifact's segments `segs`
+    * (the compacting command's base snapshot's list).
     *
     * Full mode (`thresholdPm` None): read every segment, anti-join
     * the tombstones when `filtered`, write ONE consolidated segment.
@@ -1966,25 +1910,22 @@ object Artifacts {
     * the decision scan reads only the pruned `id` column, cheap next
     * to the full-width rewrite it gates — and cold segments keep
     * their files untouched. Returns the new segment list, or None
-    * when nothing changed (cold artifact under a threshold).
+    * when nothing changed (no segments, or a cold artifact under a
+    * threshold).
     */
   def compactSegments(spark: SparkSession, idx: String, name: String,
       tomb: Option[DataFrame], thresholdPm: Option[Long], filtered: Boolean,
-      bucket: Option[Bucket], baseSegs: Option[Seq[String]] = None)
-      : Option[Seq[String]] = {
-    if (baseSegs.isEmpty && !exists(spark, idx, name)) return None
-    if (baseSegs.exists(_.isEmpty)) return None
+      bucket: Option[Bucket], segs: Seq[String]): Option[Seq[String]] = {
+    if (segs.isEmpty) return None
     thresholdPm match {
       case None =>
-        val src = baseSegs.map(readSegs(spark, idx, name, _))
-          .getOrElse(read(spark, idx, name))
+        val src = readSegs(spark, idx, name, segs)
         val out = tomb match {
           case Some(ts) if filtered => src.join(ts, Seq("id"), "left_anti")
           case _                    => src
         }
         Some(Seq(writeSegment(spark, idx, name, out, bucket)))
       case Some(pm) =>
-        val segs = baseSegs.getOrElse(segmentsOf(spark, idx, name))
         val kept = Seq.newBuilder[String]
         var rewrote = 0
         segs.foreach { seg =>

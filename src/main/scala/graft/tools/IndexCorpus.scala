@@ -146,8 +146,8 @@ object IndexCorpus extends IndexLifecycle {
         .distinct: _*))
       .filter(col("cell").isin(cells.map(Long.box): _*))
 
-  private def cellBucketsOf(spark: SparkSession, idx: String): Long =
-    summaryVal(spark, idx, "cbuckets").getOrElse(cellBuckets)
+  private def cellBucketsOf(snap: Artifacts.Snapshot): Long =
+    summaryVal(snap, "cbuckets").getOrElse(cellBuckets)
 
   /** The graph artifact's pruning key: an arithmetic id bucket, so
     * the traversal derives the frontier's buckets with driver math
@@ -162,20 +162,19 @@ object IndexCorpus extends IndexLifecycle {
     Some(Artifacts.Bucket("gb", pmod(col("id"), lit(buckets)),
       Seq("id")))
 
-  private def graphBucketsOf(spark: SparkSession, idx: String): Long =
-    if (!Artifacts.exists(spark, idx, "graph_meta")) graphBuckets
-    else Artifacts.collectKV(spark, idx, "graph_meta")
-      .getOrElse("gbuckets", graphBuckets)
+  private def graphBucketsOf(snap: Artifacts.Snapshot): Long =
+    if (!snap.has("graph_meta")) graphBuckets
+    else snap.collectKV("graph_meta").getOrElse("gbuckets", graphBuckets)
 
   /** Summary lookup BY NAME from the (key, value) `summary` catalog
-    * artifact (driver-side, memoized — see [[Artifacts.collectKV]]).
+    * artifact (driver-side, memoized — see
+    * [[Artifacts.Snapshot.collectKV]]).
     */
-  private def summaryVal(spark: SparkSession, idx: String,
-      key: String): Option[Long] =
-    Artifacts.collectKV(spark, idx, "summary").get(key)
+  private def summaryVal(snap: Artifacts.Snapshot, key: String): Option[Long] =
+    snap.collectKV("summary").get(key)
 
-  private def summaryFlag(spark: SparkSession, idx: String,
-      key: String): Boolean = summaryVal(spark, idx, key).contains(1L)
+  private def summaryFlag(snap: Artifacts.Snapshot, key: String): Boolean =
+    summaryVal(snap, key).contains(1L)
 
   /** Compact plan, vector arm: the membership artifacts rewrite
     * without the deleted ids, per-cell-partitioned with the bucket
@@ -186,12 +185,12 @@ object IndexCorpus extends IndexLifecycle {
     * codebooks, sq8 ranges, summary) are untouched — compaction is a
     * membership rewrite, never a retrain.
     */
-  protected def compactPlan(spark: SparkSession, idx: String,
+  protected def compactPlan(base: Artifacts.Snapshot,
       thresholdPm: Option[Long]): Seq[(String, Boolean, Option[Artifacts.Bucket])] = {
-    val cb = cellBucket(cellBucketsOf(spark, idx))
+    val cb = cellBucket(cellBucketsOf(base))
     Seq(("assignments", true, cb), ("pq_codes", true, cb),
       ("sq8_codes", true, cb),
-      ("knn_graph", true, graphBucket(graphBucketsOf(spark, idx))))
+      ("knn_graph", true, graphBucket(graphBucketsOf(base))))
   }
 
   /** radii are CELL-keyed, so the tombstone anti-join does not apply —
@@ -199,14 +198,12 @@ object IndexCorpus extends IndexLifecycle {
     * Post-delete radii may overestimate (max over fewer members),
     * which only weakens the exact tier's pruning, never its answers.
     */
-  override protected def compactFolds(spark: SparkSession, idx: String,
-      baseMap: Map[String, Seq[String]],
+  override protected def compactFolds(spark: SparkSession,
+      base: Artifacts.Snapshot,
       pend: Map[String, Seq[String]]): Map[String, Seq[String]] =
-    baseMap.get("ivf_radii").filter(_.nonEmpty).fold(pend) { segs =>
-      Artifacts.withReplaced(spark, idx, pend, "ivf_radii",
-        Artifacts.readSegs(spark, idx, "ivf_radii", segs)
-          .groupBy(col("cell")).agg(max(col("r2")).as("r2")))
-    }
+    if (!base.has("ivf_radii")) pend
+    else Artifacts.withReplaced(spark, base.idx, pend, "ivf_radii",
+      base.read("ivf_radii").groupBy(col("cell")).agg(max(col("r2")).as("r2")))
 
   /** Build the index artifacts; returns (artifact, rows) per write.
     * `--residual true` quantizes each vector's RESIDUAL against its
@@ -329,7 +326,9 @@ object IndexCorpus extends IndexLifecycle {
         .select(col("i").cast("long").as("i"), col("lo"), col("wd"))
         .coalesce(1) // dims rows — one file, one footer
       write("sq8_ranges", rangesDf)
-      val (lo, wd) = rangeArrays(spark, out, dims, pend)
+      // the build's working state: no base manifest, only its pending
+      // segments
+      val (lo, wd) = rangeArrays(Artifacts.Snapshot(out, -1L, pend)(spark), dims)
       // ONE BYTE per dimension on disk (64 B/vector at dims = 64 —
       // the real 4x-vs-fp32 artifact, not longs a parquet encoder
       // merely dictionary-packs); cell partition key for the pushed
@@ -353,21 +352,12 @@ object IndexCorpus extends IndexLifecycle {
     res
   }
 
-  /** Per-dim SQ8 (lo, width) arrays from the persisted range table
-    * (pending-aware during build).
-    */
-  private def rangeArrays(spark: SparkSession, idx: String, dims: Int,
-      pend: Map[String, Seq[String]] = Map.empty)
+  /** Per-dim SQ8 (lo, width) arrays from the persisted range table. */
+  private def rangeArrays(snap: Artifacts.Snapshot, dims: Int)
       : (Array[Long], Array[Long]) = {
-    val cols = Seq("i", "lo", "wd")
-    val rows = pend.get("sq8_ranges") match {
-      case Some(segs) =>
-        Artifacts.collectLongsSegs(spark, idx, "sq8_ranges", segs, cols)
-      case None => Artifacts.collectLongs(spark, idx, "sq8_ranges", cols)
-    }
     val lo = new Array[Long](dims)
     val wd = new Array[Long](dims)
-    rows.foreach { r =>
+    snap.collectLongs("sq8_ranges", Seq("i", "lo", "wd")).foreach { r =>
       val i = r(0).toInt
       lo(i) = r(1)
       wd(i) = r(2)
@@ -408,12 +398,12 @@ object IndexCorpus extends IndexLifecycle {
       raw: org.apache.spark.sql.DataFrame,
       idCol: String, vecCol: String): Long = {
     GraftSession.tune(spark)
-    Artifacts.requireManifest(spark, idx)
+    val snap = Artifacts.snapshot(spark, idx)
     import spark.implicits._
 
-    val cents = centroidArrays(spark, idx)
-    val books = codebookArrays(spark, idx)
-    val residual = summaryFlag(spark, idx, "residual")
+    val cents = centroidArrays(snap)
+    val books = codebookArrays(snap)
+    val residual = summaryFlag(snap, "residual")
     val dims = cents(0).length
     val pqM = books.length
     val sub = dims / pqM
@@ -424,12 +414,7 @@ object IndexCorpus extends IndexLifecycle {
     // the tombstones: a retracted id must never re-enter, even after
     // a compact rewrote it out of assignments (permanent retraction —
     // see delete()).
-    val existing0 = Artifacts.read(spark, idx, "assignments").select(col("id"))
-    val existing =
-      if (Artifacts.exists(spark, idx, "tombstones"))
-        existing0.unionByName(
-          Artifacts.read(spark, idx, "tombstones").select(col("id")))
-      else existing0
+    val existing = knownIds(snap)
     val base = graft.Scratch.localCheckpoint(
       raw.filter(size(col(vecCol)) === dims)
         .select(col(idCol).cast("long").as("id"),
@@ -440,7 +425,7 @@ object IndexCorpus extends IndexLifecycle {
       .select(col("id"), col("cluster").cast("long").as("cell"),
         col("d")))
     val asgn = asgnD.select(col("id"), col("cell"))
-    val cbIngest = cellBucket(cellBucketsOf(spark, idx))
+    val cbIngest = cellBucket(cellBucketsOf(snap))
     // CONCURRENT-WRITER path (mirrors LexIndex.ingestFrame): every
     // artifact here is a pure APPEND of base-independent segments, so
     // a lost CAS race rebases onto the winner's manifest and retries —
@@ -458,7 +443,7 @@ object IndexCorpus extends IndexLifecycle {
     // any built one — append the per-cell max so the exact tier's
     // pruning bound stays an overestimate (search maxes per cell at
     // read time; appends never race a rewrite)
-    if (Artifacts.exists(spark, idx, "ivf_radii"))
+    if (snap.has("ivf_radii"))
       deltas += "ivf_radii" -> Seq(Artifacts.writeSegment(spark, idx,
         "ivf_radii", asgnD.groupBy(col("cell")).agg(max(col("d")).as("r2"))
           .coalesce(1)))
@@ -486,8 +471,8 @@ object IndexCorpus extends IndexLifecycle {
     // the SQ8 tier ingests too (frozen per-dim ranges, like the
     // frozen codebooks) — without this append an updated vector
     // would be silently unsearchable under `--tier sq8`
-    if (summaryFlag(spark, idx, "sq8")) {
-      val (lo, wd) = rangeArrays(spark, idx, dims)
+    if (summaryFlag(snap, "sq8")) {
+      val (lo, wd) = rangeArrays(snap, dims)
       deltas += "sq8_codes" -> Seq(Artifacts.writeSegment(spark, idx,
         "sq8_codes", base.select(col("id"),
           graft.ops.VectorExpressions.sq8PackBytes(col("mv"), lo, wd)
@@ -498,17 +483,12 @@ object IndexCorpus extends IndexLifecycle {
     val n = nIngested
     val mySeg = deltas("assignments")
     Artifacts.commitAppendsWithRetry(spark, idx, deltas,
-      validateRebase = () => {
+      validateRebase = base => {
         val mine = Artifacts.readSegs(spark, idx, "assignments", mySeg)
           .select(col("id"))
-        var committed = Artifacts.read(spark, idx, "assignments")
-          .select(col("id"))
-        if (Artifacts.exists(spark, idx, "tombstones"))
-          committed = committed.unionByName(
-            Artifacts.read(spark, idx, "tombstones").select(col("id")))
-        val clash = committed.join(mine, Seq("id"), "left_semi").count()
+        val clash = knownIds(base).join(mine, Seq("id"), "left_semi").count()
         if (clash > 0) throw Artifacts.CommitConflictException(idx,
-          Artifacts.currentVersion(spark, idx) + 1,
+          base.version + 1,
           s"$clash vector ids were concurrently ingested or retracted " +
             "by another writer; re-run this ingest to re-dedup")
       })
@@ -517,12 +497,22 @@ object IndexCorpus extends IndexLifecycle {
     n
   }
 
+  /** Every id `snap` has ever ingested: assignments plus tombstones (a
+    * compact folds retracted ids out of assignments, never out of the
+    * tombstones).
+    */
+  private def knownIds(snap: Artifacts.Snapshot): DataFrame = {
+    val asgn = snap.read("assignments").select(col("id"))
+    if (!snap.has("tombstones")) asgn
+    else asgn.unionByName(snap.read("tombstones").select(col("id")))
+  }
+
   /** `history` columns: per-version membership statistics (vectors,
     * tombstones, live) — `vectors` counts assignment rows, which keep
     * dead entries until a compact folds the tombstones in; `live` is
-    * the anti-joined serving population. Segment lists resolve per
-    * version via manifestAt (the resolution withPinned gives, without
-    * the conf round-trips), and the whole chain is ONE Spark job
+    * the anti-joined serving population. Each version reads through
+    * its own snapshot (`Artifacts.snapshot(…, Some(v))` — the
+    * resolution `--at v` gives), and the whole chain is ONE Spark job
     * (round 18): every version's counts ride tagged branches of a
     * single union-aggregate keyed by version. The left_outer join is
     * row-preserving because the tombstone branch is made distinct
@@ -532,16 +522,13 @@ object IndexCorpus extends IndexLifecycle {
   protected def versionStats(spark: SparkSession, idx: String,
       chain: Seq[Long]): Seq[Seq[Long]] = {
     val branches: Seq[DataFrame] = chain.flatMap { v =>
-      val m = Artifacts.manifestAt(spark, idx, v)
-      val asgn = Artifacts.readSegs(spark, idx, "assignments",
-        m.getOrElse("assignments", Seq.empty)).select(col("id"))
-      val tsSegs = m.getOrElse("tombstones", Seq.empty)
-      if (tsSegs.isEmpty)
+      val m = Artifacts.snapshot(spark, idx, Some(v))
+      val asgn = m.read("assignments").select(col("id"))
+      if (!m.has("tombstones"))
         Seq(asgn.select(lit(v).as("version"), lit(1L).as("vec"),
           lit(1L).as("live"), lit(0L).as("tomb")))
       else {
-        val ts = Artifacts.readSegs(spark, idx, "tombstones", tsSegs)
-          .select(col("id")).distinct()
+        val ts = m.read("tombstones").select(col("id")).distinct()
         Seq(
           asgn.join(ts.withColumn("dead", lit(1L)), Seq("id"), "left_outer")
             .select(lit(v).as("version"), lit(1L).as("vec"),
@@ -578,14 +565,14 @@ object IndexCorpus extends IndexLifecycle {
     */
   protected def invariants = Seq("assignment_dupes", "codes_cell_mismatch",
     "codes_incomplete", "codes_orphans")
-  protected def audit(spark: SparkSession, idx: String): Seq[(Long, Long)] = {
-    val pqM = summaryVal(spark, idx, "pq_m").getOrElse(2L)
+  protected def audit(spark: SparkSession,
+      snap: Artifacts.Snapshot): Seq[(Long, Long)] = {
+    val pqM = summaryVal(snap, "pq_m").getOrElse(2L)
     val asgn = graft.Scratch.cache(
-      Artifacts.read(spark, idx, "assignments")
-        .select(col("id"), col("cell")))
+      snap.read("assignments").select(col("id"), col("cell")))
     val codes = graft.Scratch.cache(
-      Artifacts.read(spark, idx, "pq_codes")
-        .select(col("id"), col("s"), col("cell").as("code_cell")))
+      snap.read("pq_codes").select(col("id"), col("s"),
+        col("cell").as("code_cell")))
     // ALL FOUR invariant counts in ONE job (round 18): tagged branches
     // under a single union-aggregate replace four separate count jobs
     val audit = asgn.groupBy(col("id")).agg(count(lit(1)).as("c"))
@@ -614,10 +601,8 @@ object IndexCorpus extends IndexLifecycle {
   /** cell -> centroid long array, from the persisted frame
     * (driver-side catalog read — ivf_k x dims rows).
     */
-  private def centroidArrays(spark: SparkSession, idx: String)
-      : Array[Array[Long]] =
-    Artifacts.collectLongs(spark, idx, "ivf_centroids",
-      Seq("cell", "i", "c"))
+  private def centroidArrays(snap: Artifacts.Snapshot): Array[Array[Long]] =
+    snap.collectLongs("ivf_centroids", Seq("cell", "i", "c"))
       .groupBy(_(0)).toSeq.sortBy(_._1).map { case (_, rows) =>
         rows.sortBy(_(1)).map(_(2)).toArray
       }.toArray
@@ -625,10 +610,9 @@ object IndexCorpus extends IndexLifecycle {
   /** s -> code -> codebook entry long array (driver-side catalog
     * read — m x k x sub rows).
     */
-  private def codebookArrays(spark: SparkSession, idx: String)
+  private def codebookArrays(snap: Artifacts.Snapshot)
       : Array[Array[Array[Long]]] =
-    Artifacts.collectLongs(spark, idx, "pq_codebooks",
-      Seq("s", "j", "i", "c"))
+    snap.collectLongs("pq_codebooks", Seq("s", "j", "i", "c"))
       .groupBy(_(0)).toSeq.sortBy(_._1).map { case (_, rows) =>
         rows.groupBy(_(1)).toSeq.sortBy(_._1).map { case (_, rs) =>
           rs.sortBy(_(2)).map(_(3)).toArray
@@ -662,7 +646,7 @@ object IndexCorpus extends IndexLifecycle {
     val vecCol = flags.getOrElse("vec", "embedding")
     GraftSession.tune(spark)
     Artifacts.applyRetentionFlag(spark, flags, idx)
-    Artifacts.requireManifest(spark, idx)
+    val snap = Artifacts.snapshot(spark, idx)
     import spark.implicits._
 
     // --chunk-rows N > 0 turns on the skew-parallel grid split of the
@@ -690,7 +674,7 @@ object IndexCorpus extends IndexLifecycle {
     val maxBcastWave = flags.getOrElse("max-broadcast-wave", "65536").toLong
 
     if (flags.getOrElse("append", "false").toBoolean)
-      return graphAppend(spark, idx, in, idCol, vecCol, chunkRows,
+      return graphAppend(spark, snap, in, idCol, vecCol, chunkRows,
         maxBcastWave)
 
     val deg = flags.getOrElse("deg", "3").toInt
@@ -709,7 +693,7 @@ object IndexCorpus extends IndexLifecycle {
     }
     val minCos = flags.getOrElse("min-cos", "-1.0").toDouble
     val gB = flags.get("gbuckets").map(_.toLong).getOrElse(graphBuckets)
-    val dims = summaryVal(spark, idx, "dims")
+    val dims = summaryVal(snap, "dims")
       .getOrElse(sys.error(s"$idx has no summary dims")).toInt
     val all = graft.ops.Similarity.hyperplanes(planes, dims)
     val per = planes / bands
@@ -814,17 +798,18 @@ object IndexCorpus extends IndexLifecycle {
   private case object EmptyWaveException
     extends Exception with scala.util.control.NoStackTrace
 
-  private def graphAppend(spark: SparkSession, idx: String, in: String,
-      idCol: String, vecCol: String,
+  private def graphAppend(spark: SparkSession, snap: Artifacts.Snapshot,
+      in: String, idCol: String, vecCol: String,
       chunkRows: Int = Int.MaxValue,
       maxBcastWave: Long = 65536L): Seq[(String, Long)] = {
     import spark.implicits._
-    require(Artifacts.exists(spark, idx, "knn_graph"),
+    val idx = snap.idx
+    require(snap.has("knn_graph"),
       s"$idx has no knn_graph artifact (run `graph` first)")
     // structural: the appended adjacency merge-ranks against one
     // snapshot's persisted edges — a concurrent commit makes that
     // derivation stale, so the publish CAS-fails and the MERGE-RANK
-    // re-derives from the merged state (commitStructuralWithRetry).
+    // re-derives from the attempt's base (commitStructuralWithRetry).
     // The expensive term — candidate generation + the wave-side
     // top-deg rank — is cached across attempts (round 16; round 17
     // caches the RANKED wave adjacency — deg rows per affected node —
@@ -842,8 +827,8 @@ object IndexCorpus extends IndexLifecycle {
     var nNewOut = 0L
     var cachedNewTop: Option[(String, Long, DataFrame, DataFrame)] = None
     try {
-      Artifacts.commitStructuralWithRetry(spark, idx) { _ =>
-    val meta = Artifacts.collectKV(spark, idx, "graph_meta")
+      Artifacts.commitStructuralWithRetry(spark, idx) { base =>
+    val meta = base.collectKV("graph_meta")
     require(meta.contains("gver"),
       s"$idx's graph predates --append support (re-run `graph` to enable)")
     val deg = meta("deg").toInt
@@ -852,7 +837,7 @@ object IndexCorpus extends IndexLifecycle {
     val gB = meta("gbuckets")
     val minCos = meta("min_cos_x1e6").toDouble / 1000000d
     val newVer = meta("gver") + 1L
-    val dims = summaryVal(spark, idx, "dims")
+    val dims = summaryVal(base, "dims")
       .getOrElse(sys.error(s"$idx has no summary dims")).toInt
     val allPlanes = graft.ops.Similarity.hyperplanes(planes, dims)
     val per = planes / bands
@@ -862,7 +847,7 @@ object IndexCorpus extends IndexLifecycle {
     val raw = spark.read.parquet(in)
     val newIds = graft.Scratch.localCheckpoint(
       raw.select(col(idCol).cast("long").as("id")).distinct()
-        .join(Artifacts.read(spark, idx, "graph_ids").select(col("id")),
+        .join(base.read("graph_ids").select(col("id")),
           Seq("id"), "left_anti"))
     val nNew = newIds.count()
     nNewOut = nNew
@@ -913,7 +898,7 @@ object IndexCorpus extends IndexLifecycle {
     // untouched nodes' segments stay byte-identical.
     val affected = newTop.select(col("id")).distinct()
     val current = latestAdjacency(
-      Artifacts.read(spark, idx, "knn_graph")
+      base.read("knn_graph")
         .join(affected, Seq("id"), "left_semi")
         .select(col("id"), col("nbr"), col("cos_x1e6"), col("ver")))
       .select(col("id"), col("nbr"), col("cos_x1e6"))
@@ -923,13 +908,13 @@ object IndexCorpus extends IndexLifecycle {
       .withColumn("rn", row_number().over(wDeg).cast("long"))
       .filter(col("rn") <= deg)
       .withColumn("ver", lit(newVer))
-    var pend = Artifacts.withAppended(spark, idx, Map(), "knn_graph",
+    var pend = Artifacts.withAppended(spark, base, Map(), "knn_graph",
       reRanked, graphBucket(gB))
-    pend = Artifacts.withAppended(spark, idx, pend, "graph_ids",
+    pend = Artifacts.withAppended(spark, base, pend, "graph_ids",
       newIds, graphBucket(gB))
     pend = Artifacts.withReplaced(spark, idx, pend, "graph_meta",
       (meta + ("gver" -> newVer)).toSeq.toDF("key", "value").coalesce(1))
-    Artifacts.merged(spark, idx, pend)
+    (base ++ pend).segments
       }
     } catch {
       case EmptyWaveException => () // nothing to publish; epilogue runs
@@ -969,10 +954,6 @@ object IndexCorpus extends IndexLifecycle {
     */
   def search(spark: SparkSession, args: Array[String]): DataFrame = {
     require(args.length >= 3, "usage: search <indexDir> <emb.parquet> <probeId> [flags]")
-    atVersion(spark, args, 3)(searchImpl(spark, args))
-  }
-
-  private def searchImpl(spark: SparkSession, args: Array[String]): DataFrame = {
     val (idx, in, probeId) = (args(0), args(1), args(2).toLong)
     val flags = flagsOf(args, 3)
     val idCol = flags.getOrElse("id", "vec_id")
@@ -983,11 +964,12 @@ object IndexCorpus extends IndexLifecycle {
     val rerankN = flags.get("rerank").map(_.toInt)
     GraftSession.tune(spark)
     import spark.implicits._
+    val snap = Artifacts.snapshot(spark, idx, flags.get("at").map(_.toLong))
 
-    val cents = centroidArrays(spark, idx).zipWithIndex
+    val cents = centroidArrays(snap).zipWithIndex
       .map { case (c, j) => j.toLong -> c }.toMap
     val dims = cents.head._2.length
-    val cbN = cellBucketsOf(spark, idx)
+    val cbN = cellBucketsOf(snap)
 
     // ONE source frame and ONE probe row per search: every tier below
     // reuses `src` (a second spark.read.parquet would schedule its own
@@ -1029,22 +1011,22 @@ object IndexCorpus extends IndexLifecycle {
     if (flags.getOrElse("tier", "pq") == "exact") {
       require(filterSql.isEmpty && rerankN.isEmpty,
         "--tier exact composes with neither --filter nor --rerank")
-      require(Artifacts.exists(spark, idx, "ivf_radii"),
+      require(snap.has("ivf_radii"),
         s"$idx has no ivf_radii artifact (rebuild to enable --tier exact)")
       // driver-side catalog read + fold: radii are one row per cell
       // per ingest wave — catalog-sized; the max-per-cell fold is
       // driver math, not a Spark aggregate job
-      val r2 = Artifacts.collectLongs(spark, idx, "ivf_radii",
+      val r2 = snap.collectLongs("ivf_radii",
         Seq("cell", "r2"))
         .groupBy(_(0)).map { case (c, rows) => c -> rows.map(_(1)).max }
       val dc = cents.toSeq.map { case (j, c) => j -> l2(pv, 0, c) }
       def score(cellIds: Seq[Long]): DataFrame = {
         val m0 = restrictCells(
-          Artifacts.read(spark, idx, "assignments"), cellIds, cbN)
+          snap.read("assignments"), cellIds, cbN)
           .filter(col("id") =!= probeId)
         val m =
-          if (Artifacts.exists(spark, idx, "tombstones"))
-            m0.join(Artifacts.read(spark, idx, "tombstones")
+          if (snap.has("tombstones"))
+            m0.join(snap.read("tombstones")
               .select(col("id")), Seq("id"), "left_anti")
           else m0
         src.filter(size(col(vecCol)) === dims)
@@ -1089,7 +1071,7 @@ object IndexCorpus extends IndexLifecycle {
     // replays the graph construction, the router seeds, and every
     // hop in closed form.
     if (flags.getOrElse("tier", "pq") == "graph") {
-      require(Artifacts.exists(spark, idx, "knn_graph"),
+      require(snap.has("knn_graph"),
         s"$idx has no knn_graph artifact (run `graph` first)")
       val beam = flags.getOrElse("beam", "8").toInt
       val hops = flags.getOrElse("hops", "2").toInt
@@ -1098,10 +1080,10 @@ object IndexCorpus extends IndexLifecycle {
         s"--rerank $n must be >= --k $k"))
       // the bucket count the graph was WRITTEN with governs the
       // partition math — never the current compile-time constant
-      val gB = graphBucketsOf(spark, idx)
+      val gB = graphBucketsOf(snap)
       val tombOpt =
-        if (Artifacts.exists(spark, idx, "tombstones"))
-          Some(Artifacts.read(spark, idx, "tombstones").select(col("id")))
+        if (snap.has("tombstones"))
+          Some(snap.read("tombstones").select(col("id")))
         else None
       // candidate ADMISSION (tombstones + the --filter stratum
       // predicate over `id`): applied to the seeds AND to every hop's
@@ -1121,8 +1103,8 @@ object IndexCorpus extends IndexLifecycle {
       // split: per-hop cost stays O(beam x degree) CODE rows, and the
       // float source is touched once, for the final shortlist).
       val walkByAdc = rerankN.isDefined
-      val books0 = if (walkByAdc) codebookArrays(spark, idx) else Array.empty[Array[Array[Long]]]
-      val residualW = walkByAdc && summaryFlag(spark, idx, "residual")
+      val books0 = if (walkByAdc) codebookArrays(snap) else Array.empty[Array[Array[Long]]]
+      val residualW = walkByAdc && summaryFlag(snap, "residual")
       val adcTable: DataFrame = if (!walkByAdc) null else {
         val pqM = books0.length
         val sub = dims / pqM
@@ -1150,7 +1132,7 @@ object IndexCorpus extends IndexLifecycle {
       def scoreOf(idsDf: DataFrame): Seq[(Long, Long)] = {
         val cand = admit(idsDf)
         if (walkByAdc)
-          Artifacts.read(spark, idx, "pq_codes")
+          snap.read("pq_codes")
             .join(cand.select(col("id")), Seq("id"), "left_semi")
             .join(broadcast(adcTable),
               if (residualW) Seq("cell", "s", "code") else Seq("s", "code"))
@@ -1174,14 +1156,14 @@ object IndexCorpus extends IndexLifecycle {
         if (walkByAdc) (p._2, p._1) else (-p._2, p._1)
       // seeds: the probed cells' members, scored, top-beam
       val seedMembers0 = restrictCells(
-        Artifacts.read(spark, idx, "assignments"), probedCells, cbN)
+        snap.read("assignments"), probedCells, cbN)
         .filter(col("id") =!= probeId)
         .select(col("id"))
       val visited = scala.collection.mutable.Map.empty[Long, Long]
       scoreOf(seedMembers0)
         .sortBy(sortKey).take(beam)
         .foreach { case (id, c) => visited(id) = c }
-      val graphDf = Artifacts.read(spark, idx, "knn_graph")
+      val graphDf = snap.read("knn_graph")
       var hop = 0
       var frontierChanged = true
       while (hop < hops && frontierChanged) {
@@ -1227,14 +1209,14 @@ object IndexCorpus extends IndexLifecycle {
     }
 
     val membersAll = restrictCells(
-      Artifacts.read(spark, idx, "assignments"), probedCells, cbN)
+      snap.read("assignments"), probedCells, cbN)
       .filter(col("id") =!= probeId)
     // retraction: tombstoned ids must not surface — the anti-join
     // runs on the CELL-RESTRICTED candidates, never the whole index
     val members0 =
-      if (Artifacts.exists(spark, idx, "tombstones"))
+      if (snap.has("tombstones"))
         membersAll.join(
-          Artifacts.read(spark, idx, "tombstones").select(col("id")),
+          snap.read("tombstones").select(col("id")),
           Seq("id"), "left_anti")
       else membersAll
     // pre-filter INSIDE the probed cells: cell restriction and the
@@ -1247,15 +1229,15 @@ object IndexCorpus extends IndexLifecycle {
     // still applies the stratum filter and the tombstone retraction.
     def cellRestrict(df: DataFrame): DataFrame =
       restrictCells(df, probedCells, cbN).drop("cell", "cb")
-    val books = codebookArrays(spark, idx).zipWithIndex.flatMap {
+    val books = codebookArrays(snap).zipWithIndex.flatMap {
       case (bk, s) => bk.zipWithIndex.map { case (c, j) =>
         (s.toLong, j.toLong) -> c
       }
     }.toMap
-    val residual = summaryFlag(spark, idx, "residual")
+    val residual = summaryFlag(snap, "residual")
     val pqM = books.keys.map(_._1).max.toInt + 1
     val sub = dims / pqM
-    val codes = cellRestrict(Artifacts.read(spark, idx, "pq_codes"))
+    val codes = cellRestrict(snap.read("pq_codes"))
     val tier = flags.getOrElse("tier", "pq")
     require(tier == "pq" || tier == "sq8", s"unknown --tier $tier")
     val adcRanked =
@@ -1264,10 +1246,10 @@ object IndexCorpus extends IndexLifecycle {
         // the broadcast range tables (reference objects inside the
         // fused kernel) and score against the FULL-precision probe —
         // asymmetric distance, same contract as q259
-        require(summaryFlag(spark, idx, "sq8"),
+        require(summaryFlag(snap, "sq8"),
           s"$idx was built without --sq8 true")
-        val (lo, wd) = rangeArrays(spark, idx, dims)
-        cellRestrict(Artifacts.read(spark, idx, "sq8_codes"))
+        val (lo, wd) = rangeArrays(snap, dims)
+        cellRestrict(snap.read("sq8_codes"))
           .join(members.select(col("id")), Seq("id"), "left_semi")
           .select(col("id"), graft.ops.VectorExpressions.sqDist(
             graft.ops.VectorExpressions.sq8UnpackDequant(col("codes"), lo, wd),
@@ -1337,7 +1319,7 @@ object IndexCorpus extends IndexLifecycle {
   def searchBatch(spark: SparkSession, args: Array[String]): DataFrame = {
     require(args.length >= 3,
       "usage: searchBatch <indexDir> <emb.parquet> <probes.parquet> [flags]")
-    atVersion(spark, args, 3)(searchBatchImpl(spark, args, None))
+    searchBatchImpl(spark, args, None)
   }
 
   /** [[searchBatch]] with the probe frame passed DIRECTLY instead of
@@ -1353,7 +1335,7 @@ object IndexCorpus extends IndexLifecycle {
     require(args.length >= 2,
       "usage: searchBatchFrame <indexDir> <emb.parquet> [flags] + frame")
     val full = args.take(2) ++ Array("__probe_frame__") ++ args.drop(2)
-    atVersion(spark, args, 2)(searchBatchImpl(spark, full, Some(probes)))
+    searchBatchImpl(spark, full, Some(probes))
   }
 
   private def searchBatchImpl(spark: SparkSession,
@@ -1369,24 +1351,29 @@ object IndexCorpus extends IndexLifecycle {
       s"searchBatch supports --tier pq|sq8|graph, got $tier")
     GraftSession.tune(spark)
     import spark.implicits._
+    val snap = Artifacts.snapshot(spark, idx, flags.get("at").map(_.toLong))
 
     // the distinct probe-id frame: from the passed frame (streaming)
     // or the probes parquet (CLI path form)
     val probeIds = probesOpt.getOrElse(spark.read.parquet(probesIn))
       .select(col(idCol).cast("long").as("pid")).distinct()
+    // ONE source frame per call: the probe vectors, the rerank probe
+    // frame and the rerank candidate scan all derive from it (each
+    // spark.read.parquet would schedule its own schema-inference job)
+    val src = spark.read.parquet(in)
 
     if (tier == "graph")
-      return searchBatchGraph(spark, idx, in, probeIds, idCol, vecCol,
+      return searchBatchGraph(spark, snap, src, probeIds, idCol, vecCol,
         k, nprobe, flags)
 
-    val cents = centroidArrays(spark, idx)
+    val cents = centroidArrays(snap)
     val dims = cents(0).length
-    val cbN = cellBucketsOf(spark, idx)
+    val cbN = cellBucketsOf(snap)
     val centsDf = cents.zipWithIndex
       .map { case (c, j) => (j.toLong, c.toSeq) }.toSeq.toDF("cell", "cv")
 
     // probe vectors: the probe-id frame semi-joins the float source
-    val probes = graft.Scratch.cache(spark.read.parquet(in)
+    val probes = graft.Scratch.cache(src
       .filter(size(col(vecCol)) === dims)
       .select(col(idCol).cast("long").as("pid"),
         SemDedup.microsVec(col(vecCol)).as("pmv"))
@@ -1433,12 +1420,12 @@ object IndexCorpus extends IndexLifecycle {
       df => if (nProbes <= maxBcast) broadcast(df) else df.hint("merge")
 
     val membersAll = restrictCells(
-      Artifacts.read(spark, idx, "assignments"),
+      snap.read("assignments"),
       probedCells.map(Long.unbox), cbN)
     val members0 =
-      if (Artifacts.exists(spark, idx, "tombstones"))
+      if (snap.has("tombstones"))
         membersAll.join(
-          Artifacts.read(spark, idx, "tombstones").select(col("id")),
+          snap.read("tombstones").select(col("id")),
           Seq("id"), "left_anti")
       else membersAll
     // candidates: a probe meets exactly its OWN probed cells' members;
@@ -1452,10 +1439,10 @@ object IndexCorpus extends IndexLifecycle {
 
     val scored =
       if (tier == "sq8") {
-        require(summaryFlag(spark, idx, "sq8"),
+        require(summaryFlag(snap, "sq8"),
           s"$idx was built without --sq8 true")
-        val (lo, wd) = rangeArrays(spark, idx, dims)
-        restrictCells(Artifacts.read(spark, idx, "sq8_codes"),
+        val (lo, wd) = rangeArrays(snap, dims)
+        restrictCells(snap.read("sq8_codes"),
           probedCells.map(Long.unbox), cbN).drop("cell", "cb")
           .join(cand.select(col("pid"), col("id")), Seq("id"))
           .join(probeSide(probes), Seq("pid"))
@@ -1465,7 +1452,7 @@ object IndexCorpus extends IndexLifecycle {
                 col("codes"), lo, wd),
               col("pmv")).as("adc"))
       } else {
-        val books = codebookArrays(spark, idx)
+        val books = codebookArrays(snap)
         val pqM = books.length
         val sub = dims / pqM
         val bookDf = books.zipWithIndex.flatMap { case (bk, s) =>
@@ -1473,7 +1460,7 @@ object IndexCorpus extends IndexLifecycle {
             (s.toLong, j.toLong, c.toSeq)
           }
         }.toSeq.toDF("s", "code", "bv")
-        val residual = summaryFlag(spark, idx, "residual")
+        val residual = summaryFlag(snap, "residual")
         if (!residual) {
           // per-(probe, s, code) distance tables, derived
           // distributedly: probes x broadcast codebooks
@@ -1483,7 +1470,7 @@ object IndexCorpus extends IndexLifecycle {
               graft.ops.VectorExpressions.sqDist(
                 slice(col("pmv"), col("s").cast("int") * sub + 1, lit(sub)),
                 col("bv").cast("array<long>")).as("d"))
-          restrictCells(Artifacts.read(spark, idx, "pq_codes"),
+          restrictCells(snap.read("pq_codes"),
             probedCells.map(Long.unbox), cbN).drop("cell", "cb")
             .join(cand.select(col("pid"), col("id")), Seq("id"))
             .join(probeSide(table), Seq("pid", "s", "code"))
@@ -1501,7 +1488,7 @@ object IndexCorpus extends IndexLifecycle {
               graft.ops.VectorExpressions.sqDist(
                 slice(col("rmv"), col("s").cast("int") * sub + 1, lit(sub)),
                 col("bv").cast("array<long>")).as("d"))
-          restrictCells(Artifacts.read(spark, idx, "pq_codes"),
+          restrictCells(snap.read("pq_codes"),
             probedCells.map(Long.unbox), cbN).drop("cb")
             .join(cand.select(col("pid"), col("id")), Seq("id"))
             .join(probeSide(table), Seq("pid", "cell", "s", "code"))
@@ -1525,14 +1512,14 @@ object IndexCorpus extends IndexLifecycle {
           .withColumn("rn", row_number().over(wTop))
           .filter(col("rn") <= n)
           .select(col("pid"), col("id"), col("adc"))
-        val pf = spark.read.parquet(in)
+        val pf = src
           .filter(size(col(vecCol)) === dims)
           .select(col(idCol).cast("long").as("pid"), col(vecCol).as("pv"))
           .join(probeIds, Seq("pid"), "left_semi")
         val wCos = org.apache.spark.sql.expressions.Window
           .partitionBy(col("pid"))
           .orderBy(col("cos_x1e6").desc, col("id"))
-        spark.read.parquet(in).filter(size(col(vecCol)) === dims)
+        src.filter(size(col(vecCol)) === dims)
           .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
           .join(shortlist, Seq("id"))
           .join(probeSide(pf), Seq("pid"))
@@ -1563,22 +1550,23 @@ object IndexCorpus extends IndexLifecycle {
     * (the batch bet everywhere in this file), with per-hop state
     * bounded at probes x beam rows and lineage cut per hop.
     */
-  private def searchBatchGraph(spark: SparkSession, idx: String,
-      in: String, probeIds: DataFrame, idCol: String, vecCol: String,
+  private def searchBatchGraph(spark: SparkSession, snap: Artifacts.Snapshot,
+      src: DataFrame, probeIds: DataFrame, idCol: String, vecCol: String,
       k: Int, nprobe: Int, flags: Map[String, String]): DataFrame = {
     import spark.implicits._
+    val idx = snap.idx
     val beam = flags.getOrElse("beam", "8").toInt
     val hops = flags.getOrElse("hops", "2").toInt
     require(k <= beam, s"--k $k must be <= --beam $beam")
-    require(Artifacts.exists(spark, idx, "knn_graph"),
+    require(snap.has("knn_graph"),
       s"$idx has no knn_graph artifact (run `graph` first)")
-    val cents = centroidArrays(spark, idx)
+    val cents = centroidArrays(snap)
     val dims = cents(0).length
-    val cbN = cellBucketsOf(spark, idx)
+    val cbN = cellBucketsOf(snap)
     val centsDf = cents.zipWithIndex
       .map { case (c, j) => (j.toLong, c.toSeq) }.toSeq.toDF("cell", "cv")
 
-    val probes = graft.Scratch.cache(spark.read.parquet(in)
+    val probes = graft.Scratch.cache(src
       .filter(size(col(vecCol)) === dims)
       .select(col(idCol).cast("long").as("pid"), col(vecCol).as("pv"),
         SemDedup.microsVec(col(vecCol)).as("pmv"))
@@ -1612,8 +1600,8 @@ object IndexCorpus extends IndexLifecycle {
       df => if (nProbes <= maxBcast) broadcast(df) else df.hint("merge")
 
     val tombOpt =
-      if (Artifacts.exists(spark, idx, "tombstones"))
-        Some(Artifacts.read(spark, idx, "tombstones").select(col("id")))
+      if (snap.has("tombstones"))
+        Some(snap.read("tombstones").select(col("id")))
       else None
     val filterSql = flags.get("filter")
     val rerankN = flags.get("rerank").map(_.toInt)
@@ -1630,9 +1618,9 @@ object IndexCorpus extends IndexLifecycle {
     // default; with --rerank the walk scores by PQ-ADC — one codes
     // join per hop for the whole frame, float source only at the tail
     val walkByAdc = rerankN.isDefined
-    val residualW = walkByAdc && summaryFlag(spark, idx, "residual")
+    val residualW = walkByAdc && summaryFlag(snap, "residual")
     val adcTables: DataFrame = if (!walkByAdc) null else {
-      val books = codebookArrays(spark, idx)
+      val books = codebookArrays(snap)
       val pqM = books.length
       val sub = dims / pqM
       val bookDf = books.zipWithIndex.flatMap { case (bk, s) =>
@@ -1662,14 +1650,14 @@ object IndexCorpus extends IndexLifecycle {
     def scoreIds(cand0: DataFrame): DataFrame = {
       val live = admit(cand0)
       if (walkByAdc)
-        Artifacts.read(spark, idx, "pq_codes")
+        snap.read("pq_codes")
           .join(live, Seq("id"))
           .join(adcTables,
             if (residualW) Seq("pid", "cell", "s", "code")
             else Seq("pid", "s", "code"))
           .groupBy(col("pid"), col("id")).agg(sum(col("d")).as("c"))
       else
-        spark.read.parquet(in).filter(size(col(vecCol)) === dims)
+        src.filter(size(col(vecCol)) === dims)
           .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
           .join(live, Seq("id"))
           .join(probeSide(probes.select(col("pid"), col("pv"))), Seq("pid"))
@@ -1683,7 +1671,7 @@ object IndexCorpus extends IndexLifecycle {
         (if (walkByAdc) col("c").asc else col("c").desc), col("id"))
     // seeds: each probe's probed-cell members, scored, top-beam
     val seedCand = restrictCells(
-      Artifacts.read(spark, idx, "assignments"), probedCells, cbN)
+      snap.read("assignments"), probedCells, cbN)
       .join(routed, Seq("cell"))
       .filter(col("id") =!= col("pid"))
       .select(col("pid"), col("id"))
@@ -1699,7 +1687,7 @@ object IndexCorpus extends IndexLifecycle {
         .withColumn("rn", row_number().over(wBeam))
         .filter(col("rn") <= beam).drop("rn"))
     visited.count() // materializes the seed beam once
-    val graphDf = Artifacts.read(spark, idx, "knn_graph")
+    val graphDf = snap.read("knn_graph")
     var hop = 0
     var frontierLive = true
     while (hop < hops && frontierLive) {
@@ -1740,7 +1728,7 @@ object IndexCorpus extends IndexLifecycle {
         val wCos = org.apache.spark.sql.expressions.Window
           .partitionBy(col("pid"))
           .orderBy(col("cos_x1e6").desc, col("id"))
-        spark.read.parquet(in).filter(size(col(vecCol)) === dims)
+        src.filter(size(col(vecCol)) === dims)
           .select(col(idCol).cast("long").as("id"), col(vecCol).as("v"))
           .join(shortlist, Seq("id"))
           .join(probeSide(probes.select(col("pid"), col("pv"))), Seq("pid"))

@@ -10,10 +10,14 @@ import graft.GraftSession
 
 /** The lifecycle both persisted index families share over
   * [[Artifacts]] — [[LexIndex]] (BM25) and [[IndexCorpus]] (IVF/PQ/
-  * SQ8/graph): CLI session setup and dispatch, flag parsing, `--at`
-  * time-travel pinning, the post-commit plan refresh, the tombstone
-  * `delete` and `compact` drivers, and the audit surface (`history`,
-  * `fsck`, `export`, `contention`). A family supplies only what
+  * SQ8/graph): CLI session setup and dispatch, flag parsing, the
+  * post-commit plan refresh, the tombstone `delete` and `compact`
+  * drivers, and the audit surface (`history`, `fsck`, `export`,
+  * `contention`). Every command reads through ONE
+  * [[Artifacts.Snapshot]] it resolves at its start (a reader's `--at
+  * V` resolves retained version V instead of the newest); a mutating
+  * command's working state is its base snapshot overridden by its
+  * pending segments (`base ++ pending`). A family supplies only what
   * differs — its membership artifact and default id column, its
   * compact plan, its stats step, its per-version history columns and
   * its fsck invariants — and keeps its own artifacts, flag defaults
@@ -42,25 +46,25 @@ trait IndexLifecycle {
   /** Default `--id` column of a `delete` input. */
   protected def idColumn: String
 
-  /** The stats step: re-derive the family's state-dependent artifacts
-    * from a pending map (identity when the family has none). Runs
-    * inside every delete/compact commit attempt, against the rebased
-    * working state.
+  /** The stats step: the full map to publish for the working state
+    * `work`, with the family's state-dependent artifacts re-derived
+    * from it (`work`'s own map when the family has none). Runs inside
+    * every delete/compact commit attempt, against the rebased working
+    * state.
     */
-  protected def withStats(spark: SparkSession, idx: String,
-      pend: Map[String, Seq[String]]): Map[String, Seq[String]] = pend
+  protected def withStats(spark: SparkSession,
+      work: Artifacts.Snapshot): Map[String, Seq[String]] = work.segments
 
   /** The compact plan: (artifact, filter tombstones?, bucket) per
     * content artifact, in write order — see [[compactImpl]].
     */
-  protected def compactPlan(spark: SparkSession, idx: String,
+  protected def compactPlan(base: Artifacts.Snapshot,
       thresholdPm: Option[Long]): Seq[(String, Boolean, Option[Artifacts.Bucket])]
 
   /** Family-specific compact folds of artifacts the tombstone kernel
     * does not apply to (identity when none).
     */
-  protected def compactFolds(spark: SparkSession, idx: String,
-      baseMap: Map[String, Seq[String]],
+  protected def compactFolds(spark: SparkSession, base: Artifacts.Snapshot,
       pend: Map[String, Seq[String]]): Map[String, Seq[String]] = pend
 
   /** The family's per-version `history` columns (all long). */
@@ -74,7 +78,8 @@ trait IndexLifecycle {
   protected def invariants: Seq[String]
 
   /** (observed, expected) per [[invariants]] entry, in that order. */
-  protected def audit(spark: SparkSession, idx: String): Seq[(Long, Long)]
+  protected def audit(spark: SparkSession,
+      snap: Artifacts.Snapshot): Seq[(Long, Long)]
 
   def main(args: Array[String]): Unit = {
     val spark = SparkSession.builder()
@@ -106,19 +111,6 @@ trait IndexLifecycle {
       case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
     }.toMap
 
-  /** TIME-TRAVEL read: run `body` with every artifact of `args(0)`
-    * resolved at manifest V when the flags from `from` on carry
-    * `--at V` ([[Artifacts.withPinned]]) — the answer is the one the
-    * index served at that version; later updates and deletes are
-    * invisible, exactly.
-    */
-  protected def atVersion[A](spark: SparkSession, args: Array[String],
-      from: Int)(body: => A): A =
-    flagsOf(args, from).get("at") match {
-      case Some(v) => Artifacts.withPinned(spark, args(0), v.toLong)(body)
-      case None    => body
-    }
-
   /** Invalidate any cached plan that scans the index files. Every
     * mutating command calls this after its commit: a search may have
     * left a (query-scoped, not-yet-released) cached scan of the old
@@ -128,25 +120,11 @@ trait IndexLifecycle {
   protected def refresh(spark: SparkSession, idx: String): Unit =
     spark.catalog.refreshByPath(idx)
 
-  /** Working-state read: the current manifest overridden by a
-    * command's PENDING (written, not yet committed) segments.
-    */
-  protected def rd(spark: SparkSession, idx: String, name: String,
-      pending: Map[String, Seq[String]]): DataFrame =
-    pending.get(name) match {
-      case Some(segs) => Artifacts.readSegs(spark, idx, name, segs)
-      case None       => Artifacts.read(spark, idx, name)
-    }
-
-  /** Live ids = [[members]] minus tombstones, against the working
-    * state (`pending` overrides).
-    */
-  protected def liveIds(spark: SparkSession, idx: String,
-      pending: Map[String, Seq[String]]): DataFrame = {
-    val all = rd(spark, idx, members, pending).select(col("id"))
-    if (pending.get("tombstones").exists(_.nonEmpty) ||
-      Artifacts.exists(spark, idx, "tombstones"))
-      all.join(rd(spark, idx, "tombstones", pending).select(col("id")),
+  /** Live ids = [[members]] minus tombstones, in `work`. */
+  protected def liveIds(work: Artifacts.Snapshot): DataFrame = {
+    val all = work.read(members).select(col("id"))
+    if (work.has("tombstones"))
+      all.join(work.read("tombstones").select(col("id")),
         Seq("id"), "left_anti")
     else all
   }
@@ -165,8 +143,9 @@ trait IndexLifecycle {
     *
     * Structural command: the doomed set is the input semi-joined
     * against the LIVE membership, which any competing commit can
-    * change, so every attempt re-derives from its base — one pruned id
-    * scan + a wave-sized semi-join ([[Artifacts.commitStructuralWithRetry]]).
+    * change, so every attempt re-derives from its base snapshot — one
+    * pruned id scan + a wave-sized semi-join
+    * ([[Artifacts.commitStructuralWithRetry]]).
     */
   def delete(spark: SparkSession, args: Array[String]): Seq[(String, Long)] = {
     require(args.length >= 2, "usage: delete <indexDir> <ids.parquet> [flags]")
@@ -177,18 +156,18 @@ trait IndexLifecycle {
     Artifacts.applyRetentionFlag(spark, flags, idx)
     Artifacts.requireManifest(spark, idx)
     var nDel = 0L
-    Artifacts.commitStructuralWithRetry(spark, idx) { _ =>
+    Artifacts.commitStructuralWithRetry(spark, idx) { base =>
       val doomed = graft.Scratch.localCheckpoint(
         spark.read.parquet(in).select(col(idCol).cast("long").as("id"))
           .distinct()
-          .join(liveIds(spark, idx, Map.empty), Seq("id"), "left_semi"))
+          .join(liveIds(base), Seq("id"), "left_semi"))
       // counted write (round 17): the deleted-row count rides the
       // tombstone write instead of a separate pre-write count job
       val (segT, n, _) = Artifacts.writeSegmentCounted(
         spark, idx, "tombstones", doomed)
       nDel = n
-      Artifacts.merged(spark, idx, withStats(spark, idx, Map("tombstones" ->
-        (Artifacts.segmentsOf(spark, idx, "tombstones") :+ segT))))
+      withStats(spark,
+        base ++ Map("tombstones" -> (base.segs("tombstones") :+ segT)))
     }
     Artifacts.vacuum(spark, idx)
     refresh(spark, idx)
@@ -214,7 +193,7 @@ trait IndexLifecycle {
     *
     * DELTA-REBASE commit ([[Artifacts.commitRewriteWithDeltaRetry]]):
     * the corpus-sized consolidation derives ONCE from the base
-    * manifest's segment lists; a commit landing mid-compact (an ingest
+    * snapshot's segment lists; a commit landing mid-compact (an ingest
     * wave, a delete) is merged as appends-since-base on retry, with
     * only the stats step re-derived per attempt. Post-compact sizes
     * come from parquet FOOTERS (round 18), never a read-back scan.
@@ -233,36 +212,34 @@ trait IndexLifecycle {
     val thresholdPm = flags.get("threshold").map(_.toLong)
     GraftSession.tune(spark)
     Artifacts.applyRetentionFlag(spark, flags, idx)
-    Artifacts.requireManifest(spark, idx)
     refresh(spark, idx)
-    val baseMap = Artifacts.currentManifest(spark, idx)
-      .map(_._2).getOrElse(Map.empty)
-    val tomb = baseMap.get("tombstones").filter(_.nonEmpty).map { segs =>
-      graft.Scratch.cache(Artifacts.readSegs(spark, idx, "tombstones", segs)
-        .select(col("id")).distinct())
-    }
+    val base = Artifacts.snapshot(spark, idx)
+    val tomb = Option.when(base.has("tombstones"))(
+      graft.Scratch.cache(base.read("tombstones").select(col("id")).distinct()))
     var pend = Map.empty[String, Seq[String]]
-    compactPlan(spark, idx, thresholdPm).foreach { case (name, filtered, bucket) =>
+    compactPlan(base, thresholdPm).foreach { case (name, filtered, bucket) =>
       Artifacts.compactSegments(spark, idx, name, tomb, thresholdPm,
-        filtered, bucket, baseSegs = Some(baseMap.getOrElse(name, Seq.empty)))
+        filtered, bucket, base.segs(name))
         .foreach(segs => pend += name -> segs)
     }
-    pend = compactFolds(spark, idx, baseMap, pend)
+    pend = compactFolds(spark, base, pend)
     tomb.foreach { ts =>
       pend = Artifacts.withReplaced(spark, idx, pend, "tombstones", ts)
     }
     if (crashBeforeCommit)
       sys.error("injected crash: compact before manifest commit")
-    Artifacts.commitRewriteWithDeltaRetry(spark, idx, baseMap, pend,
-      finish = withStats(spark, idx, _))
+    Artifacts.commitRewriteWithDeltaRetry(spark, idx, base.segments, pend,
+      finish = withStats(spark, _))
     Artifacts.vacuum(spark, idx)
     refresh(spark, idx)
-    pend.keys.toSeq.sorted.map(name => name -> Artifacts.countRows(spark, idx, name))
+    val after = Artifacts.snapshot(spark, idx)
+    pend.keys.toSeq.sorted.map(name => name -> after.countRows(name))
   }
 
   /** One row per RETAINED manifest version (`history <indexDir>`):
-    * the version, the family's [[versionStats]] — exactly the state a
-    * `search --at version` serves from — and the starvation-risk
+    * the version, the family's [[versionStats]] — read through that
+    * version's snapshot, exactly the state a `search --at version`
+    * serves from — and the starvation-risk
     * columns (round 17): contention events that landed at the version
     * and the worst lost-attempt count among them. q304/q309 re-derive
     * every row in closed form.
@@ -271,8 +248,8 @@ trait IndexLifecycle {
     require(args.length >= 1, "usage: history <indexDir>")
     val idx = args(0)
     GraftSession.tune(spark)
-    Artifacts.requireManifest(spark, idx)
     val chain = Artifacts.manifestVersions(spark, idx)
+    require(chain.nonEmpty, s"$idx has no artifact manifest")
     val cont = Artifacts.contentionByVersion(spark, idx)
     val rows = chain.zip(versionStats(spark, idx, chain)).map { case (v, st) =>
       val (ev, worst) = cont.getOrElse(v, (0L, 0L))
@@ -298,11 +275,11 @@ trait IndexLifecycle {
     require(args.length >= 1, "usage: fsck <indexDir>")
     val idx = args(0)
     GraftSession.tune(spark)
-    Artifacts.requireManifest(spark, idx)
+    val snap = Artifacts.snapshot(spark, idx)
     import spark.implicits._
-    val (_, missing) = Artifacts.segmentCheck(spark, idx)
+    val (_, missing) = Artifacts.segmentCheck(spark, snap)
     val values =
-      try audit(spark, idx)
+      try audit(spark, snap)
       catch { case _: Throwable if missing > 0 => invariants.map(_ => (-1L, 0L)) }
     // strands read the telemetry files alone — computable even when
     // content artifacts are lost, so they sit outside the try

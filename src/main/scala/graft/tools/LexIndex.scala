@@ -245,9 +245,9 @@ object LexIndex extends IndexLifecycle {
   def ingestFrame(spark: SparkSession, idx: String, docs: DataFrame,
       idCol: String, textCol: String): Long = {
     GraftSession.tune(spark)
-    Artifacts.requireManifest(spark, idx)
+    val snap = Artifacts.snapshot(spark, idx)
 
-    val stats0 = Artifacts.collectKV(spark, idx, "stats")
+    val stats0 = snap.collectKV("stats")
     val gram = stats0("gram").toInt
     val buckets = stats0("buckets")
     // localCheckpoint cuts lineage back to the artifacts this command
@@ -255,7 +255,7 @@ object LexIndex extends IndexLifecycle {
     // against the docids MANIFEST, not doclens: a zero-token document
     // never appears in doclens, so a doclens anti-join would re-admit
     // it and double-count n.
-    val known = Artifacts.read(spark, idx, "docids").select(col("id"))
+    val known = snap.read("docids").select(col("id"))
     val fresh = graft.Scratch.localCheckpoint(
       docs
         .select(col(idCol).cast("long").as("id"), col(textCol).as("text"))
@@ -289,15 +289,13 @@ object LexIndex extends IndexLifecycle {
     val deltas = Map("postings" -> Seq(segP), "doclens" -> Seq(segD),
       "docids" -> Seq(segI))
     Artifacts.commitAppendsWithRetry(spark, idx, deltas,
-      finish = pend => pend + ("stats" ->
-        Seq(Artifacts.writeSegment(spark, idx, "stats",
-          statsFrame(spark, idx, pend)))),
-      validateRebase = () => {
+      finish = withStats(spark, _),
+      validateRebase = base => {
         val mine = Artifacts.readSegs(spark, idx, "docids", Seq(segI))
-        val clash = Artifacts.read(spark, idx, "docids")
+        val clash = base.read("docids")
           .join(mine, Seq("id"), "left_semi").count()
         if (clash > 0) throw Artifacts.CommitConflictException(idx,
-          Artifacts.currentVersion(spark, idx) + 1,
+          base.version + 1,
           s"$clash doc ids were concurrently ingested by another " +
             "writer; re-run this ingest to re-dedup against the merged state")
       })
@@ -307,20 +305,18 @@ object LexIndex extends IndexLifecycle {
   }
 
   /** `history` columns: per-version collection statistics (n, toktot,
-    * avgdl) — each version's scalar stats artifact read through
-    * `Artifacts.withPinned`, so the row is exactly what a
-    * `search --at version` serves from, and `history` runs ZERO Spark
-    * jobs (manifest + stats-footer metadata only). q304's oracle
-    * re-derives every row in closed form from the corpus and the
-    * command sequence.
+    * avgdl) — each version's scalar stats artifact read through that
+    * version's snapshot (`Artifacts.snapshot(…, Some(v))`), so the row
+    * is exactly what a `search --at version` serves from, and
+    * `history` runs ZERO Spark jobs (manifest + stats-footer metadata
+    * only). q304's oracle re-derives every row in closed form from
+    * the corpus and the command sequence.
     */
   protected def historyColumns = Seq("n", "toktot", "avgdl")
   protected def versionStats(spark: SparkSession, idx: String,
       chain: Seq[Long]): Seq[Seq[Long]] =
     chain.map { v =>
-      val s0 = Artifacts.withPinned(spark, idx, v) {
-        Artifacts.collectKV(spark, idx, "stats")
-      }
+      val s0 = Artifacts.snapshot(spark, idx, Some(v)).collectKV("stats")
       Seq(s0("n"), s0("toktot"), s0("avgdl"))
     }
 
@@ -343,20 +339,20 @@ object LexIndex extends IndexLifecycle {
     */
   protected def invariants = Seq("postings_dl_mismatch",
     "postings_tf_sum_mismatch", "stats_n", "stats_toktot")
-  protected def audit(spark: SparkSession, idx: String): Seq[(Long, Long)] = {
-    val stats0 = Artifacts.collectKV(spark, idx, "stats")
-    val live = graft.Scratch.cache(liveIds(spark, idx, Map.empty))
+  protected def audit(spark: SparkSession,
+      snap: Artifacts.Snapshot): Seq[(Long, Long)] = {
+    val stats0 = snap.collectKV("stats")
+    val live = graft.Scratch.cache(liveIds(snap))
     val postings = graft.Scratch.cache(
-      Artifacts.read(spark, idx, "postings")
-        .select(col("id"), col("tf"), col("dl")))
-    val doclens = Artifacts.read(spark, idx, "doclens")
+      snap.read("postings").select(col("id"), col("tf"), col("dl")))
+    val doclens = snap.read("doclens")
       .select(col("id"), col("dl").as("dl_doc"))
     // ALL FOUR audit scalars in ONE job (round 18): each invariant
     // contributes a tagged branch to a single union-aggregate — the
     // previous shape scheduled four separate count/sum jobs per fsck
     val audit = live
       .select(lit("n").as("inv"), lit(1L).as("v"))
-      .unionByName(Artifacts.read(spark, idx, "doclens")
+      .unionByName(snap.read("doclens")
         .join(broadcast(live), Seq("id"), "left_semi")
         .select(lit("tok").as("inv"), col("dl").as("v")))
       .unionByName(postings.select(col("id"), col("dl")).distinct()
@@ -383,37 +379,38 @@ object LexIndex extends IndexLifecycle {
     * a delete wave needs back). Postings keep the bucket count the
     * index was built with.
     */
-  protected def compactPlan(spark: SparkSession, idx: String,
+  protected def compactPlan(base: Artifacts.Snapshot,
       thresholdPm: Option[Long]): Seq[(String, Boolean, Option[Artifacts.Bucket])] = {
-    val buckets = Artifacts.collectKV(spark, idx, "stats")("buckets")
+    val buckets = base.collectKV("stats")("buckets")
     Seq(("postings", true, Some(termBucket(buckets))), ("doclens", true, None)) ++
       (if (thresholdPm.isEmpty) Seq(("docids", false, None)) else Nil)
   }
 
   /** The stats step: the scalar stats frame re-derived from the
-    * working state, so delete/compact (and every retry attempt) leave
-    * n / avgdl counting exactly the searchable documents.
+    * working state, so update/delete/compact (and every retry attempt)
+    * leave n / avgdl counting exactly the searchable documents.
     */
-  override protected def withStats(spark: SparkSession, idx: String,
-      pend: Map[String, Seq[String]]): Map[String, Seq[String]] =
-    Artifacts.withReplaced(spark, idx, pend, "stats", statsFrame(spark, idx, pend))
+  override protected def withStats(spark: SparkSession,
+      work: Artifacts.Snapshot): Map[String, Seq[String]] =
+    Artifacts.withReplaced(spark, work.idx, work.segments, "stats",
+      statsFrame(spark, work))
 
-  /** The scalar stats frame recomputed from the CURRENT live state
-    * (pending overrides) — shared by build/update/delete/compact so n
-    * and avgdl always reflect exactly the searchable documents.
+  /** The scalar stats frame recomputed from the live state of `work`
+    * — shared by update/delete/compact so n and avgdl always reflect
+    * exactly the searchable documents.
     */
-  private def statsFrame(spark: SparkSession, idx: String,
-      pending: Map[String, Seq[String]]): DataFrame = {
+  private def statsFrame(spark: SparkSession,
+      work: Artifacts.Snapshot): DataFrame = {
     import spark.implicits._
-    val stats0 = Artifacts.collectKV(spark, idx, "stats")
-    val live = graft.Scratch.cache(liveIds(spark, idx, pending))
+    val stats0 = work.collectKV("stats")
+    val live = graft.Scratch.cache(liveIds(work))
     // BOTH scalars in ONE job (round 18): n rides a unit-count branch
     // unioned under the toktot aggregate — the previous shape ran a
     // live.count() job and then a separate doclens-sum job on every
     // stats rewrite (every lex ingest/delete/compact attempt, and
     // once per streaming micro-batch on q275's maintenance path)
     val agg = live.select(lit(1L).as("cnt"), lit(0L).as("dl"))
-      .unionByName(rd(spark, idx, "doclens", pending)
+      .unionByName(work.read("doclens")
         .join(broadcast(live), Seq("id"), "left_semi")
         .select(lit(0L).as("cnt"), col("dl")))
       .agg(coalesce(sum(col("cnt")), lit(0L)),
@@ -448,18 +445,14 @@ object LexIndex extends IndexLifecycle {
     */
   def search(spark: SparkSession, args: Array[String]): DataFrame = {
     require(args.length >= 2, "usage: search <indexDir> <query> [flags]")
-    atVersion(spark, args, 2)(searchImpl(spark, args))
-  }
-
-  private def searchImpl(spark: SparkSession, args: Array[String]): DataFrame = {
     val (idx, query) = (args(0), args(1))
     val flags = flagsOf(args, 2)
     val k = flags.getOrElse("k", "10").toInt
     val filterSql = flags.get("filter")
     GraftSession.tune(spark)
-    import spark.implicits._
+    val snap = Artifacts.snapshot(spark, idx, flags.get("at").map(_.toLong))
 
-    val stats = Artifacts.collectKV(spark, idx, "stats")
+    val stats = snap.collectKV("stats")
     val n = stats("n")
     val avgdl = stats("avgdl")
     val gram = stats("gram").toInt
@@ -477,13 +470,12 @@ object LexIndex extends IndexLifecycle {
       // a query shorter than the gram has no terms, hence no candidates
       return spark.range(0).select(col("id"), col("id").as("score"))
     val tbs = terms.map(t => Long.box(termBucketOf(t, buckets))).distinct
-    val qPost0 = Artifacts.read(spark, idx, "postings")
+    val qPost0 = snap.read("postings")
       .filter(col("tb").isin(tbs: _*))
       .filter(col("t").isin(terms: _*))
     val qPost = graft.Scratch.cache(
-      if (Artifacts.exists(spark, idx, "tombstones"))
-        qPost0.join(
-          Artifacts.read(spark, idx, "tombstones").select(col("id")),
+      if (snap.has("tombstones"))
+        qPost0.join(snap.read("tombstones").select(col("id")),
           Seq("id"), "left_anti")
       else qPost0)
     val dfq = broadcast(qPost
@@ -530,7 +522,7 @@ object LexIndex extends IndexLifecycle {
   def searchBatch(spark: SparkSession, args: Array[String]): DataFrame = {
     require(args.length >= 2,
       "usage: searchBatch <indexDir> <queries.parquet> [flags]")
-    atVersion(spark, args, 2)(searchBatchImpl(spark, args, None))
+    searchBatchImpl(spark, args, None)
   }
 
   /** [[searchBatch]] with the query frame passed DIRECTLY instead of
@@ -545,7 +537,7 @@ object LexIndex extends IndexLifecycle {
     require(args.length >= 1,
       "usage: searchBatchFrame <indexDir> [flags] + frame")
     val full = args.take(1) ++ Array("__query_frame__") ++ args.drop(1)
-    atVersion(spark, args, 1)(searchBatchImpl(spark, full, Some(queries)))
+    searchBatchImpl(spark, full, Some(queries))
   }
 
   private def searchBatchImpl(spark: SparkSession,
@@ -568,8 +560,9 @@ object LexIndex extends IndexLifecycle {
     // exchange of the probe pairs
     val maxBcast = flags.getOrElse("max-broadcast-probes", "262144").toLong
     GraftSession.tune(spark)
+    val snap = Artifacts.snapshot(spark, idx, flags.get("at").map(_.toLong))
 
-    val stats = Artifacts.collectKV(spark, idx, "stats")
+    val stats = snap.collectKV("stats")
     val n = stats("n")
     val avgdl = stats("avgdl")
     val gram = stats("gram").toInt
@@ -592,7 +585,7 @@ object LexIndex extends IndexLifecycle {
         col("n"))
       .limit(maxInline + 1).collect()
     val inline = termRows.length <= maxInline
-    val postingsAll = Artifacts.read(spark, idx, "postings")
+    val postingsAll = snap.read("postings")
     // (query, term) pair total for the broadcast cap: exact from the
     // inline term rows; past the cap it rides the bucket-union job
     var nPairs = termRows.map(_.getLong(2)).sum
@@ -616,9 +609,8 @@ object LexIndex extends IndexLifecycle {
       else scanned0.join(broadcast(qTerms.select(col("t")).distinct()),
         Seq("t"), "left_semi")
     val qPost = graft.Scratch.cache(
-      if (Artifacts.exists(spark, idx, "tombstones"))
-        scanned.join(
-          Artifacts.read(spark, idx, "tombstones").select(col("id")),
+      if (snap.has("tombstones"))
+        scanned.join(snap.read("tombstones").select(col("id")),
           Seq("id"), "left_anti")
       else scanned)
     // df is a PER-TERM global — derived once from the restricted

@@ -25,22 +25,24 @@ class ArtifactsSpec extends AnyFunSuite {
     val seg0 = Artifacts.writeSegment(spark, idx, "rows",
       Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
     // written but uncommitted: manifest readers see nothing
-    assert(Artifacts.currentManifest(spark, idx).isEmpty)
+    assert(Artifacts.currentVersion(spark, idx) == -1L)
     assert(!Artifacts.exists(spark, idx, "rows") ||
-      Artifacts.segmentsOf(spark, idx, "rows").isEmpty)
+      Artifacts.snapshot(spark, idx).segs("rows").isEmpty)
     Artifacts.commit(spark, idx, Map("rows" -> Seq(seg0)))
-    assert(Artifacts.currentManifest(spark, idx).map(_._1).contains(0L))
+    assert(Artifacts.currentVersion(spark, idx) == 0L)
     assert(Artifacts.read(spark, idx, "rows").count() == 2L)
 
     // append via the pending-map helper, single flip
-    val pend = Artifacts.withAppended(spark, idx, Map(), "rows",
+    val pend = Artifacts.withAppended(spark, Artifacts.snapshot(spark, idx),
+      Map(), "rows",
       Seq((3L, "c")).toDF("id", "v"))
     assert(Artifacts.read(spark, idx, "rows").count() == 2L,
       "pending append leaked before commit")
-    Artifacts.commit(spark, idx, Artifacts.merged(spark, idx, pend))
-    assert(Artifacts.currentManifest(spark, idx).map(_._1).contains(1L))
+    Artifacts.commit(spark, idx,
+      (Artifacts.snapshot(spark, idx) ++ pend).segments)
+    assert(Artifacts.currentVersion(spark, idx) == 1L)
     assert(Artifacts.read(spark, idx, "rows").count() == 3L)
-    assert(Artifacts.segmentsOf(spark, idx, "rows").size == 2)
+    assert(Artifacts.snapshot(spark, idx).segs("rows").size == 2)
   }
 
   test("bucketed segments: partition column appears, normalizes to " +
@@ -110,7 +112,7 @@ class ArtifactsSpec extends AnyFunSuite {
     Artifacts.commit(spark, idx, Map("rows" -> Seq(segA)))       // v0
     // the external reader resolves v0 ONCE and pins its segment list
     val pinnedVer = Artifacts.manifestVersions(spark, idx).max
-    val pinned = Artifacts.manifestAt(spark, idx, pinnedVer)("rows")
+    val pinned = Artifacts.snapshot(spark, idx, Some(pinnedVer)).segs("rows")
     val before = Artifacts.readSegs(spark, idx, "rows", pinned)
       .orderBy(col("id")).collect().toSeq
 
@@ -138,14 +140,14 @@ class ArtifactsSpec extends AnyFunSuite {
       assert(!new java.io.File(s"$idx/rows/$segA").exists(),
         "window-1 vacuum left the superseded segment")
       intercept[Exception] {
-        Artifacts.manifestAt(spark, idx, pinnedVer)
+        Artifacts.snapshot(spark, idx, Some(pinnedVer)).segments
       }
     } finally spark.conf.set("spark.graft.keepManifests", "1")
   }
 
-  test("withPinned: reads inside the scope resolve the pinned " +
-    "manifest; mutating primitives refuse under a pin; frames built " +
-    "inside stay pinned after exit; unretained versions fail fast") {
+  test("snapshot at a retained version: reads resolve that manifest's " +
+    "rows and version; frames built from it stay on v0 while current " +
+    "reads see v1; unretained versions fail fast") {
     import spark.implicits._
     val idx = freshIdx()
     val segA = Artifacts.writeSegment(spark, idx, "rows",
@@ -158,36 +160,22 @@ class ArtifactsSpec extends AnyFunSuite {
       Artifacts.commit(spark, idx, Map("rows" -> Seq(segB)))      // v1
       Artifacts.vacuum(spark, idx)
 
-      // unpinned: v1; pinned to 0: v0's rows AND v0's version number
+      // current: v1; at 0: v0's rows AND v0's version number
       assert(Artifacts.read(spark, idx, "rows").count() == 1L)
-      val (verIn, oldRows) = Artifacts.withPinned(spark, idx, 0L) {
-        (Artifacts.currentManifest(spark, idx).map(_._1),
-          Artifacts.read(spark, idx, "rows"))
-      }
-      assert(verIn.contains(0L))
-      // resolution happened at construction: the frame serves v0 even
-      // after the scope exits (the time-travel search shape)
+      val v0 = Artifacts.snapshot(spark, idx, Some(0L))
+      assert(v0.version == 0L)
+      val oldRows = v0.read("rows")
+      // resolution happened at construction: the frame serves v0 while
+      // the newest manifest is v1 (the time-travel search shape)
       assert(oldRows.orderBy(col("id")).collect().map(_.getLong(0))
         .toSeq == Seq(1L, 2L))
-      // scope exited: current reads are v1 again
+      // current reads are v1
+      assert(Artifacts.snapshot(spark, idx).version == 1L)
       assert(Artifacts.read(spark, idx, "rows").count() == 1L)
 
-      // mutating primitives refuse under a pin — a commit derived
-      // from a historical snapshot would fork the version chain
-      Artifacts.withPinned(spark, idx, 0L) {
-        intercept[IllegalArgumentException] {
-          Artifacts.commit(spark, idx, Map("rows" -> Seq(segB)))
-        }
-        intercept[IllegalArgumentException] {
-          Artifacts.vacuum(spark, idx)
-        }
-      }
-      // ... and the refusal released the pin correctly (finally)
-      assert(Artifacts.read(spark, idx, "rows").count() == 1L)
-
-      // pinning a version outside the retained window fails fast
+      // a version outside the retained window fails fast
       intercept[IllegalArgumentException] {
-        Artifacts.withPinned(spark, idx, 7L)(())
+        Artifacts.snapshot(spark, idx, Some(7L))
       }
     } finally spark.conf.set("spark.graft.keepManifests", "1")
   }
@@ -229,8 +217,8 @@ class ArtifactsSpec extends AnyFunSuite {
         e.getMessage)
     }
     refused(Artifacts.read(spark, idx, "rows"))
-    refused(Artifacts.collectKV(spark, idx, "summary"))
-    refused(Artifacts.countRows(spark, idx, "rows"))
+    refused(Artifacts.snapshot(spark, idx).collectKV("summary"))
+    refused(Artifacts.snapshot(spark, idx).countRows("rows"))
     intercept[IllegalArgumentException] {
       Artifacts.requireManifest(spark, idx)
     }
@@ -251,7 +239,7 @@ class ArtifactsSpec extends AnyFunSuite {
     // threshold 300 permille: only s2 (2/4 dead) crosses; s1 (0/10)
     // stays byte-identical
     val inc = Artifacts.compactSegments(spark, idx, "rows", tomb,
-      Some(300L), filtered = true, None)
+      Some(300L), filtered = true, None, Artifacts.snapshot(spark, idx).segs("rows"))
     assert(inc.isDefined)
     assert(inc.get.head == s1, "cold segment replaced")
     assert(inc.get.size == 2 && inc.get.last != s2)
@@ -260,11 +248,12 @@ class ArtifactsSpec extends AnyFunSuite {
 
     // nothing dense any more -> None (no write at all)
     assert(Artifacts.compactSegments(spark, idx, "rows", tomb,
-      Some(300L), filtered = true, None).isEmpty)
+      Some(300L), filtered = true, None,
+      Artifacts.snapshot(spark, idx).segs("rows")).isEmpty)
 
     // full mode: one segment, tombstones gone
     val fullSegs = Artifacts.compactSegments(spark, idx, "rows", tomb,
-      None, filtered = true, None)
+      None, filtered = true, None, Artifacts.snapshot(spark, idx).segs("rows"))
     Artifacts.commit(spark, idx, Map("rows" -> fullSegs.get))
     assert(fullSegs.get.size == 1)
     assert(Artifacts.read(spark, idx, "rows").count() == 12L)
@@ -324,21 +313,22 @@ class ArtifactsSpec extends AnyFunSuite {
     val statsSegs = Seq.newBuilder[String]
     val ver = Artifacts.commitAppendsWithRetry(spark, idx,
       deltas = Map("rows" -> Seq(segA)),
-      finish = pend => {
+      finish = work => {
         finishCalls += 1
-        if (finishCalls == 1)
+        if (finishCalls == 1) {
+          val cur = Artifacts.snapshot(spark, idx)
           Artifacts.commit(spark, idx,                              // v1: B wins
-            Artifacts.merged(spark, idx, Map("rows" ->
-              (Artifacts.segmentsOf(spark, idx, "rows") :+ segB))))
+            (cur ++ Map("rows" -> (cur.segs("rows") :+ segB))).segments)
+        }
         // a state-DEPENDENT artifact derived from the working map —
         // must re-derive per attempt (the lexical stats shape)
-        val n = Artifacts.readSegs(spark, idx, "rows", pend("rows")).count()
+        val n = work.read("rows").count()
         val s = Artifacts.writeSegment(spark, idx, "stats",
           Seq(("n", n)).toDF("key", "value"))
         statsSegs += s
-        pend + ("stats" -> Seq(s))
+        work.segments + ("stats" -> Seq(s))
       },
-      validateRebase = () => validations += 1)
+      validateRebase = _ => validations += 1)
     assert(ver == 2L, s"rebased commit landed at v$ver")
     assert(finishCalls == 2 && validations == 1)
     // BOTH writers' rows serve; the re-derived stats count all 3
@@ -353,15 +343,15 @@ class ArtifactsSpec extends AnyFunSuite {
     intercept[Artifacts.CommitConflictException] {
       Artifacts.commitAppendsWithRetry(spark, idx,
         deltas = Map("rows" -> Seq(segC)),
-        finish = pend => {
+        finish = work => {
           if (first) {
             first = false
             Artifacts.commit(spark, idx,
-              Artifacts.merged(spark, idx, Map.empty))              // v3
+              Artifacts.snapshot(spark, idx).segments)              // v3
           }
-          pend
+          work.segments
         },
-        validateRebase = () => throw Artifacts.CommitConflictException(
+        validateRebase = _ => throw Artifacts.CommitConflictException(
           idx, 99L, "overlapping ids"))
     }
     assert(!Artifacts.read(spark, idx, "rows").select(col("id"))
@@ -449,10 +439,10 @@ class ArtifactsSpec extends AnyFunSuite {
       attempts += 1
       if (attempts == 1)
         Artifacts.commit(spark, idx,                                 // v1
-          Artifacts.merged(spark, idx, Map("rows" ->
-            (Artifacts.segmentsOf(spark, idx, "rows") :+
+          (Artifacts.snapshot(spark, idx) ++ Map("rows" ->
+            (Artifacts.snapshot(spark, idx).segs("rows") :+
               Artifacts.writeSegment(spark, idx, "rows",
-                Seq((7L, "W")).toDF("id", "v"))))))
+                Seq((7L, "W")).toDF("id", "v"))))).segments)
       // a full rewrite derived from the (now possibly newer) state
       val n = Artifacts.read(spark, idx, "rows").count()
       val s = Artifacts.writeSegment(spark, idx, "rows",
@@ -477,7 +467,7 @@ class ArtifactsSpec extends AnyFunSuite {
       intercept[Artifacts.CommitConflictException] {
         Artifacts.commitStructuralWithRetry(spark, idx) { _ =>
           n2 += 1
-          Artifacts.commit(spark, idx, Artifacts.merged(spark, idx, Map.empty))
+          Artifacts.commit(spark, idx, Artifacts.snapshot(spark, idx).segments)
           Map("rows" -> Seq(kept))
         }
       }
@@ -496,7 +486,7 @@ class ArtifactsSpec extends AnyFunSuite {
     val s2 = Artifacts.writeSegment(spark, idx, "rows",
       Seq((2L, "b")).toDF("id", "v"))
     Artifacts.commit(spark, idx, Map("rows" -> Seq(s1, s2)))        // v0
-    val baseMap = Artifacts.currentManifest(spark, idx).get._2
+    val baseMap = Artifacts.snapshot(spark, idx).segments
     // the "compact": consolidate the base's two segments into ONE
     val cons = Artifacts.writeSegment(spark, idx, "rows",
       Artifacts.readSegs(spark, idx, "rows", Seq(s1, s2)))
@@ -507,14 +497,14 @@ class ArtifactsSpec extends AnyFunSuite {
     var finishCalls = 0
     val ver = Artifacts.commitRewriteWithDeltaRetry(spark, idx, baseMap,
       Map("rows" -> Seq(cons)),
-      finish = m => { finishCalls += 1; m })
+      finish = work => { finishCalls += 1; work.segments })
     assert(ver == 2L)
     // only ONE publish attempt was needed (the retry loop rebases
     // BEFORE each attempt, so the competitor's pre-publish commit
     // costs zero lost attempts), and the final manifest is exactly
     // consolidated + the competitor's delta — no re-derive happened
     assert(finishCalls == 1)
-    assert(Artifacts.segmentsOf(spark, idx, "rows").toSet ==
+    assert(Artifacts.snapshot(spark, idx).segs("rows").toSet ==
       Set(cons, s3),
       "delta rebase did not keep consolidation + competitor appends")
     assert(Artifacts.read(spark, idx, "rows").select(col("id"))
@@ -522,30 +512,31 @@ class ArtifactsSpec extends AnyFunSuite {
 
     // and a LIVE lost race (competitor commits between our rebase and
     // our CAS): the retry keeps the same consolidated segment
-    val base2 = Artifacts.currentManifest(spark, idx).get._2
+    val base2 = Artifacts.snapshot(spark, idx).segments
     val cons2 = Artifacts.writeSegment(spark, idx, "rows",
       Artifacts.readSegs(spark, idx, "rows", base2("rows")))
     var calls2 = 0
     val ver2 = Artifacts.commitRewriteWithDeltaRetry(spark, idx, base2,
       Map("rows" -> Seq(cons2)),
-      finish = m => {
+      finish = work => {
         calls2 += 1
-        if (calls2 == 1) // the interleaving failpoint: v3 lands first
-          Artifacts.commit(spark, idx, Artifacts.merged(spark, idx,
-            Map("rows" -> (Artifacts.segmentsOf(spark, idx, "rows") :+
-              Artifacts.writeSegment(spark, idx, "rows",
-                Seq((4L, "d")).toDF("id", "v"))))))
-        m
+        if (calls2 == 1) { // the interleaving failpoint: v3 lands first
+          val cur = Artifacts.snapshot(spark, idx)
+          Artifacts.commit(spark, idx, (cur ++ Map("rows" ->
+            (cur.segs("rows") :+ Artifacts.writeSegment(spark, idx, "rows",
+              Seq((4L, "d")).toDF("id", "v"))))).segments)
+        }
+        work.segments
       })
     assert(ver2 == 4L && calls2 == 2)
     assert(Artifacts.read(spark, idx, "rows").select(col("id"))
       .collect().map(_.getLong(0)).toSet == Set(1L, 2L, 3L, 4L))
-    assert(Artifacts.segmentsOf(spark, idx, "rows").contains(cons2),
+    assert(Artifacts.snapshot(spark, idx).segs("rows").contains(cons2),
       "the lost race re-derived instead of delta-rebasing")
 
     // structural competitor: a rewrite that REMOVED a base segment
     // cannot be delta-merged — it must surface, not silently fold
-    val base3 = Artifacts.currentManifest(spark, idx).get._2
+    val base3 = Artifacts.snapshot(spark, idx).segments
     val cons3 = Artifacts.writeSegment(spark, idx, "rows",
       Artifacts.readSegs(spark, idx, "rows", base3("rows")))
     val other = Artifacts.writeSegment(spark, idx, "rows",
@@ -580,7 +571,7 @@ class ArtifactsSpec extends AnyFunSuite {
     assert(Artifacts.manifestVersions(spark, idx) == Seq(0L, 1L),
       "a narrower-configured process vacuumed the persisted window out")
     // v0 stays servable
-    assert(Artifacts.manifestAt(spark, idx, 0L)("rows") == Seq(segA))
+    assert(Artifacts.snapshot(spark, idx, Some(0L)).segs("rows") == Seq(segA))
     // an EXPLICIT flag is an administrative change: narrowing back to
     // 1 takes effect (the CLI contract the LexIndexSpec window test
     // pins end to end)
@@ -621,7 +612,7 @@ class ArtifactsSpec extends AnyFunSuite {
       val dst2 = s"mocks3://$dstDir/idx2"
       val written = Artifacts.exportSnapshot(spark, src, dst2, None)
       assert(written.toMap.get("rows").contains(3L))
-      assert(Artifacts.currentManifest(spark, dst2).map(_._1).contains(0L))
+      assert(Artifacts.currentVersion(spark, dst2) == 0L)
       assert(Artifacts.read(spark, dst2, "rows")
         .select(col("id")).collect().map(_.getLong(0)).toSet ==
         Set(1L, 2L, 3L))
@@ -650,8 +641,8 @@ class ArtifactsSpec extends AnyFunSuite {
       if (!fired) {
         fired = true
         Artifacts.commit(spark, idx,
-          Artifacts.merged(spark, idx, Map("rows" ->
-            (Artifacts.segmentsOf(spark, idx, "rows") :+ segB))))    // v2
+          (Artifacts.snapshot(spark, idx) ++ Map("rows" ->
+            (Artifacts.snapshot(spark, idx).segs("rows") :+ segB))).segments)    // v2
         try {
           spark.conf.set("spark.graft.vacuumGraceMs", "3600000")
           Artifacts.vacuum(spark, idx) // window 1: retires A's v1
@@ -665,7 +656,7 @@ class ArtifactsSpec extends AnyFunSuite {
     } finally Artifacts.commitAtPostClaimHook = (_, _) => ()
     // A's delta appears EXACTLY ONCE in the final manifest (the
     // round-15 code path would have re-appended it onto v2)
-    val segs = Artifacts.segmentsOf(spark, idx, "rows")
+    val segs = Artifacts.snapshot(spark, idx).segs("rows")
     assert(segs.count(_ == segA) == 1, s"duplicate delta refs: $segs")
     assert(Artifacts.read(spark, idx, "rows").select(col("id"))
       .collect().map(_.getLong(0)).sorted.toSeq == Seq(1L, 2L, 3L),
@@ -893,28 +884,28 @@ class ArtifactsSpec extends AnyFunSuite {
     val statsSegs = Seq.newBuilder[String]
     val ver = Artifacts.commitReplaceWithRetry(spark, idx,
       Map("graph" -> Seq(segG)),
-      finish = m => {
+      finish = work => {
         calls += 1
-        if (calls == 1) // failpoint: an ingest appends + commits v1
-          Artifacts.commit(spark, idx,
-            Artifacts.merged(spark, idx, Map("rows" ->
-              (Artifacts.segmentsOf(spark, idx, "rows") :+
-                Artifacts.writeSegment(spark, idx, "rows",
-                  Seq((2L, "W")).toDF("id", "v"))))))
+        if (calls == 1) { // failpoint: an ingest appends + commits v1
+          val cur = Artifacts.snapshot(spark, idx)
+          Artifacts.commit(spark, idx, (cur ++ Map("rows" ->
+            (cur.segs("rows") :+ Artifacts.writeSegment(spark, idx, "rows",
+              Seq((2L, "W")).toDF("id", "v"))))).segments)
+        }
         val s = Artifacts.writeSegment(spark, idx, "meta",
           Seq(("k", calls.toLong)).toDF("key", "value"))
         statsSegs += s
-        m + ("meta" -> Seq(s))
+        work.segments + ("meta" -> Seq(s))
       })
     assert(ver == 2L && calls == 2, s"v$ver after $calls finishes")
     // the graph pend segment was NOT re-derived, the competitor's
     // append survived, and the lost attempt's meta segment was
     // reclaimed eagerly (its segment NUMBER is even reused by the
     // retry — the reclaim runs before the next attempt's write)
-    assert(Artifacts.segmentsOf(spark, idx, "graph") == Seq(segG))
+    assert(Artifacts.snapshot(spark, idx).segs("graph") == Seq(segG))
     assert(Artifacts.read(spark, idx, "rows").count() == 2L)
     assert(statsSegs.result().size == 2)
-    assert(Artifacts.segmentsOf(spark, idx, "meta").size == 1)
+    assert(Artifacts.snapshot(spark, idx).segs("meta").size == 1)
     assert(Artifacts.read(spark, idx, "meta").head().getLong(1) == 2L,
       "the serving meta segment is not the WINNING attempt's")
   }
@@ -976,7 +967,7 @@ class ArtifactsSpec extends AnyFunSuite {
           def call(): Boolean = {
             gate.await()
             Artifacts.commitAt(spark, idx, base2, Map("rows" ->
-              (Artifacts.manifestAt(spark, idx, base2)("rows") :+ s)))
+              (Artifacts.snapshot(spark, idx, Some(base2)).segs("rows") :+ s)))
           }
         })
       }
@@ -988,7 +979,7 @@ class ArtifactsSpec extends AnyFunSuite {
       // the full rebase loop also lands both writers sequentially
       assert(Artifacts.commitAppendsWithRetry(spark, idx,
         Map("rows" -> segs2.filterNot(s => Artifacts
-          .segmentsOf(spark, idx, "rows").contains(s)).take(1)))
+          .snapshot(spark, idx).segs("rows").contains(s)).take(1)))
         == base2 + 2)
     } finally spark.conf.unset("spark.graft.conditionalCreate")
   }
@@ -1015,7 +1006,7 @@ class ArtifactsSpec extends AnyFunSuite {
       assert(e.getMessage.contains("self-test"),
         s"wrong refusal: ${e.getMessage}")
       // nothing was published
-      assert(Artifacts.currentManifest(spark, idx).isEmpty)
+      assert(Artifacts.currentVersion(spark, idx) == -1L)
       // the verdict is cached: a second commit refuses without
       // re-probing (same session, same store)
       intercept[IllegalStateException] {
@@ -1071,7 +1062,7 @@ class ArtifactsSpec extends AnyFunSuite {
           def call(): Boolean = {
             gate.await()
             Artifacts.commitAt(spark, idx, base2, Map("rows" ->
-              (Artifacts.manifestAt(spark, idx, base2)("rows") :+ s)))
+              (Artifacts.snapshot(spark, idx, Some(base2)).segs("rows") :+ s)))
           }
         })
       }
@@ -1131,7 +1122,7 @@ class ArtifactsSpec extends AnyFunSuite {
           def call(): Boolean = {
             gate.await()
             Artifacts.commitAt(spark, idx, base2, Map("rows" ->
-              (Artifacts.manifestAt(spark, idx, base2)("rows") :+ s)))
+              (Artifacts.snapshot(spark, idx, Some(base2)).segs("rows") :+ s)))
           }
         })
       }
@@ -1224,21 +1215,23 @@ class ArtifactsSpec extends AnyFunSuite {
         def raced(m: Map[String, Seq[String]]) = {
           if (races > 0) {
             races -= 1
-            Artifacts.commit(spark, idx, Artifacts.merged(spark, idx, Map.empty))
+            Artifacts.commit(spark, idx, Artifacts.snapshot(spark, idx).segments)
           }
           m
         }
         def run(): Long = kind match {
           case "append" =>
-            Artifacts.commitAppendsWithRetry(spark, idx, Map.empty, raced)
+            Artifacts.commitAppendsWithRetry(spark, idx, Map.empty,
+              work => raced(work.segments))
           case "structural" =>
             Artifacts.commitStructuralWithRetry(spark, idx)(_ =>
               raced(Map("rows" -> Seq(seg0))))
           case "rewrite" =>
             Artifacts.commitRewriteWithDeltaRetry(spark, idx, Map.empty,
-              Map.empty, raced)
+              Map.empty, work => raced(work.segments))
           case "replace" =>
-            Artifacts.commitReplaceWithRetry(spark, idx, Map.empty, raced)
+            Artifacts.commitReplaceWithRetry(spark, idx, Map.empty,
+              work => raced(work.segments))
         }
         races = 1 // loses v1 to the competitor, lands v2
         assert(run() == 2L, kind)
@@ -1294,7 +1287,7 @@ class ArtifactsSpec extends AnyFunSuite {
         Seq(("a", 1L)).toDF("key", "value"))
       Artifacts.commit(spark, idx, Map("kv" -> Seq(seg)))           // v0
       Artifacts.vacuum(spark, idx) // committed: the claim sidecar retires
-      assert(Artifacts.collectKV(spark, idx, "kv") == Map("a" -> 1L)) // memoized
+      assert(Artifacts.snapshot(spark, idx).collectKV("kv") == Map("a" -> 1L)) // memoized
       val segX = Artifacts.writeSegment(spark, idx, "other",
         Seq((0L, "x")).toDF("id", "v"))
       Artifacts.commit(spark, idx, Map("other" -> Seq(segX)))       // v1
@@ -1305,7 +1298,7 @@ class ArtifactsSpec extends AnyFunSuite {
       assert(again == seg, s"segment number not re-claimed: $again vs $seg")
       Artifacts.commit(spark, idx,
         Map("other" -> Seq(segX), "kv" -> Seq(again)))              // v2
-      assert(Artifacts.collectKV(spark, idx, "kv") ==
+      assert(Artifacts.snapshot(spark, idx).collectKV("kv") ==
         Map("b" -> 2L, "c" -> 3L),
         "the memo served the vacuumed segment's dead rows")
     } finally spark.conf.unset("spark.graft.keepManifests")
@@ -1313,7 +1306,7 @@ class ArtifactsSpec extends AnyFunSuite {
 
   test("catalog-row memo never outlives a deleted segment: a pending " +
     "segment a lost attempt reclaims, re-claimed later, collects the " +
-    "NEW rows through collectLongsSegs") {
+    "NEW rows through a working snapshot's collectLongs") {
     import spark.implicits._
     val idx = freshIdx()
     val cols = Seq("i", "x")
@@ -1325,20 +1318,21 @@ class ArtifactsSpec extends AnyFunSuite {
     var calls = 0
     var pending = ""
     Artifacts.commitAppendsWithRetry(spark, idx, Map("rows" -> Seq(delta)),
-      finish = m => {
+      finish = work => {
         calls += 1
-        if (calls > 1) m
+        if (calls > 1) work.segments
         else {
           // failpoint: a competitor commits v1, so this attempt loses
-          Artifacts.commit(spark, idx, Artifacts.merged(spark, idx,
-            Map("rows" -> (Artifacts.segmentsOf(spark, idx, "rows") :+
-              Artifacts.writeSegment(spark, idx, "rows",
-                Seq((3L, "W")).toDF("id", "v"))))))
+          val cur = Artifacts.snapshot(spark, idx)
+          Artifacts.commit(spark, idx, (cur ++ Map("rows" ->
+            (cur.segs("rows") :+ Artifacts.writeSegment(spark, idx, "rows",
+              Seq((3L, "W")).toDF("id", "v"))))).segments)
           pending = Artifacts.writeSegment(spark, idx, "meta",
             Seq((1L, 10L)).toDF("i", "x"))
-          assert(Artifacts.collectLongsSegs(spark, idx, "meta",
-            Seq(pending), cols).map(_.toSeq) == Seq(Seq(1L, 10L))) // memoized
-          m + ("meta" -> Seq(pending))
+          val pend = Map("meta" -> Seq(pending))
+          assert((work ++ pend).collectLongs("meta", cols).map(_.toSeq) ==
+            Seq(Seq(1L, 10L))) // memoized
+          work.segments ++ pend
         }
       })
     assert(calls == 2, s"$calls attempts: the first attempt did not lose")
@@ -1351,8 +1345,8 @@ class ArtifactsSpec extends AnyFunSuite {
     val again = Artifacts.writeSegment(spark, idx, "meta",
       Seq((2L, 20L), (3L, 30L)).toDF("i", "x"))
     assert(again == pending, s"segment number not re-claimed: $again vs $pending")
-    assert(Artifacts.collectLongsSegs(spark, idx, "meta", Seq(again), cols)
-      .map(_.toSeq).toSet == Set(Seq(2L, 20L), Seq(3L, 30L)),
+    assert((Artifacts.snapshot(spark, idx) ++ Map("meta" -> Seq(again)))
+      .collectLongs("meta", cols).map(_.toSeq).toSet == Set(Seq(2L, 20L), Seq(3L, 30L)),
       "the memo served the reclaimed pending segment's dead rows")
   }
 
@@ -1363,16 +1357,16 @@ class ArtifactsSpec extends AnyFunSuite {
     val seg = Artifacts.writeSegment(spark, idx, "cat",
       Seq((0L, 5L), (1L, 7L)).toDF("i", "c"))
     Artifacts.commit(spark, idx, Map("cat" -> Seq(seg)))
-    val first = Artifacts.collectLongs(spark, idx, "cat", Seq("i", "c"))
+    val first = Artifacts.snapshot(spark, idx).collectLongs("cat", Seq("i", "c"))
     first.foreach(a => a(1) = -1L) // a caller scribbling on its copy
     // the part files go away behind the layer's back: only a memo hit
     // can still answer, and it answers the committed rows
     val segDir = new java.io.File(s"$idx/cat/$seg")
     segDir.listFiles().filter(_.getName.startsWith("part-")).foreach(_.delete())
-    assert(Artifacts.collectLongs(spark, idx, "cat", Seq("i", "c"))
+    assert(Artifacts.snapshot(spark, idx).collectLongs("cat", Seq("i", "c"))
       .map(_.toSeq).toSet == Set(Seq(0L, 5L), Seq(1L, 7L)))
     // another column selection is another key: read afresh (no rows)
-    assert(Artifacts.collectLongs(spark, idx, "cat", Seq("c")).isEmpty)
+    assert(Artifacts.snapshot(spark, idx).collectLongs("cat", Seq("c")).isEmpty)
   }
 
   test("retry backoff (round 17): the jitter schedule is deterministic " +

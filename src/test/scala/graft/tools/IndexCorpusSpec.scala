@@ -191,11 +191,10 @@ class IndexCorpusSpec extends AnyFunSuite {
       Seq((5L, 3L), (888888L, 0L)).toDF("id", "cell"), cb)
     val orphSeg = Artifacts.writeSegment(spark, idx, "pq_codes",
       Seq((999999L, 0L, 1L, 2L)).toDF("id", "s", "code", "cell"), cb)
-    Artifacts.commit(spark, idx, Artifacts.merged(spark, idx, Map(
-      "assignments" ->
-        (Artifacts.segmentsOf(spark, idx, "assignments") :+ dupSeg),
-      "pq_codes" ->
-        (Artifacts.segmentsOf(spark, idx, "pq_codes") :+ orphSeg))))
+    val cur = Artifacts.snapshot(spark, idx)
+    Artifacts.commit(spark, idx, (cur ++ Map(
+      "assignments" -> (cur.segs("assignments") :+ dupSeg),
+      "pq_codes" -> (cur.segs("pq_codes") :+ orphSeg))).segments)
     spark.catalog.refreshByPath(idx)
     val broken = fsckMap()
     assert(broken("assignment_dupes")._1 >= 1L, s"$broken")
@@ -474,7 +473,7 @@ class IndexCorpusSpec extends AnyFunSuite {
     IndexCorpus.update(spark, Array(idx, s"$tmp/new.parquet"))
 
     def fragments(name: String): Int =
-      Artifacts.segmentsOf(spark, idx, name).size
+      Artifacts.snapshot(spark, idx).segs(name).size
     assert(fragments("assignments") > 1, "update should append a segment")
     // the SQ8 tier ingests on update too (frozen ranges): every
     // vector has a code row, and codes quantize the raw micros with
@@ -564,7 +563,7 @@ class IndexCorpusSpec extends AnyFunSuite {
     // writer's — ArtifactsSpec pins that side)
     IndexCorpus.compact(spark, Array(idx, "--vacuum-grace-ms", "0"))
     for (n <- Seq("assignments", "pq_codes", "sq8_codes")) {
-      val segs = Artifacts.segmentsOf(spark, idx, n)
+      val segs = Artifacts.snapshot(spark, idx).segs(n)
       assert(segs.size == 1, s"$n segments")
       val onDisk = new java.io.File(s"$idx/$n").listFiles()
         .map(_.getName).filter(d => d.startsWith("seg=") ||
@@ -608,7 +607,7 @@ class IndexCorpusSpec extends AnyFunSuite {
         .map(f => f.getPath + "@" + f.lastModified()).toSet
     }
     val cold = Seq("assignments", "pq_codes").map { n =>
-      val seg = Artifacts.segmentsOf(spark, idx, n).head // the build seg
+      val seg = Artifacts.snapshot(spark, idx).segs(n).head // the build seg
       (n, seg, fileSet(n, seg))
     }
 
@@ -617,7 +616,7 @@ class IndexCorpusSpec extends AnyFunSuite {
     IndexCorpus.compact(spark, Array(idx, "--threshold", "100"))
 
     for ((n, seg, files) <- cold) {
-      assert(Artifacts.segmentsOf(spark, idx, n).contains(seg),
+      assert(Artifacts.snapshot(spark, idx).segs(n).contains(seg),
         s"$n cold segment replaced")
       assert(fileSet(n, seg) == files, s"$n cold files modified")
     }
@@ -738,7 +737,7 @@ class IndexCorpusSpec extends AnyFunSuite {
       "--planes", "12", "--bands", "2"))
     // the name of every job one search and the collect of its answer
     // schedule: a job's name is its call site, e.g. "head at X.scala:9"
-    def jobNames(flags: String*): Seq[String] = {
+    def jobsDuring(run: => Any): Seq[String] = {
       val sc = spark.sparkContext
       org.apache.spark.ListenerBusDrain(sc)
       val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -748,12 +747,14 @@ class IndexCorpusSpec extends AnyFunSuite {
       }
       sc.addSparkListener(l)
       try {
-        IndexCorpus.search(spark, (Seq(idx, emb, "7") ++ flags).toArray)
-          .collect()
+        run
         org.apache.spark.ListenerBusDrain(sc)
       } finally sc.removeSparkListener(l)
       names.asScala.toSeq
     }
+    def jobNames(flags: String*): Seq[String] = jobsDuring(
+      IndexCorpus.search(spark, (Seq(idx, emb, "7") ++ flags).toArray)
+        .collect())
     def jobsOf(names: Seq[String], op: String): Int =
       names.count(_.startsWith(s"$op at IndexCorpus.scala"))
     val pq = jobNames("--k", "5", "--nprobe", "2", "--rerank", "50")
@@ -763,6 +764,61 @@ class IndexCorpusSpec extends AnyFunSuite {
       "--beam", "6", "--hops", "2", "--rerank", "50")
     assert(jobsOf(graph, "parquet") == 1 && jobsOf(graph, "head") == 1,
       s"graph --rerank search jobs: $graph")
+    // a batch search reads its source once too: the probe vectors, the
+    // rerank frames and every graph hop derive from one source frame
+    // (the probe frame is local, so it schedules no parquet job)
+    def batchJobNames(flags: String*): Seq[String] = {
+      import spark.implicits._
+      jobsDuring(IndexCorpus.searchBatchFrame(spark,
+        (Seq(idx, emb) ++ flags).toArray, Seq(7L, 9L).toDF("vec_id")).collect())
+    }
+    val pqBatch = batchJobNames("--k", "5", "--nprobe", "2", "--rerank", "50")
+    assert(jobsOf(pqBatch, "parquet") == 1,
+      s"pq --rerank searchBatch jobs: $pqBatch")
+    val graphBatch = batchJobNames("--k", "5", "--nprobe", "1",
+      "--tier", "graph", "--beam", "6", "--hops", "2")
+    assert(jobsOf(graphBatch, "parquet") == 1,
+      s"graph searchBatch jobs: $graphBatch")
+  }
+
+  test("one manifest open per reader command: pq --rerank, sq8 and " +
+    "--at searches and a pq searchBatch each resolve the manifest once " +
+    "on an index with tombstones") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val tmp = Files.createTempDirectory("graft_index_opens").toString
+    val local = s"$tmp/idx"
+    IndexCorpus.build(spark, Array(emb, local, "--ivf-k", "4", "--sq8", "true"))
+    val v0 = Artifacts.currentVersion(spark, local)
+    spark.read.parquet(emb).filter(pmod(col("vec_id"), lit(5)) === 0)
+      .select(col("vec_id")).write.mode("overwrite").parquet(s"$tmp/del.parquet")
+    Seq(7L, 9L).toDF("vec_id").write.mode("overwrite")
+      .parquet(s"$tmp/probes.parquet")
+    try {
+      IndexCorpus.delete(spark, Array(local, s"$tmp/del.parquet",
+        "--keep-manifests", "2"))
+      // the same files read through the counting mockhdfs scheme
+      MockHdfsFileSystem.register(spark.sparkContext.hadoopConfiguration)
+      val idx = s"mockhdfs://$local"
+      def pairs(dir: String, flags: String*): Seq[(Long, Long)] =
+        IndexCorpus.search(spark, (Seq(dir, emb, "7", "--k", "5",
+          "--nprobe", "2") ++ flags).toArray)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      for (flags <- Seq(Seq("--rerank", "50"), Seq("--tier", "sq8"),
+          Seq("--at", v0.toString))) {
+        var got = Seq.empty[(Long, Long)]
+        val n = MockHdfsFileSystem.manifestOpensUnder(local) {
+          got = pairs(idx, flags: _*)
+        }
+        assert(n == 1, s"${flags.mkString(" ")}: $n manifest opens")
+        assert(got == pairs(local, flags: _*))
+      }
+      val n = MockHdfsFileSystem.manifestOpensUnder(local) {
+        IndexCorpus.searchBatch(spark, Array(idx, emb,
+          s"$tmp/probes.parquet", "--k", "5", "--nprobe", "2")).collect()
+      }
+      assert(n == 1, s"pq searchBatch: $n manifest opens")
+    } finally spark.conf.set("spark.graft.keepManifests", "1")
   }
 
   test("graph tier: beam traversal re-derivable from the persisted " +

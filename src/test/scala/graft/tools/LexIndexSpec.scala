@@ -179,7 +179,7 @@ class LexIndexSpec extends AnyFunSuite {
       .map(q => q -> searchPairs(s"$idx/lex", q))
 
     def segsOf(name: String): Seq[String] =
-      Artifacts.segmentsOf(spark, s"$idx/lex", name)
+      Artifacts.snapshot(spark, s"$idx/lex").segs(name)
     assert(segsOf("postings").size > 1,
       "update should have appended a segment")
     // dead postings present pre-compact (docs 1 and 2 still on disk)
@@ -283,7 +283,7 @@ class LexIndexSpec extends AnyFunSuite {
           s"export-at-1 query '$q'")
       // the export is v0 of a FRESH history, one segment per artifact
       assert(Artifacts.manifestVersions(spark, exp) == Seq(0L))
-      assert(Artifacts.segmentsOf(spark, exp, "postings").size == 1)
+      assert(Artifacts.snapshot(spark, exp).segs("postings").size == 1)
       // current-version export carries the tombstones (faithful
       // snapshot, not a compact) and serves the post-delete answers
       val exp2 = s"$tmp/exp_cur"
@@ -319,7 +319,7 @@ class LexIndexSpec extends AnyFunSuite {
     assert(rows.find(_._1 == "stats_toktot").get._2 == 10L)
 
     // corruption 1: a manifest-listed segment dir vanishes
-    val seg = Artifacts.segmentsOf(spark, idx, "doclens").head
+    val seg = Artifacts.snapshot(spark, idx).segs("doclens").head
     val segDir = new java.io.File(s"$idx/doclens/$seg")
     val moved = new java.io.File(s"$tmp/stash")
     assert(segDir.renameTo(moved))
@@ -337,9 +337,9 @@ class LexIndexSpec extends AnyFunSuite {
     val forged = Artifacts.writeSegment(spark, idx, "postings",
       Seq(("zzz", 0L, 1L, 999L)).toDF("t", "id", "tf", "dl"),
       Some(Artifacts.Bucket("tb", pmod(hash(col("t")), lit(16L)), Seq("t"))))
-    Artifacts.commit(spark, idx, Artifacts.merged(spark, idx,
-      Map("postings" ->
-        (Artifacts.segmentsOf(spark, idx, "postings") :+ forged))))
+    val cur = Artifacts.snapshot(spark, idx)
+    Artifacts.commit(spark, idx,
+      (cur ++ Map("postings" -> (cur.segs("postings") :+ forged))).segments)
     spark.catalog.refreshByPath(idx)
     val forgedRows = LexIndex.fsck(spark, Array(idx)).collect()
       .map(r => (r.getString(0), r.getLong(1))).toMap
@@ -542,7 +542,7 @@ class LexIndexSpec extends AnyFunSuite {
     // the external reader resolves the CURRENT version once and pins
     // its postings segment list — the snapshot it must keep serving
     val pinnedVer = Artifacts.manifestVersions(spark, idx).max
-    val pinnedSegs = Artifacts.manifestAt(spark, idx, pinnedVer)("postings")
+    val pinnedSegs = Artifacts.snapshot(spark, idx, Some(pinnedVer)).segs("postings")
     def pinnedRead(): Seq[org.apache.spark.sql.Row] =
       Artifacts.readSegs(spark, idx, "postings", pinnedSegs)
         .orderBy(col("t"), col("id")).collect().toSeq
@@ -714,7 +714,7 @@ class LexIndexSpec extends AnyFunSuite {
     // no unreferenced seg dirs remain on disk
     LexIndex.compact(spark, Array(s"$idx/lex", "--vacuum-grace-ms", "0"))
     for (n <- Seq("postings", "doclens", "docids", "tombstones")) {
-      val segs = Artifacts.segmentsOf(spark, s"$idx/lex", n)
+      val segs = Artifacts.snapshot(spark, s"$idx/lex").segs(n)
       assert(segs.size == 1, s"$n segments")
       val onDisk = new java.io.File(s"$idx/lex/$n").listFiles()
         .map(_.getName).filter(d => d.startsWith("seg=") ||
@@ -755,7 +755,7 @@ class LexIndexSpec extends AnyFunSuite {
     }
     val coldSegs = Seq("postings", "doclens").map { n =>
       // the build segment holds docs {0,1} — no tombstone hits
-      val seg = Artifacts.segmentsOf(spark, s"$idx/lex", n).head
+      val seg = Artifacts.snapshot(spark, s"$idx/lex").segs(n).head
       (n, seg, fileSet(n, seg))
     }
 
@@ -765,7 +765,7 @@ class LexIndexSpec extends AnyFunSuite {
     LexIndex.compact(spark, Array(s"$idx/lex", "--threshold", "250"))
 
     for ((n, seg, files) <- coldSegs) {
-      assert(Artifacts.segmentsOf(spark, s"$idx/lex", n).contains(seg),
+      assert(Artifacts.snapshot(spark, s"$idx/lex").segs(n).contains(seg),
         s"$n cold segment replaced")
       assert(fileSet(n, seg) == files, s"$n cold files modified")
     }
@@ -857,7 +857,7 @@ class LexIndexSpec extends AnyFunSuite {
     try {
       LexIndex.build(spark, Array(in, idx, "--gram", "1"))
       val pinnedVer = Artifacts.manifestVersions(spark, idx).max
-      val pinned = Artifacts.manifestAt(spark, idx, pinnedVer)("postings")
+      val pinned = Artifacts.snapshot(spark, idx, Some(pinnedVer)).segs("postings")
       val before = Artifacts.readSegs(spark, idx, "postings", pinned)
         .orderBy(col("t"), col("id")).collect().toSeq
       Seq(1L).toDF("doc_id")
@@ -938,7 +938,7 @@ class LexIndexSpec extends AnyFunSuite {
     val seg = Artifacts.writeSegment(spark, s"$idx/lex", "postings", noDl,
       Some(Artifacts.Bucket("tb", pmod(hash(col("t")), lit(16L)), Seq("t"))))
     Artifacts.commit(spark, s"$idx/lex",
-      Artifacts.merged(spark, s"$idx/lex", Map("postings" -> Seq(seg))))
+      (Artifacts.snapshot(spark, s"$idx/lex") ++ Map("postings" -> Seq(seg))).segments)
     spark.catalog.refreshByPath(s"$idx/lex")
     def namesDl(serve: => Any): Unit = {
       val e = intercept[Exception](serve)
@@ -1003,5 +1003,92 @@ class LexIndexSpec extends AnyFunSuite {
           s"bucket diverged for '$t' at buckets=$buckets")
       }
     }
+  }
+
+  test("one manifest open per reader command: a lexical search, an " +
+    "--at search and a searchBatch each resolve the manifest once on " +
+    "an index with tombstones") {
+    import spark.implicits._
+    val in = corpusDir()
+    val base = Files.createTempDirectory("lexidx_opens").toString
+    val local = s"$base/lex"
+    LexIndex.build(spark, Array(in, local, "--gram", "1"))
+    val v0 = Artifacts.currentVersion(spark, local)
+    Seq(2L).toDF("doc_id").write.mode("overwrite").parquet(s"$base/del.parquet")
+    Seq((0L, "apple banana"), (1L, "cherry durian")).toDF("query_id", "text")
+      .write.mode("overwrite").parquet(s"$base/q.parquet")
+    try {
+      LexIndex.delete(spark, Array(local, s"$base/del.parquet",
+        "--keep-manifests", "2"))
+      // the same files read through the counting mockhdfs scheme
+      MockHdfsFileSystem.register(spark.sparkContext.hadoopConfiguration)
+      val idx = s"mockhdfs://$local"
+      def opens(body: => Any): Int =
+        MockHdfsFileSystem.manifestOpensUnder(local)(body)
+      def pairs(dir: String, flags: String*): Seq[(Long, Long)] =
+        LexIndex.search(spark, (Seq(dir, "apple cherry") ++ flags).toArray)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      var got = Seq.empty[(Long, Long)]
+      assert(opens { got = pairs(idx) } == 1)
+      assert(got == pairs(local))
+      assert(opens { got = pairs(idx, "--at", v0.toString) } == 1)
+      assert(got == pairs(local, "--at", v0.toString))
+      assert(opens {
+        LexIndex.searchBatch(spark, Array(idx, s"$base/q.parquet")).collect()
+      } == 1)
+    } finally spark.conf.set("spark.graft.keepManifests", "1")
+  }
+
+  test("pinned and current searches share one session: two threads " +
+    "meet at a barrier for 10 rounds, and every answer equals its " +
+    "serial answer (--at beside an unpinned search, then two " +
+    "different --at versions)") {
+    import java.util.concurrent.{Callable, CyclicBarrier, Executors}
+    import spark.implicits._
+    val in = corpusDir()
+    val base = Files.createTempDirectory("lexidx_conc").toString
+    val idx = s"$base/lex"
+    LexIndex.build(spark, Array(in, idx, "--gram", "1"))
+    val v0 = Artifacts.currentVersion(spark, idx)
+    Seq(0L).toDF("doc_id").write.mode("overwrite").parquet(s"$base/d0.parquet")
+    Seq(1L).toDF("doc_id").write.mode("overwrite").parquet(s"$base/d1.parquet")
+    try {
+      LexIndex.delete(spark, Array(idx, s"$base/d0.parquet",
+        "--keep-manifests", "3"))
+      val v1 = Artifacts.currentVersion(spark, idx)
+      LexIndex.delete(spark, Array(idx, s"$base/d1.parquet",
+        "--keep-manifests", "3"))
+      def answer(at: Option[Long]): Seq[(Long, Long)] =
+        LexIndex.search(spark, (Seq(idx, "apple banana cherry") ++
+          at.toSeq.flatMap(v => Seq("--at", v.toString))).toArray)
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      val serial = Seq(None, Some(v0), Some(v1)).map(at => at -> answer(at)).toMap
+      // each version answers differently, so a read of the wrong
+      // version cannot pass unnoticed
+      assert(serial.values.toSet.size == 3, serial)
+      def race(a: Option[Long], b: Option[Long]): Unit = {
+        val barrier = new CyclicBarrier(2)
+        val pool = Executors.newFixedThreadPool(2)
+        try {
+          val futs = Seq(a, b).map { at =>
+            at -> pool.submit(new Callable[Seq[Seq[(Long, Long)]]] {
+              def call(): Seq[Seq[(Long, Long)]] =
+                (1 to 10).map { _ =>
+                  barrier.await(60, java.util.concurrent.TimeUnit.SECONDS)
+                  answer(at)
+                }
+            })
+          }
+          futs.foreach { case (at, f) =>
+            f.get().zipWithIndex.foreach { case (got, round) =>
+              assert(got == serial(at),
+                s"round $round, --at $at: $got vs ${serial(at)}")
+            }
+          }
+        } finally pool.shutdownNow() // a failed peer strands none at the barrier
+      }
+      race(Some(v0), None)
+      race(Some(v0), Some(v1))
+    } finally spark.conf.set("spark.graft.keepManifests", "1")
   }
 }

@@ -21,6 +21,11 @@ import org.apache.hadoop.util.Progressable
   * [[MockS3FileSystem]]: raw-local status objects lazily re-derive
   * permissions from their path's URI and blow up on a non-`file:`
   * scheme.
+  *
+  * Every open of a manifest file (`_manifest/m-<version>.tsv`) is
+  * recorded in [[MockHdfsFileSystem.manifestOpens]], so a spec can pin
+  * how many times a command resolves its manifest: a deterministic
+  * count, unlike wall time.
   */
 class MockHdfsFileSystem extends FileSystem {
   private var myUri: URI = URI.create("mockhdfs:///")
@@ -50,8 +55,12 @@ class MockHdfsFileSystem extends FileSystem {
       FsPermission.getDefault, "", "",
       new Path("mockhdfs", null, st.getPath.toUri.getPath))
 
-  override def open(f: Path, bufferSize: Int) =
+  override def open(f: Path, bufferSize: Int) = {
+    if (f.getParent != null && f.getParent.getName == "_manifest" &&
+      f.getName.matches("m-[0-9]+\\.tsv"))
+      MockHdfsFileSystem.manifestOpens.add(f.toUri.getPath)
     local.open(toLocal(f), bufferSize)
+  }
 
   override def create(f: Path, permission: FsPermission,
       overwrite: Boolean, bufferSize: Int, replication: Short,
@@ -98,4 +107,28 @@ class MockHdfsFileSystem extends FileSystem {
 
   override def getFileStatus(f: Path): FileStatus =
     fromLocal(local.getFileStatus(toLocal(f)))
+}
+
+object MockHdfsFileSystem {
+
+  /** The local path of every manifest file opened through any
+    * instance (the filesystem cache is off in the specs that use this
+    * scheme, so instances are per call).
+    */
+  val manifestOpens = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  /** Serve `mockhdfs:` paths through this class, uncached. */
+  def register(conf: Configuration): Unit = {
+    conf.set("fs.mockhdfs.impl", classOf[MockHdfsFileSystem].getName)
+    conf.setBoolean("fs.mockhdfs.impl.disable.cache", true)
+  }
+
+  /** How many manifest files under local directory `dir` `body` opened. */
+  def manifestOpensUnder(dir: String)(body: => Any): Int = {
+    import scala.jdk.CollectionConverters._
+    def opened = manifestOpens.asScala.count(_.startsWith(s"$dir/"))
+    val before = opened
+    body
+    opened - before
+  }
 }

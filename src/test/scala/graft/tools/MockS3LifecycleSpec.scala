@@ -132,7 +132,7 @@ class MockS3LifecycleSpec extends AnyFunSuite {
       val idx2 = s"$root/idx2"
       IndexCorpus.build(spark, Array(s"$d/base.parquet", idx2,
         "--ivf-k", "4", "--pq-m", "2", "--pq-k", "4", "--iters", "1"))
-      val (listed, missing) = Artifacts.segmentCheck(spark, idx2)
+      val (listed, missing) = Artifacts.segmentCheck(spark, Artifacts.snapshot(spark, idx2))
       assert(listed > 0 && missing == 0L)
     }
   }
